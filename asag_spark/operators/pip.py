@@ -1071,8 +1071,9 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
       emit their cover cells dilated by 1 ring at res_k; OPEN points
       join on their own cell — the point side never explodes,
       dense-cell skew lands on a shuffle-hash JOIN exchange (AQE
-      skew-split territory), and the per-point top-1 window keys by
-      point id, uniform by construction.
+      skew-split territory), and the per-point top-1 window keys by a
+      synthetic row id (duplicate point ids stay separate rows),
+      uniform by construction.
     * closure: an edge unseen after round k has no cover cell within
       hex-distance 1 of the point's cell ⇒ lies wholly in cells at
       distance ≥ 2 ⇒ its true distance ≥ (1.5·2−2)·s_k·0.995/opn =
@@ -1114,24 +1115,40 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
     valid = (
         lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
     )
+    # the ladder keys every window and join on a synthetic row id, not
+    # the caller's id: duplicate ids stay separate rows, as in dense
     pts = (
         points.select(F.col(id_col).alias("_pid"), lon.alias("_plon"),
                       lat.alias("_plat"))
         .filter(valid)
+        .withColumn("_rid", F.monotonically_increasing_id())
         .withColumn("_opn", _opn_cap_expr(F.col("_plon"), F.col("_plat")))
         .persist(StorageLevel.MEMORY_ONLY)
     )
 
     order = (F.col("dist_raw").asc(), F.col("_gid").asc(), F.col("_eidx").asc())
-    w_pid = Window.partitionBy("_pid").orderBy(*order)
+    w_rid = Window.partitionBy("_rid").orderBy(*order)
 
     def top1(df):
         return (
-            df.withColumn("_rk", F.row_number().over(w_pid))
+            df.withColumn("_rk", F.row_number().over(w_rid))
             .filter(F.col("_rk") == 1)
             .drop("_rk")
         )
 
+    # the per-point best-edge row every round and the fallback emit
+    best_schema = T.StructType(
+        [
+            T.StructField("_rid", T.LongType()),
+            T.StructField("_pid", pts.schema["_pid"].dataType),
+            T.StructField("_gid", T.StringType()),
+            T.StructField("_eidx", T.IntegerType()),
+            T.StructField("dist_raw", T.DoubleType()),
+            T.StructField("snap_lon", T.DoubleType()),
+            T.StructField("snap_lat", T.DoubleType()),
+            T.StructField("dist_m", T.DoubleType()),
+        ]
+    )
     best = None
     open_pts = pts
     n_open = pts.count()
@@ -1158,12 +1175,12 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
             .join(covers.hint("shuffle_hash"), "cell")
         )
         scored = cand.select(
-            "_pid", "_gid", "_eidx",
+            "_rid", "_pid", "_gid", "_eidx",
             _snap_pair_kernel(
                 F.col("_plon"), F.col("_plat"),
                 F.col("_ax"), F.col("_ay"), F.col("_bx"), F.col("_by"),
             ).alias("_s"),
-        ).select("_pid", "_gid", "_eidx", "_s.*")
+        ).select("_rid", "_pid", "_gid", "_eidx", "_s.*")
         best_k = top1(scored)
         best_new = best_k if best is None else top1(
             best.unionByName(best_k)
@@ -1179,7 +1196,7 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
             F.lit(hexgrid.EDGE_M[res_k] * 0.995) / F.col("_opn")
         )
         open_new = (
-            open_pts.join(best.select("_pid", "dist_raw"), "_pid", "left")
+            open_pts.join(best.select("_rid", "dist_raw"), "_rid", "left")
             .filter(
                 F.col("dist_raw").isNull()
                 | ~(
@@ -1200,27 +1217,17 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
                 f"SNAP_DIST_FALLBACK_MAX={SNAP_DIST_FALLBACK_MAX}); the "
                 "point cloud does not match the path network"
             )
-        rows = open_pts.select("_pid", "_plon", "_plat").collect()
+        rows = open_pts.select("_rid", "_pid", "_plon", "_plat").collect()
+        fb_rids = np.array([r["_rid"] for r in rows], dtype=np.int64)
         fb_ids = np.array([r["_pid"] for r in rows], dtype=object)
         fb_lon = np.array([r["_plon"] for r in rows], dtype=np.float64)
         fb_lat = np.array([r["_plat"] for r in rows], dtype=np.float64)
-        bc = spark.sparkContext.broadcast((fb_ids, fb_lon, fb_lat))
-        fb_schema = T.StructType(
-            [
-                T.StructField("_pid", pts.schema["_pid"].dataType),
-                T.StructField("_gid", T.StringType()),
-                T.StructField("_eidx", T.IntegerType()),
-                T.StructField("dist_raw", T.DoubleType()),
-                T.StructField("snap_lon", T.DoubleType()),
-                T.StructField("snap_lat", T.DoubleType()),
-                T.StructField("dist_m", T.DoubleType()),
-            ]
-        )
+        bc = spark.sparkContext.broadcast((fb_rids, fb_ids, fb_lon, fb_lat))
 
         def fb(batches):
             from ..geo.wkt import haversine_m
 
-            ids_l, lon_l, lat_l = bc.value
+            rids_l, ids_l, lon_l, lat_l = bc.value
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -1270,6 +1277,7 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
                     rws = np.arange(len(P))
                     yield pd.DataFrame(
                         {
+                            "_rid": rids_l[lo_i:hi],
                             "_pid": ids_l[lo_i:hi],
                             "_gid": gid[bl],
                             "_eidx": eidx[bl].astype(np.int32),
@@ -1280,9 +1288,15 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
                         }
                     )
 
-        fb_best = edges.mapInPandas(fb, schema=fb_schema)
+        fb_best = edges.mapInPandas(fb, schema=best_schema)
         best = fb_best if best is None else best.unionByName(fb_best)
         best = top1(best)
+    if best is None:
+        # no valid point: no round or fallback ran
+        best = spark.createDataFrame([], best_schema)
+    # every round's best is checkpointed and the fallback reads only
+    # the edges and its broadcast, so the point cache is done
+    pts.unpersist()
 
     # invalid-coordinate rows mirror the dense kernel's contract: the
     # globally-first edge (dense argmin over all-NaN distances returns

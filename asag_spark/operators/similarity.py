@@ -1,20 +1,49 @@
 """Similarity search over the embeddings table (task brief): exact
-brute-force cosine top-k baseline + LSH-bucketed approximate variant.
+brute-force cosine top-k, the LSH-bucketed and IVF approximate
+variants, and the SQ8 / PQ / IVF-PQ compressed-read ANN family.
 
-Scale design: the exact path broadcasts the (small) query set against
-the full corpus — a map-only pass, no shuffle except the final
-per-query top-k. The approximate path restricts candidates to corpus
-vectors sharing at least one random-hyperplane LSH band with the
-query (the same seeded banded signature as
-dedup.embedding_near_dups) — multi-band probing over
-bands × 2^bits_per_band buckets, exact cosine refine on candidates
-only.
+Every corpus-scanning top-k runs on ONE kernel, ``_scan_topk``: one
+Arrow mapInPandas pass over the corpus against a broadcast query
+matrix — a map-only pass, no shuffle except the final per-query
+top-k. Per batch, a CODEC turns the rows into a (rows × queries)
+score matrix; one boolean mask drops self-matches, rows in cells the
+query does not probe, and undefined (NaN) scores; one partial sort
+keeps each query's k best rows; per partition one lexsort on (query,
+score, neighbor_id) merges the batches; then one per-query
+row_number window (``_rank_topk``, shared with the LSH,
+hard-negative and exact-L2 refine paths) ranks the tiny candidate
+set. The three codecs:
+
+* float cosine — 6-dp rounded, descending: cosine_topk, ivf_topk,
+  ivf_topk_indexed;
+* SQ8 integer quantized cosine ``qcos`` — descending, with the integer
+  dot ``score`` and, when the float corpus is scanned, the exact
+  ``cosine`` of the winners: sq8_topk, sq8_topk_encoded;
+* PQ integer ADC distance ``adist`` — ascending: pq_topk,
+  pq_topk_encoded, ivfpq_topk (and the pq_topk_refined / ivfpq refine
+  shortlists).
+
+Each codec either encodes the float ``embedding`` batch inline (the
+zero-setup path) or reads a stored ``codes`` column (the deployment
+path); both give bit-identical scores. The IVF ``probe`` restricts
+rows to each query's nprobe cells, assigned inline (rounded-cosine
+argmax) or read from the stored ``ivf_cell``.
+
+The approximate LSH path restricts candidates to corpus vectors
+sharing at least one random-hyperplane LSH band with the query (the
+same seeded banded signature as dedup.embedding_near_dups) —
+multi-band probing over bands × 2^bits_per_band buckets, exact cosine
+refine on candidates only.
 """
 
 from __future__ import annotations
 
+from typing import Any, Callable, NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .dedup import EMB_LSH_BANDS, EMB_LSH_BITS, band_keys, embedding_near_dups
 
@@ -43,6 +72,159 @@ def _cosine(av, bv, an, bn):
     return F.round(F.try_divide(dot, an * bn), 6)
 
 
+def _norms(A):
+    return np.sqrt((A * A).sum(axis=1))
+
+
+def _float_corpus(emb: DataFrame) -> DataFrame:
+    return emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def _collect_queries(queries: DataFrame):
+    """(q_ids, Q, qn) for a small query frame, or None when empty."""
+    q_rows = queries.select(
+        "vec_id", F.col("embedding").cast("array<double>")
+    ).collect()
+    if not q_rows:
+        return None
+    q_ids = np.array([r[0] for r in q_rows])
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    return q_ids, Q, _norms(Q)
+
+
+class _Codec(NamedTuple):
+    """How ``_scan_topk`` scores a corpus batch. ``score(payload, X)``
+    maps X (the batch's ``column`` stacked into a matrix) to (K, emit):
+    K the (rows × queries) ranking key, emit(r, c) the output value
+    columns (``fields``) of the kept (row, query) pairs. ``payload``
+    is broadcast and starts with the query ids; None when there is
+    nothing to score (empty query set or corpus)."""
+
+    column: str
+    fields: list
+    key: str
+    ascending: bool
+    score: Callable
+    payload: Any
+
+
+def _rank_topk(cand: DataFrame, k: int, key: str,
+               ascending: bool) -> DataFrame:
+    """Global top-k tail over a small candidate set: (key, neighbor_id
+    ASC) row_number per query — the one shuffle in every top-k
+    operator here. Output (query_id, neighbor_id, rank, <the other
+    candidate columns>); an existing ``rank`` is replaced."""
+    order = F.col(key).asc() if ascending else F.col(key).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    vals = [c for c in cand.columns
+            if c not in ("query_id", "neighbor_id", "rank")]
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id",
+            F.col("rank").cast("int").alias("rank"), *vals,
+        )
+    )
+
+
+def _scan_topk(corpus: DataFrame, codec: _Codec, k: int,
+               probe=None) -> DataFrame:
+    """The per-partition top-k kernel behind every corpus-scanning ANN
+    entry point (see the module docstring). ``corpus`` carries vec_id,
+    ``codec.column`` and, for a stored-cell probe, ivf_cell.
+
+    ``probe`` = (c_ids, Ct, cn, M) with M[cell column, query] the
+    probe mask (``_probe_sets``); rows that no query probes are
+    dropped BEFORE scoring, so the probed fraction bounds the compute,
+    not just the candidate set.
+
+    The batch-local top-k keeps everything at least as good as the
+    k-th value (boundary ties resolve in the partition merge); the
+    candidates (≤ partitions × n_q × k rows) are the only exchange."""
+    id_type = corpus.schema["vec_id"].dataType
+    schema = T.StructType(
+        [
+            T.StructField("query_id", id_type),
+            T.StructField("neighbor_id", id_type),
+            *codec.fields,
+        ]
+    )
+    spark = corpus.sparkSession
+    if codec.payload is None:
+        cand = spark.createDataFrame([], schema)
+        return _rank_topk(cand, k, codec.key, codec.ascending)
+    bc = spark.sparkContext.broadcast((codec.payload, probe))
+    column, score = codec.column, codec.score
+    sign = 1 if codec.ascending else -1
+
+    def part_topk(batches):
+        import pandas as pd
+
+        payload, probe_v = bc.value
+        q_ids = payload[0]
+        pool: list = []
+        for batch in batches:
+            if not len(batch):
+                continue
+            ids = batch["vec_id"].to_numpy()
+            X = np.stack(batch[column].to_numpy())
+            hit = None
+            if probe_v is not None:
+                hit = probe_v[3][_cell_cols(probe_v, batch, X)]
+                live = hit.any(axis=1)
+                if not live.any():
+                    continue
+                ids, X, hit = ids[live], X[live], hit[live]
+            K, emit = score(payload, X)
+            drop = (ids[:, None] == q_ids[None, :]) | np.isnan(K)
+            if hit is not None:
+                drop |= ~hit
+            R = sign * K  # smaller is better
+            R[drop] = np.inf if R.dtype.kind == "f" else np.iinfo(R.dtype).max
+            keep = ~drop
+            if len(ids) > k:
+                kth = np.partition(R, k - 1, axis=0)[k - 1, :]
+                keep &= R <= kth[None, :]
+            rows, cols = np.nonzero(keep)
+            if len(rows):
+                pool.append((ids[rows], cols, R[rows, cols], emit(rows, cols)))
+        if not pool:
+            return
+        nid, qcol, rv = (np.concatenate([p[i] for p in pool]) for i in range(3))
+        # sort by (query, score, neighbor_id); keep each query's first k
+        order = np.lexsort((nid, rv, qcol))
+        qs = qcol[order]
+        top = order[np.arange(len(qs)) - np.searchsorted(qs, qs) < k]
+        out = {"query_id": q_ids[qcol[top]], "neighbor_id": nid[top]}
+        for name in pool[0][3]:
+            out[name] = np.concatenate([p[3][name] for p in pool])[top]
+        yield pd.DataFrame(out)
+
+    cand = corpus.mapInPandas(part_topk, schema)
+    return _rank_topk(cand, k, codec.key, codec.ascending)
+
+
+def _cosine_scores(payload, B):
+    _, Qt, qn = payload
+    with np.errstate(divide="ignore", invalid="ignore"):
+        S = np.round((B @ Qt) / (_norms(B)[:, None] * qn[None, :]), 6)
+    return S, lambda r, c: {"cosine": S[r, c]}
+
+
+def _cosine_codec(qs) -> _Codec:
+    """Float cosine, rounded to 6 BEFORE ranking (ranking on rounded
+    values = the documented tie semantics), descending. A zero-norm
+    vector has no defined cosine (NaN) and is never a neighbor."""
+    return _Codec(
+        "embedding", [T.StructField("cosine", T.DoubleType())],
+        "cosine", False, _cosine_scores,
+        None if qs is None else (qs[0], qs[1].T.copy(), qs[2]),
+    )
+
+
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine for each query vector (brute force).
 
@@ -63,69 +245,8 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     only candidates shuffle. Cosines are rounded to 6 BEFORE ranking
     (ranking on rounded values = the documented tie semantics).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    id_type = emb.schema["vec_id"].dataType
-    q_rows = queries.select(
-        "vec_id", F.col("embedding").cast("array<double>")
-    ).collect()
-    if not q_rows:
-        spark = emb.sparkSession
-        out = T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("neighbor_id", id_type),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], out)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    bq = emb.sparkSession.sparkContext.broadcast((q_ids, Q.T.copy(), qn))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def part_topk(batches):
-        q_ids_v, Qt, qn_v = bq.value
-        # per-query candidate pools accumulated across the partition;
-        # batch-local top-k keeps everything >= the k-th value (ties at
-        # the boundary resolve in the pool merge)
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            B = np.stack(batch["embedding"].to_numpy())
-            bn = np.sqrt((B * B).sum(axis=1))
-            S = np.round((B @ Qt) / (bn[:, None] * qn_v[None, :]), 6)
-            S[ids[:, None] == q_ids_v[None, :]] = -np.inf  # self-matches
-            if len(ids) > k:
-                kth = np.partition(S, -k, axis=0)[-k, :]
-                keep = (S >= kth[None, :]) & (S > -np.inf)
-            else:
-                keep = S > -np.inf
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, S[rows, cols]))
-        if not pool:
-            return
-        merged = _local_topk(pool, q_ids_v, k)
-        if merged is not None:
-            yield merged
-
-    cand = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).mapInPandas(part_topk, out_schema)
-    return _rank_topk(cand, k)
+    codec = _cosine_codec(_collect_queries(queries))
+    return _scan_topk(_float_corpus(emb), codec, k)
 
 
 def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -157,14 +278,7 @@ def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5,
             _cosine(F.col("q_v"), F.col("n_v"), F.col("q_norm"), F.col("n_norm")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cosine")
-    )
+    return _rank_topk(scored, k, "cosine", ascending=False)
 
 
 # IVF coarse-quantizer defaults: cells ~ sqrt(|corpus|) is the classic
@@ -183,8 +297,6 @@ def ivf_centroids(emb: DataFrame, n_cells: int = IVF_CELLS):
     with centroid columns sorted by centroid id ascending (the
     tie-break order assignment relies on); (empty, None) for an empty
     corpus."""
-    import numpy as np
-
     rows = (
         emb.select("vec_id", F.col("embedding").cast("array<double>"))
         .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
@@ -206,8 +318,6 @@ def _probe_sets(Q, qn, C, cn, nprobe: int):
     the nprobe cells nearest by 6-dp-rounded cosine, ties to the
     smaller centroid id (stable argsort over c_id-ascending columns).
     Returns the bool matrix M[c, j] = query j probes cell c."""
-    import numpy as np
-
     SQ = np.round((Q @ C.T) / (qn[:, None] * cn[None, :]), 6)
     probe_cols = np.argsort(-SQ, axis=1, kind="stable")[:, :nprobe]
     M = np.zeros((C.shape[0], Q.shape[0]), dtype=bool)
@@ -216,149 +326,24 @@ def _probe_sets(Q, qn, C, cn, nprobe: int):
     return M
 
 
-def _local_topk(pool, q_ids_v, k):
-    """Per-partition merge: pool of (neighbor_ids, query_cols, cosines)
-    chunks → one pandas frame of each query's local top-k (ties on
-    (cosine DESC, neighbor_id ASC) via lexsort)."""
-    import numpy as np
-    import pandas as pd
-
-    nid = np.concatenate([p[0] for p in pool])
-    qcol = np.concatenate([p[1] for p in pool])
-    cos = np.concatenate([p[2] for p in pool])
-    out_q, out_n, out_c = [], [], []
-    for j in range(len(q_ids_v)):
-        m = qcol == j
-        if not m.any():
-            continue
-        nj, cj = nid[m], cos[m]
-        order = np.lexsort((nj, -cj))[:k]
-        out_q.append(np.repeat(q_ids_v[j], len(order)))
-        out_n.append(nj[order])
-        out_c.append(cj[order])
-    if not out_q:
-        return None
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "neighbor_id": np.concatenate(out_n),
-            "cosine": np.concatenate(out_c),
-        }
-    )
-
-
-def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
-    """Global top-k tail over the tiny candidate set: (cosine DESC,
-    neighbor_id ASC) row_number per query — the one shuffle in every
-    top-k operator here."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "cosine",
-        )
-    )
-
-
-def _empty_topk(spark, id_type) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    return spark.createDataFrame([], schema)
-
-
-def _collect_queries(queries: DataFrame):
-    """(q_ids, Q, qn) for a small query frame, or None when empty."""
-    import numpy as np
-
-    q_rows = queries.select(
-        "vec_id", F.col("embedding").cast("array<double>")
-    ).collect()
-    if not q_rows:
-        return None
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    return q_ids, Q, qn
-
-
-def _ivf_probe_kernel(bc, k: int, from_index: bool):
-    """The shared masked-probe kernel for both IVF paths. Rows whose
-    cell no query probes are dropped BEFORE the query matmul — the
-    probed fraction bounds the compute, not just the candidate set.
-    ``from_index`` reads the stored assignment (partition column);
-    otherwise the cell is assigned inline (rounded-cosine argmax; the
-    FIRST maximal column over c_id-ascending columns = smallest
+def _nearest_cols(B, Ct, cn):
+    """Assigned centroid COLUMN per row: rounded-cosine argmax = the
+    FIRST maximal column over c_id-ascending columns = the smallest
     centroid id, the same order the oracle's (cos DESC, c_id ASC)
-    row_number uses)."""
-    import numpy as np
-
-    def probe_topk(batches):
-        if from_index:
-            c_ids_v, q_ids_v, Qt, qn_v, M_v = bc.value
-        else:
-            Ct, cn_v, q_ids_v, Qt, qn_v, M_v = bc.value
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            B = np.stack(batch["embedding"].to_numpy())
-            bn = np.sqrt((B * B).sum(axis=1))
-            if from_index:
-                # stored assignment → centroid COLUMN position
-                cell_col = np.searchsorted(
-                    c_ids_v, batch["ivf_cell"].to_numpy()
-                )
-            else:
-                SC = np.round((B @ Ct) / (bn[:, None] * cn_v[None, :]), 6)
-                cell_col = np.argmax(SC, axis=1)
-            hit = M_v[cell_col, :]           # (rows × queries) probed mask
-            live = hit.any(axis=1)
-            if not live.any():
-                continue
-            ids, B, bn, hit = ids[live], B[live], bn[live], hit[live]
-            S = np.round((B @ Qt) / (bn[:, None] * qn_v[None, :]), 6)
-            S[~hit] = -np.inf                # not in a probed cell
-            S[ids[:, None] == q_ids_v[None, :]] = -np.inf  # self-match
-            if len(ids) > k:
-                kth = np.partition(S, -k, axis=0)[-k, :]
-                keep = (S >= kth[None, :]) & (S > -np.inf)
-            else:
-                keep = S > -np.inf
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, S[rows, cols]))
-        if not pool:
-            return
-        merged = _local_topk(pool, q_ids_v, k)
-        if merged is not None:
-            yield merged
-
-    return probe_topk
+    row_number uses."""
+    SC = np.round((B @ Ct) / (_norms(B)[:, None] * cn[None, :]), 6)
+    return np.argmax(SC, axis=1)
 
 
-def _cand_schema(id_type):
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+def _cell_cols(probe, batch, X):
+    """Centroid column of each batch row for a ``_scan_topk`` probe:
+    the stored ``ivf_cell``'s position among the c_id-ascending
+    centroids when the probe has no centroid matrix, else the inline
+    assignment of the float batch."""
+    c_ids, Ct, cn, _ = probe
+    if Ct is None:
+        return np.searchsorted(c_ids, batch["ivf_cell"].to_numpy())
+    return _nearest_cols(X, Ct, cn)
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -385,24 +370,13 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     and cell-partitioned storage turns the probe into partition
     pruning — the standard IVF-flat layout (``ivf_index_write`` /
     ``ivf_topk_indexed`` below materialize exactly that)."""
-    import numpy as np
-
-    id_type = emb.schema["vec_id"].dataType
     c_ids, C = centroids if centroids is not None else ivf_centroids(emb, n_cells)
-    qs = _collect_queries(queries)
-    if qs is None or C is None:
-        return _empty_topk(emb.sparkSession, id_type)
-    q_ids, Q, qn = qs
-    cn = np.sqrt((C * C).sum(axis=1))
-    M = _probe_sets(Q, qn, C, cn, nprobe)
-
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (C.T.copy(), cn, q_ids, Q.T.copy(), qn, M)
-    )
-    cand = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).mapInPandas(_ivf_probe_kernel(bc, k, from_index=False), _cand_schema(id_type))
-    return _rank_topk(cand, k)
+    qs = _collect_queries(queries) if C is not None else None
+    probe = None
+    if qs is not None:
+        cn = _norms(C)
+        probe = (c_ids, C.T.copy(), cn, _probe_sets(qs[1], qs[2], C, cn, nprobe))
+    return _scan_topk(_float_corpus(emb), _cosine_codec(qs), k, probe)
 
 
 def ivf_assign(emb: DataFrame, n_cells: int = IVF_CELLS,
@@ -412,16 +386,12 @@ def ivf_assign(emb: DataFrame, n_cells: int = IVF_CELLS,
     matrix; zero shuffles. float32 embeddings are widened to float64
     BEFORE the matmul (exact widening), so the assignment is
     bit-identical to ivf_topk's inline JVM-cast path."""
-    import numpy as np
-    from pyspark.sql import types as T
-
     if centroids is None:
         centroids = ivf_centroids(emb, n_cells)
     c_ids, C = centroids
     if C is None:
         raise ValueError("ivf_assign: empty corpus has no centroids")
-    cn = np.sqrt((C * C).sum(axis=1))
-    bc = emb.sparkSession.sparkContext.broadcast((c_ids, C.T.copy(), cn))
+    bc = emb.sparkSession.sparkContext.broadcast((c_ids, C.T.copy(), _norms(C)))
     out_schema = T.StructType(
         list(emb.schema.fields)
         + [T.StructField("ivf_cell", emb.schema["vec_id"].dataType)]
@@ -433,15 +403,38 @@ def ivf_assign(emb: DataFrame, n_cells: int = IVF_CELLS,
             if not len(batch):
                 continue
             B = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            bn = np.sqrt((B * B).sum(axis=1))
-            SC = np.round((B @ Ct) / (bn[:, None] * cn_v[None, :]), 6)
             out = batch.copy()
-            # argmax = FIRST maximal column, columns c_id-ascending →
-            # ties to the smallest centroid id (same as ivf_topk)
-            out["ivf_cell"] = c_ids_v[np.argmax(SC, axis=1)]
+            out["ivf_cell"] = c_ids_v[_nearest_cols(B, Ct, cn_v)]
             yield out
 
     return emb.mapInPandas(assign, out_schema)
+
+
+def _write_cells(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Cell-partitioned index write. Cluster the write first: without
+    it every input partition writes a file into every cell dir (parts
+    × cells tiny files — the probe then pays per-file open cost
+    instead of saving scan). One hash shuffle on the cell key → ~one
+    file per cell; at 100 TB the same pass targets
+    maxPartitionBytes-sized files per cell (repartition(n, col) with
+    n ∝ corpus/cell size)."""
+    (
+        assigned.repartition(F.col("ivf_cell"))
+        .write.mode(mode)
+        .partitionBy("ivf_cell")
+        .parquet(f"{path}/index")
+    )
+
+
+def _write_centroids(spark, c_ids, C, path: str) -> None:
+    cent_rows = [(int(cid), [float(x) for x in vec])
+                 for cid, vec in zip(c_ids, C)]
+    (
+        spark.createDataFrame(cent_rows, "c_id long, cv array<double>")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{path}/centroids")
+    )
 
 
 def ivf_index_write(emb: DataFrame, path: str,
@@ -452,31 +445,11 @@ def ivf_index_write(emb: DataFrame, path: str,
     the cell column) plus a tiny centroid sidecar. A probe against
     this layout prunes non-probed cells at the FILE level: each query
     touches nprobe/n_cells of the data physically, not just logically."""
-    spark = emb.sparkSession
     c_ids, C = ivf_centroids(emb, n_cells)
     if C is None:
         raise ValueError("ivf_index_write: empty corpus has no centroids")
-    (
-        ivf_assign(emb, centroids=(c_ids, C))
-        # cluster the write: without this every input partition writes
-        # a file into every cell dir (parts × cells tiny files — the
-        # probe then pays per-file open cost instead of saving scan).
-        # One hash shuffle on the cell key → ~one file per cell; at
-        # 100 TB the same pass targets maxPartitionBytes-sized files
-        # per cell (repartition(n, col) with n ∝ corpus/cell size).
-        .repartition(F.col("ivf_cell"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(f"{path}/index")
-    )
-    cent_rows = [(int(cid), [float(x) for x in vec])
-                 for cid, vec in zip(c_ids, C)]
-    (
-        spark.createDataFrame(cent_rows, "c_id long, cv array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/centroids")
-    )
+    _write_cells(ivf_assign(emb, centroids=(c_ids, C)), path)
+    _write_centroids(emb.sparkSession, c_ids, C, path)
 
 
 def ivf_index_append(new_emb: DataFrame, path: str) -> None:
@@ -492,14 +465,8 @@ def ivf_index_append(new_emb: DataFrame, path: str) -> None:
     re-train + ``ivf_index_write`` periodically when quantizer drift
     (new data far from every centroid) degrades the probed-cell recall.
     """
-    c_ids, C = _load_centroids(new_emb.sparkSession, path)
-    (
-        ivf_assign(new_emb, centroids=(c_ids, C))
-        .repartition(F.col("ivf_cell"))
-        .write.mode("append")
-        .partitionBy("ivf_cell")
-        .parquet(f"{path}/index")
-    )
+    centroids = _load_centroids(new_emb.sparkSession, path)
+    _write_cells(ivf_assign(new_emb, centroids=centroids), path, mode="append")
 
 
 def _load_centroids(spark, path: str):
@@ -508,8 +475,6 @@ def _load_centroids(spark, path: str):
     fetch it costs ~0.3 s of scheduler overhead per probe call; the
     Spark reader remains the fallback for filesystems pyarrow cannot
     reach."""
-    import numpy as np
-
     try:
         import pyarrow.dataset as ds
 
@@ -525,20 +490,29 @@ def _load_centroids(spark, path: str):
 
 
 def _index_probe_state(spark, path: str, queries: DataFrame, nprobe: int):
-    """Shared by ivf_probe_cells / ivf_topk_indexed: centroid sidecar +
-    collected queries → (c_ids, q_ids, Q, qn, M, probed cell ids), or
-    None when the query frame is empty."""
-    import numpy as np
-
+    """Shared by ivf_probe_cells / ivf_topk_indexed / ivfpq_topk:
+    centroid sidecar + collected queries → (queries as
+    _collect_queries returns them, the stored-cell ``_scan_topk``
+    probe, probed cell ids); (None, None, []) when the query frame is
+    empty."""
     c_ids, C = _load_centroids(spark, path)
     qs = _collect_queries(queries)
     if qs is None:
-        return None
-    q_ids, Q, qn = qs
-    cn = np.sqrt((C * C).sum(axis=1))
-    M = _probe_sets(Q, qn, C, cn, nprobe)
+        return None, None, []
+    M = _probe_sets(qs[1], qs[2], C, _norms(C), nprobe)
     probed = sorted(int(c_ids[c]) for c in np.nonzero(M.any(axis=1))[0])
-    return c_ids, q_ids, Q, qn, M, probed
+    return qs, (c_ids.astype(np.int64), None, None, M), probed
+
+
+def _probed_index(spark, path: str, probed: list, column) -> DataFrame:
+    """The probed cells of a cell-partitioned index: ``ivf_cell IN
+    (...)`` compiles to PartitionFilters — pruning before any byte is
+    read."""
+    return (
+        spark.read.parquet(f"{path}/index")
+        .filter(F.col("ivf_cell").isin(probed))
+        .select("vec_id", column, F.col("ivf_cell").cast("long").alias("ivf_cell"))
+    )
 
 
 def ivf_probe_cells(spark, path: str, queries: DataFrame,
@@ -548,8 +522,7 @@ def ivf_probe_cells(spark, path: str, queries: DataFrame,
     Iceberg scan-file API) would prune to. Shared with
     ``ivf_topk_indexed`` so tests can assert the physically-scanned
     file set matches exactly this list."""
-    state = _index_probe_state(spark, path, queries, nprobe)
-    return state[5] if state is not None else []
+    return _index_probe_state(spark, path, queries, nprobe)[2]
 
 
 def ivf_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
@@ -562,30 +535,11 @@ def ivf_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
     row-identical to ``ivf_topk`` on the same corpus: same centroids,
     same rounded-cosine tie-breaks, and the stored assignment equals
     the inline one by construction."""
-    import numpy as np
-
-    id_type = queries.schema["vec_id"].dataType
-    state = _index_probe_state(spark, path, queries, nprobe)
-    if state is None:
-        return _empty_topk(spark, id_type)
-    c_ids, q_ids, Q, qn, M, probed = state
-
-    idx = (
-        spark.read.parquet(f"{path}/index")
-        .filter(F.col("ivf_cell").isin(probed))
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-            F.col("ivf_cell").cast("long").alias("ivf_cell"),
-        )
+    qs, probe, probed = _index_probe_state(spark, path, queries, nprobe)
+    idx = _probed_index(
+        spark, path, probed, F.col("embedding").cast("array<double>").alias("embedding")
     )
-    bc = spark.sparkContext.broadcast(
-        (c_ids.astype(np.int64), q_ids, Q.T.copy(), qn, M)
-    )
-    cand = idx.mapInPandas(
-        _ivf_probe_kernel(bc, k, from_index=True), _cand_schema(id_type)
-    )
-    return _rank_topk(cand, k)
+    return _scan_topk(idx, _cosine_codec(qs), k, probe)
 
 
 def ivf_train_step(emb: DataFrame, n_cells: int = IVF_CELLS,
@@ -638,6 +592,51 @@ def sq8_scale(emb: DataFrame) -> float:
     return float(row["ma"] or 0.0)
 
 
+def _sq8_codes(X, ma: float):
+    """SQ8 codes as int64: clamp(floor(x·127/ma + 0.5), −127, 127) —
+    the same rule sq8_encode stores."""
+    if ma <= 0.0:
+        return np.zeros_like(X, dtype=np.int64)
+    return np.clip(np.floor(X * 127.0 / ma + 0.5), -127.0, 127.0).astype(np.int64)
+
+
+def _sq8_scores(payload, X):
+    _, ma, QcT, qcn, Q, qn = payload
+    Bc = X.astype(np.int64) if Q is None else _sq8_codes(X, ma)
+    S = Bc @ QcT
+    denom = _norms(Bc)[:, None] * qcn[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        QS = np.round(np.where(denom > 0.0, S / denom, 0.0), 6)
+
+    def emit(r, c):
+        cols = {"score": S[r, c], "qcos": QS[r, c]}
+        if Q is not None:
+            cols["cosine"] = np.round(
+                (X[r] * Q[c]).sum(axis=1) / (_norms(X)[r] * qn[c]), 6
+            )
+        return cols
+
+    return QS, emit
+
+
+def _sq8_codec(qs, ma: float, column: str) -> _Codec:
+    """SQ8 quantized cosine ``qcos`` (descending) with the integer dot
+    ``score``. Scanning the float ``embedding`` quantizes each batch
+    inline and also reports the exact ``cosine``; scanning stored
+    ``codes`` reads no float."""
+    inline = column == "embedding"
+    fields = [T.StructField("score", T.LongType()),
+              T.StructField("qcos", T.DoubleType())]
+    if inline:
+        fields.append(T.StructField("cosine", T.DoubleType()))
+    payload = None
+    if qs is not None:
+        q_ids, Q, qn = qs
+        Qc = _sq8_codes(Q, ma)
+        payload = (q_ids, ma, Qc.T.copy(), _norms(Qc), Q if inline else None, qn)
+    return _Codec(column, fields, "qcos", False, _sq8_scores, payload)
+
+
 def sq8_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
              scale: float | None = None) -> DataFrame:
     """Symmetric-uniform int8 (SQ8) ANN top-k: every component is
@@ -661,10 +660,11 @@ def sq8_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     round(dot/(√nq·√nc), 6) is the same IEEE expression in both
     engines; ties break on neighbor_id. Self-matches excluded.
 
-    Scale shape (mirrors cosine_topk): scalar sidecar; per-partition
-    Arrow kernel quantizes each batch and matmuls int codes against
-    the quantized query matrix; per-partition top-k keeps ≤ n_q·k
-    rows; ONE final shuffle ranks the tiny candidate set.
+    Scale shape (the shared ``_scan_topk`` kernel, SQ8 codec): scalar
+    sidecar; the per-partition Arrow kernel quantizes each batch and
+    matmuls int codes against the quantized query matrix; per-partition
+    top-k keeps ≤ n_q·k rows; ONE final shuffle ranks the tiny
+    candidate set.
 
     Output: (query_id, neighbor_id, rank, score, qcos, cosine) —
     score the integer quantized dot, qcos the quantized cosine the
@@ -673,115 +673,9 @@ def sq8_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     (the same convention as ivf_topk's ``centroids`` arg: the corpus
     pays the stats pass once, every query batch reuses it).
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    id_type = emb.schema["vec_id"].dataType
     ma = sq8_scale(emb) if scale is None else float(scale)
-
-    def quantize(X: "np.ndarray") -> "np.ndarray":
-        if ma <= 0.0:
-            return np.zeros_like(X, dtype=np.int64)
-        t = X * 127.0 / ma
-        return np.clip(np.floor(t + 0.5), -127.0, 127.0).astype(np.int64)
-
-    q_rows = queries.select(
-        "vec_id", F.col("embedding").cast("array<double>")
-    ).collect()
-    if not q_rows:
-        return _empty_topk(emb.sparkSession, id_type).select(
-            "query_id", "neighbor_id", "rank",
-            F.lit(0).cast("long").alias("score"),
-            F.lit(0.0).alias("qcos"), "cosine",
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    Qc = quantize(Q)
-    qn = np.sqrt((Q * Q).sum(axis=1))
-    qcn = np.sqrt((Qc * Qc).sum(axis=1).astype(np.float64))
-    bq = emb.sparkSession.sparkContext.broadcast(
-        (q_ids, Qc.T.copy(), Q.T.copy(), qn, qcn)
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("score", T.LongType()),
-            T.StructField("qcos", T.DoubleType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def part_topk(batches):
-        import pandas as pd
-
-        q_ids_v, QcT, QT, qn_v, qcn_v = bq.value
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            B = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            Bc = quantize(B)
-            S = Bc @ QcT
-            bcn = np.sqrt((Bc * Bc).sum(axis=1).astype(np.float64))
-            denom = bcn[:, None] * qcn_v[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                QS = np.round(np.where(denom > 0.0, S / denom, 0.0), 6)
-            QS[ids[:, None] == q_ids_v[None, :]] = -np.inf  # self-matches
-            if len(ids) > k:
-                kth = np.partition(QS, -k, axis=0)[-k, :]
-                keep = (QS >= kth[None, :]) & (QS > -np.inf)
-            else:
-                keep = QS > -np.inf
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                bn = np.sqrt((B * B).sum(axis=1))
-                cos = np.round(
-                    (B[rows] * QT.T[cols]).sum(axis=1)
-                    / (bn[rows] * qn_v[cols]), 6
-                )
-                pool.append(
-                    (ids[rows], cols, S[rows, cols], QS[rows, cols], cos)
-                )
-        if not pool:
-            return
-        nid = np.concatenate([p[0] for p in pool])
-        qcol = np.concatenate([p[1] for p in pool])
-        sc = np.concatenate([p[2] for p in pool])
-        qs = np.concatenate([p[3] for p in pool])
-        cs = np.concatenate([p[4] for p in pool])
-        out = {"query_id": [], "neighbor_id": [], "score": [],
-               "qcos": [], "cosine": []}
-        for j in range(len(q_ids_v)):
-            m = qcol == j
-            if not m.any():
-                continue
-            nj, sj, qj, cj = nid[m], sc[m], qs[m], cs[m]
-            order = np.lexsort((nj, -qj))[:k]
-            out["query_id"].extend([q_ids_v[j]] * len(order))
-            out["neighbor_id"].extend(nj[order])
-            out["score"].extend(sj[order])
-            out["qcos"].extend(qj[order])
-            out["cosine"].extend(cj[order])
-        yield pd.DataFrame(out)
-
-    cand = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "score", "qcos", "cosine",
-        )
-    )
+    codec = _sq8_codec(_collect_queries(queries), ma, "embedding")
+    return _scan_topk(_float_corpus(emb), codec, k)
 
 
 def sq8_encode(emb: DataFrame, path: str, scale: float | None = None) -> float:
@@ -826,99 +720,12 @@ def sq8_topk_encoded(spark, path: str, queries: DataFrame,
     Engine-exactness matches sq8_topk: the stored codes were produced
     by the same floor(t+0.5) rule, and scoring is integer dot +
     integer code norms."""
-    import numpy as np
-    from pyspark.sql import types as T
-
     ma = float(
         spark.read.parquet(f"{path}/scale").collect()[0]["ma"]
     )
     corpus = spark.read.parquet(f"{path}/codes")
-    id_type = corpus.schema["vec_id"].dataType
-
-    q_rows = queries.select(
-        "vec_id", F.col("embedding").cast("array<double>")
-    ).collect()
-    if not q_rows:
-        return _empty_topk(spark, id_type).select(
-            "query_id", "neighbor_id", "rank",
-            F.lit(0).cast("long").alias("score"),
-            F.lit(0.0).alias("qcos"),
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    if ma > 0.0:
-        Qc = np.clip(
-            np.floor(Q * 127.0 / ma + 0.5), -127.0, 127.0
-        ).astype(np.int64)
-    else:
-        Qc = np.zeros_like(Q, dtype=np.int64)
-    qcn = np.sqrt((Qc * Qc).sum(axis=1).astype(np.float64))
-    bq = spark.sparkContext.broadcast((q_ids, Qc.T.copy(), qcn))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("score", T.LongType()),
-            T.StructField("qcos", T.DoubleType()),
-        ]
-    )
-
-    def part_topk(batches):
-        import pandas as pd
-
-        q_ids_v, QcT, qcn_v = bq.value
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            Bc = np.stack(batch["codes"].to_numpy()).astype(np.int64)
-            S = Bc @ QcT
-            bcn = np.sqrt((Bc * Bc).sum(axis=1).astype(np.float64))
-            denom = bcn[:, None] * qcn_v[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                QS = np.round(np.where(denom > 0.0, S / denom, 0.0), 6)
-            QS[ids[:, None] == q_ids_v[None, :]] = -np.inf
-            if len(ids) > k:
-                kth = np.partition(QS, -k, axis=0)[-k, :]
-                keep = (QS >= kth[None, :]) & (QS > -np.inf)
-            else:
-                keep = QS > -np.inf
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, S[rows, cols], QS[rows, cols]))
-        if not pool:
-            return
-        nid = np.concatenate([p[0] for p in pool])
-        qcol = np.concatenate([p[1] for p in pool])
-        sc = np.concatenate([p[2] for p in pool])
-        qs = np.concatenate([p[3] for p in pool])
-        out = {"query_id": [], "neighbor_id": [], "score": [], "qcos": []}
-        for j in range(len(q_ids_v)):
-            m = qcol == j
-            if not m.any():
-                continue
-            nj, sj, qj = nid[m], sc[m], qs[m]
-            order = np.lexsort((nj, -qj))[:k]
-            out["query_id"].extend([q_ids_v[j]] * len(order))
-            out["neighbor_id"].extend(nj[order])
-            out["score"].extend(sj[order])
-            out["qcos"].extend(qj[order])
-        yield pd.DataFrame(out)
-
-    cand = corpus.mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "score", "qcos",
-        )
-    )
+    codec = _sq8_codec(_collect_queries(queries), ma, "codes")
+    return _scan_topk(corpus, codec, k)
 
 
 # --------------------------------------------------------------------------
@@ -967,12 +774,18 @@ def pq_codebook(emb: DataFrame, m: int = PQ_M, ksub: int = PQ_K):
     return c_ids, CB
 
 
+def _require_codebook(emb: DataFrame, codebook):
+    if codebook is None:
+        _, codebook = pq_codebook(emb)
+    if codebook is None:
+        raise ValueError("empty corpus: no codebook")
+    return codebook
+
+
 def _pq_sqdist_q(X, CB, s):
     """Integer-quantized squared distances of X's subspace s rows to
     sub-codebook s: (n, ksub) int64, each per-dimension term floored
     independently (see module comment)."""
-    import numpy as np
-
     dsub = CB.shape[2]
     sub = X[:, s * dsub:(s + 1) * dsub]
     diff = sub[:, None, :] - CB[s][None, :, :]
@@ -983,8 +796,6 @@ def _pq_codes(X, CB):
     """(n, m) uint8 codes: per subspace argmin of the quantized
     sub-distance; np.argmin takes the FIRST minimum = smallest
     centroid index, matching the oracle's (dq ASC, cidx ASC) rank."""
-    import numpy as np
-
     m = CB.shape[0]
     return np.stack(
         [np.argmin(_pq_sqdist_q(X, CB, s), axis=1) for s in range(m)],
@@ -992,147 +803,56 @@ def _pq_codes(X, CB):
     ).astype(np.uint8)
 
 
-def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-            codebook=None) -> DataFrame:
-    """ADC top-k against inline-encoded embeddings: corpus rows are
-    PQ-encoded on the fly (zero-setup path; pq_encode/pq_topk_encoded
-    below is the deployment shape where codes are stored), queries
-    build the integer LUT once, and ranking is (adist ASC,
-    neighbor_id ASC) over exact integer scores. Self-matches excluded.
+def _pq_scores(payload, X):
+    _, LUT, CB = payload
+    codes = X.astype(np.int64) if CB is None else _pq_codes(X, CB)
+    # adist[n, q] = sum_s LUT[q, s, codes[n, s]]
+    adist = np.zeros((len(X), LUT.shape[0]), dtype=np.int64)
+    for s in range(LUT.shape[1]):
+        adist += LUT[:, s, :].T[codes[:, s]]
+    return adist, lambda r, c: {"adist": adist[r, c]}
 
-    Scale shape (mirrors sq8_topk): the LUT broadcast is
-    n_q x m x ksub int64 (tiny); the per-partition Arrow kernel
-    encodes its batch and scores via m gathers; per-partition top-k
-    keeps <= n_q*k rows; ONE final shuffle ranks the candidates.
 
-    Output: (query_id, neighbor_id, rank, adist)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    id_type = emb.schema["vec_id"].dataType
-    if codebook is None:
-        _, codebook = pq_codebook(emb)
-    CB = codebook
-    q = _collect_queries(queries)
-    empty = lambda: _empty_topk(emb.sparkSession, id_type).select(  # noqa: E731
-        "query_id", "neighbor_id", "rank",
-        F.lit(0).cast("long").alias("adist"),
-    )
-    if q is None or CB is None:
-        return empty()
-    q_ids, Q, _ = q
-    m = CB.shape[0]
-    LUT = np.stack([_pq_sqdist_q(Q, CB, s) for s in range(m)], axis=1)
-    bq = emb.sparkSession.sparkContext.broadcast((q_ids, LUT, CB))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("adist", T.LongType()),
-        ]
-    )
-
-    def part_topk(batches):
-        import pandas as pd
-
-        q_ids_v, LUT_v, CB_v = bq.value
-        m_v = CB_v.shape[0]
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            codes = _pq_codes(X, CB_v)
-            # adist[n, q] = sum_s LUT[q, s, codes[n, s]]
-            adist = np.zeros((len(ids), len(q_ids_v)), dtype=np.int64)
-            for s in range(m_v):
-                adist += LUT_v[:, s, :].T[codes[:, s]]
-            mask = ids[:, None] == q_ids_v[None, :]
-            if len(ids) > k:
-                kth = np.partition(
-                    np.where(mask, np.iinfo(np.int64).max, adist), k - 1, axis=0
-                )[k - 1, :]
-                keep = (adist <= kth[None, :]) & ~mask
-            else:
-                keep = ~mask
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, adist[rows, cols]))
-        if not pool:
-            return
-        nid = np.concatenate([p[0] for p in pool])
-        qcol = np.concatenate([p[1] for p in pool])
-        sc = np.concatenate([p[2] for p in pool])
-        out = {"query_id": [], "neighbor_id": [], "adist": []}
-        for j in range(len(q_ids_v)):
-            sel = qcol == j
-            if not sel.any():
-                continue
-            nj, sj = nid[sel], sc[sel]
-            order = np.lexsort((nj, sj))[:k]
-            out["query_id"].extend([q_ids_v[j]] * len(order))
-            out["neighbor_id"].extend(nj[order])
-            out["adist"].extend(sj[order])
-        yield pd.DataFrame(out)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "adist",
+def _pq_codec(qs, CB, column: str) -> _Codec:
+    """PQ ADC distance ``adist`` (ascending) through each query's
+    integer (m × ksub) LUT. Scanning the float ``embedding`` encodes
+    each batch inline with CB; scanning stored ``codes`` reads them."""
+    payload = None
+    if qs is not None and CB is not None:
+        LUT = np.stack(
+            [_pq_sqdist_q(qs[1], CB, s) for s in range(CB.shape[0])], axis=1
         )
-    )
+        payload = (qs[0], LUT, CB if column == "embedding" else None)
+    return _Codec(column, [T.StructField("adist", T.LongType())],
+                  "adist", True, _pq_scores, payload)
 
 
-def pq_encode(emb: DataFrame, path: str, codebook=None) -> None:
-    """Materialize the PQ compressed layout: codes (PQ_M bytes per
-    vector — at d=64 that is 64× smaller than float64 on the scan
-    path) plus the sub-codebooks as a tiny sidecar table
-    (s, cidx, cv). Encode ONCE at corpus-build time; every query is
-    served from the code scan by pq_topk_encoded."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    if codebook is None:
-        _, codebook = pq_codebook(emb)
-    CB = codebook
-    if CB is None:
-        raise ValueError("empty corpus: no codebook")
+def _pq_encoded(frame: DataFrame, CB) -> DataFrame:
+    """``frame`` with its embedding column replaced by ``codes`` (one
+    tinyint per subspace, the _pq_codes argmin); other columns pass
+    through. One map-only Arrow pass."""
     if CB.shape[1] > 128:
         raise ValueError("ksub > 128 does not fit the tinyint code layout")
-    bcb = spark.sparkContext.broadcast(CB)
-    id_type = emb.schema["vec_id"].dataType
+    bcb = frame.sparkSession.sparkContext.broadcast(CB)
     out_schema = T.StructType(
-        [
-            T.StructField("vec_id", id_type),
-            T.StructField("codes", T.ArrayType(T.ByteType())),
-        ]
+        [f for f in frame.schema.fields if f.name != "embedding"]
+        + [T.StructField("codes", T.ArrayType(T.ByteType()))]
     )
 
     def encode(batches):
-        import numpy as np
-
         CB_v = bcb.value
         for batch in batches:
             if not len(batch):
                 continue
             X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            codes = _pq_codes(X, CB_v).astype(np.int8)
-            yield pd.DataFrame(
-                {"vec_id": batch["vec_id"], "codes": list(codes)}
-            )
+            out = batch.drop(columns="embedding")
+            out["codes"] = list(_pq_codes(X, CB_v).astype(np.int8))
+            yield out
 
-    emb.select("vec_id", "embedding").mapInPandas(encode, out_schema).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
+    return frame.mapInPandas(encode, out_schema)
+
+
+def _write_codebook(spark, CB, path: str) -> None:
     rows = [
         (int(s), int(j), [float(x) for x in CB[s, j]])
         for s in range(CB.shape[0])
@@ -1143,95 +863,94 @@ def pq_encode(emb: DataFrame, path: str, codebook=None) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
 
 
+def _load_codebook(spark, path: str):
+    """Codebook sidecar → CB (m, ksub, dsub)."""
+    cb_rows = spark.read.parquet(f"{path}/codebook").collect()
+    cb_rows.sort(key=lambda r: (r["s"], r["cidx"]))
+    m = 1 + max(r["s"] for r in cb_rows)
+    ksub = 1 + max(r["cidx"] for r in cb_rows)
+    dsub = len(cb_rows[0]["cv"])
+    return np.array([r["cv"] for r in cb_rows], dtype=np.float64).reshape(
+        m, ksub, dsub
+    )
+
+
+def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
+            codebook=None) -> DataFrame:
+    """ADC top-k against inline-encoded embeddings: corpus rows are
+    PQ-encoded on the fly (zero-setup path; pq_encode/pq_topk_encoded
+    below is the deployment shape where codes are stored), queries
+    build the integer LUT once, and ranking is (adist ASC,
+    neighbor_id ASC) over exact integer scores. Self-matches excluded.
+
+    Scale shape (the shared ``_scan_topk`` kernel, PQ codec): the LUT
+    broadcast is n_q x m x ksub int64 (tiny); the per-partition Arrow
+    kernel encodes its batch and scores via m gathers; per-partition
+    top-k keeps <= n_q*k rows; ONE final shuffle ranks the candidates.
+
+    Output: (query_id, neighbor_id, rank, adist)."""
+    if codebook is None:
+        _, codebook = pq_codebook(emb)
+    codec = _pq_codec(_collect_queries(queries), codebook, "embedding")
+    return _scan_topk(_float_corpus(emb), codec, k)
+
+
+def pq_encode(emb: DataFrame, path: str, codebook=None) -> None:
+    """Materialize the PQ compressed layout: codes (PQ_M bytes per
+    vector — at d=64 that is 64× smaller than float64 on the scan
+    path) plus the sub-codebooks as a tiny sidecar table
+    (s, cidx, cv). Encode ONCE at corpus-build time; every query is
+    served from the code scan by pq_topk_encoded."""
+    CB = _require_codebook(emb, codebook)
+    _pq_encoded(emb.select("vec_id", "embedding"), CB).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/codes")
+    _write_codebook(emb.sparkSession, CB, path)
+
+
 def pq_topk_encoded(spark, path: str, queries: DataFrame,
                     k: int = 5) -> DataFrame:
     """ADC top-k against a stored pq_encode layout: the corpus scan
     reads ONLY the m-byte code column, the codebook sidecar rebuilds
     the LUT driver-side, and scoring/ranking matches pq_topk exactly
     (stored codes came from the same argmin rule)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cb_rows = spark.read.parquet(f"{path}/codebook").collect()
-    cb_rows.sort(key=lambda r: (r["s"], r["cidx"]))
-    m = 1 + max(r["s"] for r in cb_rows)
-    ksub = 1 + max(r["cidx"] for r in cb_rows)
-    dsub = len(cb_rows[0]["cv"])
-    CB = np.array([r["cv"] for r in cb_rows], dtype=np.float64).reshape(
-        m, ksub, dsub
-    )
+    CB = _load_codebook(spark, path)
     corpus = spark.read.parquet(f"{path}/codes")
-    id_type = corpus.schema["vec_id"].dataType
-    q = _collect_queries(queries)
-    if q is None:
-        return _empty_topk(spark, id_type).select(
-            "query_id", "neighbor_id", "rank",
-            F.lit(0).cast("long").alias("adist"),
-        )
-    q_ids, Q, _ = q
-    LUT = np.stack([_pq_sqdist_q(Q, CB, s) for s in range(m)], axis=1)
-    bq = spark.sparkContext.broadcast((q_ids, LUT, m))
+    codec = _pq_codec(_collect_queries(queries), CB, "codes")
+    return _scan_topk(corpus, codec, k)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("adist", T.LongType()),
-        ]
+
+def _refine_l2(shortlist: DataFrame, queries: DataFrame, corpus: DataFrame,
+               k: int) -> DataFrame:
+    """Exact float64 squared-L2 rerank of a (query_id, neighbor_id)
+    shortlist to top-k by (l2 ASC, neighbor_id ASC), l2 rounded to 6
+    dp. The shortlist is n_q·r rows → broadcast it against the float
+    table so the rerank reads each shortlisted vector once."""
+    qv = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     )
-
-    def part_topk(batches):
-        q_ids_v, LUT_v, m_v = bq.value
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            codes = np.stack(batch["codes"].to_numpy()).astype(np.int64)
-            adist = np.zeros((len(ids), len(q_ids_v)), dtype=np.int64)
-            for s in range(m_v):
-                adist += LUT_v[:, s, :].T[codes[:, s]]
-            mask = ids[:, None] == q_ids_v[None, :]
-            if len(ids) > k:
-                kth = np.partition(
-                    np.where(mask, np.iinfo(np.int64).max, adist), k - 1, axis=0
-                )[k - 1, :]
-                keep = (adist <= kth[None, :]) & ~mask
-            else:
-                keep = ~mask
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, adist[rows, cols]))
-        if not pool:
-            return
-        nid = np.concatenate([p[0] for p in pool])
-        qcol = np.concatenate([p[1] for p in pool])
-        sc = np.concatenate([p[2] for p in pool])
-        out = {"query_id": [], "neighbor_id": [], "adist": []}
-        for j in range(len(q_ids_v)):
-            sel = qcol == j
-            if not sel.any():
-                continue
-            nj, sj = nid[sel], sc[sel]
-            order = np.lexsort((nj, sj))[:k]
-            out["query_id"].extend([q_ids_v[j]] * len(order))
-            out["neighbor_id"].extend(nj[order])
-            out["adist"].extend(sj[order])
-        yield pd.DataFrame(out)
-
-    cand = corpus.mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
+    nv = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("nv"),
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    scored = (
+        nv.join(F.broadcast(shortlist.select("query_id", "neighbor_id")),
+                "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
         .select(
             "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "adist",
+            F.round(
+                F.aggregate(
+                    F.zip_with("qv", "nv", lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                6,
+            ).alias("l2"),
         )
     )
+    return _rank_topk(scored, k, "l2", ascending=True)
 
 
 def pq_topk_refined(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -1250,47 +969,8 @@ def pq_topk_refined(emb: DataFrame, queries: DataFrame, k: int = 5,
 
     Output: (query_id, neighbor_id, rank, l2) ranked by
     (l2 ASC, neighbor_id ASC), l2 rounded to 6 dp."""
-    cand = pq_topk(emb, queries, k=r, codebook=codebook).select(
-        "query_id", "neighbor_id"
-    )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    nv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("nv"),
-    )
-    # candidate set is n_q*r rows -> broadcast it against the float
-    # table so the rerank reads each shortlisted vector once
-    scored = (
-        nv.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "qv", "nv", lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("l2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "l2",
-        )
-    )
+    shortlist = pq_topk(emb, queries, k=r, codebook=codebook)
+    return _refine_l2(shortlist, queries, emb, k)
 
 
 def pq_train_step(emb: DataFrame, codebook=None) -> DataFrame:
@@ -1310,15 +990,9 @@ def pq_train_step(emb: DataFrame, codebook=None) -> DataFrame:
 
     Output: (s, cidx, dim, m, n_members) — dim 0-based WITHIN the
     subspace, m = round(avg, 6)."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    if codebook is None:
-        _, codebook = pq_codebook(emb)
-    CB = codebook
-    if CB is None:
-        raise ValueError("empty corpus: no codebook")
+    CB = _require_codebook(emb, codebook)
     bcb = emb.sparkSession.sparkContext.broadcast(CB)
     out_schema = T.StructType(
         [
@@ -1387,17 +1061,7 @@ def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 5,
         (cand["query_id"] == both["x"]) & (cand["neighbor_id"] == both["y"]),
         "left_anti",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        kept.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "cosine",
-        )
-    )
+    return _rank_topk(kept, k, "cosine", ascending=False)
 
 
 def ivfpq_index_write(emb: DataFrame, path: str,
@@ -1411,67 +1075,14 @@ def ivfpq_index_write(emb: DataFrame, path: str,
     sub-codebooks. Both quantizers are the deterministic seeded
     samples (swap in trained ones — pq_train_step / ivf_train_step —
     without changing any layout or probe code)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
     c_ids, C = ivf_centroids(emb, n_cells)
     if C is None:
         raise ValueError("ivfpq_index_write: empty corpus")
-    if codebook is None:
-        _, codebook = pq_codebook(emb)
-    CB = codebook
-    if CB.shape[1] > 128:
-        raise ValueError("ksub > 128 does not fit the tinyint code layout")
-    assigned = ivf_assign(emb, n_cells=n_cells, centroids=(c_ids, C))
-    bcb = spark.sparkContext.broadcast(CB)
-    id_type = emb.schema["vec_id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", id_type),
-            T.StructField("codes", T.ArrayType(T.ByteType())),
-            T.StructField("ivf_cell", T.LongType()),
-        ]
-    )
-
-    def encode(batches):
-        import numpy as np
-
-        CB_v = bcb.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            codes = _pq_codes(X, CB_v).astype(np.int8)
-            yield pd.DataFrame(
-                {
-                    "vec_id": batch["vec_id"],
-                    "codes": list(codes),
-                    "ivf_cell": batch["ivf_cell"].astype("int64"),
-                }
-            )
-
-    (
-        assigned.select("vec_id", "embedding", "ivf_cell")
-        .mapInPandas(encode, out_schema)
-        .repartition(F.col("ivf_cell"))
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(f"{path}/index")
-    )
-    cent_rows = [(int(cid), [float(x) for x in vec])
-                 for cid, vec in zip(c_ids, C)]
-    spark.createDataFrame(
-        cent_rows, "c_id long, cv array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    cb_rows = [
-        (int(s), int(j), [float(x) for x in CB[s, j]])
-        for s in range(CB.shape[0])
-        for j in range(CB.shape[1])
-    ]
-    spark.createDataFrame(
-        cb_rows, "s int, cidx int, cv array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
+    CB = _require_codebook(emb, codebook)
+    assigned = ivf_assign(emb.select("vec_id", "embedding"), centroids=(c_ids, C))
+    _write_cells(_pq_encoded(assigned, CB), path)
+    _write_centroids(emb.sparkSession, c_ids, C, path)
+    _write_codebook(emb.sparkSession, CB, path)
 
 
 def ivfpq_topk(spark, path: str, queries: DataFrame, k: int = 5,
@@ -1488,136 +1099,13 @@ def ivfpq_topk(spark, path: str, queries: DataFrame, k: int = 5,
 
     Output without refine: (query_id, neighbor_id, rank, adist);
     with refine: (query_id, neighbor_id, rank, l2)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    c_ids, C = _load_centroids(spark, path)
-    cb_rows = spark.read.parquet(f"{path}/codebook").collect()
-    cb_rows.sort(key=lambda r: (r["s"], r["cidx"]))
-    m = 1 + max(r["s"] for r in cb_rows)
-    ksub = 1 + max(r["cidx"] for r in cb_rows)
-    dsub = len(cb_rows[0]["cv"])
-    CB = np.array([r["cv"] for r in cb_rows], dtype=np.float64).reshape(
-        m, ksub, dsub
-    )
-    corpus = spark.read.parquet(f"{path}/index")
-    id_type = corpus.schema["vec_id"].dataType
-    q = _collect_queries(queries)
-    if q is None:
-        return _empty_topk(spark, id_type).select(
-            "query_id", "neighbor_id", "rank",
-            F.lit(0).cast("long").alias("adist"),
-        )
-    q_ids, Q, qn = q
-    cn = np.sqrt((C * C).sum(axis=1))
-    M = _probe_sets(Q, qn, C, cn, nprobe)          # M[cell_col, query]
-    probed_cells = sorted(int(c_ids[ci]) for ci in np.nonzero(M.any(axis=1))[0])
-    cell_col_of = {int(cid): ci for ci, cid in enumerate(c_ids)}
-    LUT = np.stack([_pq_sqdist_q(Q, CB, s) for s in range(m)], axis=1)
+    qs, probe, probed = _index_probe_state(spark, path, queries, nprobe)
+    codec = _pq_codec(qs, _load_codebook(spark, path), "codes")
     kk = k if refine_from is None else (refine_k or 4 * k)
-    bq = spark.sparkContext.broadcast((q_ids, LUT, M, cell_col_of, m))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("adist", T.LongType()),
-        ]
-    )
-
-    def part_topk(batches):
-        q_ids_v, LUT_v, M_v, col_of, m_v = bq.value
-        pool: list = []
-        for batch in batches:
-            if not len(batch):
-                continue
-            ids = batch["vec_id"].to_numpy()
-            codes = np.stack(batch["codes"].to_numpy()).astype(np.int64)
-            cells = batch["ivf_cell"].to_numpy()
-            adist = np.zeros((len(ids), len(q_ids_v)), dtype=np.int64)
-            for s in range(m_v):
-                adist += LUT_v[:, s, :].T[codes[:, s]]
-            cell_cols = np.array([col_of[int(c)] for c in cells])
-            allowed = M_v[cell_cols, :]            # (n, n_q)
-            allowed &= ids[:, None] != q_ids_v[None, :]
-            big = np.iinfo(np.int64).max
-            masked = np.where(allowed, adist, big)
-            if len(ids) > kk:
-                kth = np.partition(masked, kk - 1, axis=0)[kk - 1, :]
-                keep = (masked <= kth[None, :]) & allowed
-            else:
-                keep = allowed
-            rows, cols = np.nonzero(keep)
-            if len(rows):
-                pool.append((ids[rows], cols, adist[rows, cols]))
-        if not pool:
-            return
-        nid = np.concatenate([p[0] for p in pool])
-        qcol = np.concatenate([p[1] for p in pool])
-        sc = np.concatenate([p[2] for p in pool])
-        out = {"query_id": [], "neighbor_id": [], "adist": []}
-        for j in range(len(q_ids_v)):
-            sel = qcol == j
-            if not sel.any():
-                continue
-            nj, sj = nid[sel], sc[sel]
-            order = np.lexsort((nj, sj))[:kk]
-            out["query_id"].extend([q_ids_v[j]] * len(order))
-            out["neighbor_id"].extend(nj[order])
-            out["adist"].extend(sj[order])
-        yield pd.DataFrame(out)
-
-    cand = corpus.filter(F.col("ivf_cell").isin(probed_cells)).mapInPandas(
-        part_topk, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-    )
+    shortlist = _scan_topk(_probed_index(spark, path, probed, "codes"), codec, kk, probe)
     if refine_from is None:
-        return shortlist.select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "adist",
-        )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    nv = refine_from.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("nv"),
-    )
-    scored = (
-        nv.join(F.broadcast(shortlist.select("query_id", "neighbor_id")),
-                "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.zip_with("qv", "nv", lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("l2"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("l2").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"), "l2",
-        )
-    )
+        return shortlist
+    return _refine_l2(shortlist, queries, refine_from, k)
 
 
 def semdedup(emb: DataFrame, threshold: float = 0.95,

@@ -411,7 +411,8 @@ def test_snap_to_boundary_pruned_parity(spark):
     → the vectorized nearest-bucket jump), far points beyond the
     SNAP_D_CAP_M shear-validity disk (dense per-cell fallback), and a
     null-coordinate row (edge-0/NaN mirror of the dense all-NaN
-    argmin)."""
+    argmin), plus duplicate ids, an empty point set and an all-invalid
+    (NULL and NaN) one."""
     import math
 
     import numpy as np
@@ -440,10 +441,13 @@ def test_snap_to_boundary_pruned_parity(spark):
         ("P:far1", 25.0, 70.5),       # >400 km: per-cell dense fallback
         ("P:far2", 5.2, 58.1),
         ("P:null", None, None),
+        # duplicate ids stay separate rows (same and different points)
+        ("P:dup", 10.3, 59.8),
+        ("P:dup", 10.3, 59.8),
+        ("P:dup", 11.0, 60.0),
     ]
-    pts = spark.createDataFrame(
-        rows, "feature_id string, lon double, lat double"
-    )
+    schema = "feature_id string, lon double, lat double"
+    pts = spark.createDataFrame(rows, schema)
 
     def canon(df):
         return sorted(
@@ -471,6 +475,19 @@ def test_snap_to_boundary_pruned_parity(spark):
     # must route to the same place without collecting the edge set
     auto_dist = canon(snap_to_boundary(pts, zones, dist_min_edges=100))
     assert auto_dist == dense
+    assert sum(r[0] == "P:dup" for r in dense) == 3
+    # no valid point at all: none for no points, the first edge with
+    # NULL snap and dist per invalid point; the distributed ladder then
+    # runs no round and must still build its (empty) best-edge frame
+    invalid = spark.createDataFrame(
+        [("P:null", None, None), ("P:nan", float("nan"), 59.5)], schema
+    )
+    for edge_pts, n in ((spark.createDataFrame([], schema), 0), (invalid, 2)):
+        want = canon(snap_to_boundary(edge_pts, zones, mode="dense"))
+        assert len(want) == n
+        assert all(r[2] == 0 and r[3:] == (None, None, None) for r in want)
+        for mode in ("pruned", "distributed"):
+            assert canon(snap_to_boundary(edge_pts, zones, mode=mode)) == want
 
 
 def test_snap_to_lines_distributed_parity(spark):

@@ -732,6 +732,114 @@ def test_ivf_empty_corpus_and_empty_queries(spark):
     assert ivf_topk(none, none).count() == 0
 
 
+@pytest.fixture(scope="module")
+def ann_layouts(spark, sf_dir, tmp_path_factory):
+    """The first 64 test-corpus embeddings, their quantizers (4 IVF
+    cells, the PQ codebook, the SQ8 scale) and every stored ANN layout
+    built from them: (emb, quantizers, {layout name: path})."""
+    from asag_spark.operators import similarity as sim
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = e.filter(F.col("vec_id") < 64)
+    qz = {
+        "centroids": sim.ivf_centroids(e, 4),
+        "codebook": sim.pq_codebook(e)[1],
+        "scale": sim.sq8_scale(e),
+    }
+    root = tmp_path_factory.mktemp("ann")
+    paths = {n: str(root / n) for n in ("ivf", "sq8", "pq", "ivfpq")}
+    sim.ivf_index_write(e, paths["ivf"], n_cells=4)
+    sim.sq8_encode(e, paths["sq8"], scale=qz["scale"])
+    sim.pq_encode(e, paths["pq"], codebook=qz["codebook"])
+    sim.ivfpq_index_write(e, paths["ivfpq"], n_cells=4,
+                          codebook=qz["codebook"])
+    return e, qz, paths
+
+
+# entry point → (call(similarity, emb, quantizers, paths, queries),
+# its value columns after query_id, neighbor_id, rank)
+_EMPTY_QUERY_CASES = {
+    "cosine_topk": (lambda s, e, z, p, q: s.cosine_topk(e, q), "cosine"),
+    "cosine_topk_lsh": (
+        lambda s, e, z, p, q: s.cosine_topk_lsh(e, q), "cosine"),
+    "ivf_topk": (
+        lambda s, e, z, p, q: s.ivf_topk(e, q, centroids=z["centroids"]),
+        "cosine"),
+    "ivf_topk_indexed": (
+        lambda s, e, z, p, q: s.ivf_topk_indexed(e.sparkSession, p["ivf"], q),
+        "cosine"),
+    "sq8_topk": (
+        lambda s, e, z, p, q: s.sq8_topk(e, q, scale=z["scale"]),
+        "score qcos cosine"),
+    "sq8_topk_encoded": (
+        lambda s, e, z, p, q: s.sq8_topk_encoded(e.sparkSession, p["sq8"], q),
+        "score qcos"),
+    "pq_topk": (
+        lambda s, e, z, p, q: s.pq_topk(e, q, codebook=z["codebook"]),
+        "adist"),
+    "pq_topk_encoded": (
+        lambda s, e, z, p, q: s.pq_topk_encoded(e.sparkSession, p["pq"], q),
+        "adist"),
+    "pq_topk_refined": (
+        lambda s, e, z, p, q: s.pq_topk_refined(e, q,
+                                                codebook=z["codebook"]),
+        "l2"),
+    "ivfpq_topk": (
+        lambda s, e, z, p, q: s.ivfpq_topk(e.sparkSession, p["ivfpq"], q),
+        "adist"),
+    "ivfpq_topk_refined": (
+        lambda s, e, z, p, q: s.ivfpq_topk(e.sparkSession, p["ivfpq"], q,
+                                           refine_from=e),
+        "l2"),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_EMPTY_QUERY_CASES))
+def test_topk_empty_queries(ann_layouts, entry):
+    """An empty query frame → 0 rows with the entry point's documented
+    column set — the same schema a non-empty call returns."""
+    from asag_spark.operators import similarity as sim
+
+    e, qz, paths = ann_layouts
+    call, values = _EMPTY_QUERY_CASES[entry]
+    cols = ["query_id", "neighbor_id", "rank", *values.split()]
+    out = call(sim, e, qz, paths, e.filter(F.lit(False)))
+    assert out.columns == cols
+    assert out.count() == 0
+    full = call(sim, e, qz, paths, e.filter(F.col("vec_id") < 2))
+    assert full.schema.simpleString() == out.schema.simpleString()
+
+
+def test_topk_zero_norm_keeps_true_neighbors(spark, tmp_path):
+    """A zero-norm corpus vector has no defined cosine (0/0 = NaN) and
+    must not take one of a query's k slots, in the brute-force scan or
+    either IVF path."""
+    import pandas as pd
+
+    from asag_spark.operators.similarity import (
+        cosine_topk, ivf_index_write, ivf_topk, ivf_topk_indexed,
+    )
+
+    vecs = [[1.0, 0.0], [0.9, 0.1], [0.0, 0.0], [0.5, 0.5], [0.1, 0.9],
+            [-1.0, 0.0]]
+    e = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs}),
+        "vec_id long, embedding array<double>",
+    )
+    q = e.filter(F.col("vec_id") == 0)
+    ivf_index_write(e, str(tmp_path), n_cells=1)
+    outs = {
+        "cosine_topk": cosine_topk(e, q, k=3),
+        "ivf_topk": ivf_topk(e, q, k=3, n_cells=1, nprobe=1),
+        "ivf_topk_indexed": ivf_topk_indexed(spark, str(tmp_path), q, k=3,
+                                             nprobe=1),
+    }
+    for name, df in outs.items():
+        ids = [r["neighbor_id"] for r in sorted(df.collect(),
+                                                key=lambda r: r["rank"])]
+        assert ids == [1, 3, 4], name
+
+
 def test_dedup_clusters_transitive(spark):
     """Connected components: transitive closure (A~B~C one cluster even
     when (A,C) was never a pair), min-id labels, diameter-4 chain needs
