@@ -156,23 +156,39 @@ def parse_cell(cell: str) -> tuple[int, int, int]:
     return int(res_s), int(q_s), int(r_s)
 
 
+def _cover_bboxes(min_lon: np.ndarray, min_lat: np.ndarray,
+                  max_lon: np.ndarray, max_lat: np.ndarray, res: int,
+                  pad_cells: int = 1) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized ``cover_bbox`` over n bboxes: (bbox index, q, r) rows,
+    each bbox's cells in cover_bbox's order (q outer, r inner). One
+    cell_qr call projects every corner of every bbox."""
+    # x = R·λ·cosφ peaks at φ=0, which is INTERIOR for a bbox spanning
+    # the equator — the corner extremes alone would under-cover, so
+    # such a bbox adds the (lon, 0) pseudo-corners; any other bbox
+    # repeats its (lon, min_lat) corners there, which moves no extreme
+    eq_lat = np.where((min_lat < 0.0) & (0.0 < max_lat), 0.0, min_lat)
+    lon6 = np.stack([min_lon, max_lon, min_lon, max_lon, min_lon, max_lon], 1)
+    lat6 = np.stack([min_lat, min_lat, max_lat, max_lat, eq_lat, eq_lat], 1)
+    q, r = cell_qr(lon6, lat6, res)
+    q0 = q.min(axis=1) - pad_cells
+    r0 = r.min(axis=1) - pad_cells
+    nq = q.max(axis=1) + pad_cells + 1 - q0
+    nr = r.max(axis=1) + pad_cells + 1 - r0
+    cnt = nq * nr
+    idx = np.repeat(np.arange(len(cnt)), cnt)
+    local = np.arange(len(idx)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return idx, q0[idx] + local // nr[idx], r0[idx] + local % nr[idx]
+
+
 def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float,
                res: int, pad_cells: int = 1) -> list[tuple[int, int]]:
     """Hex cells covering a lon/lat bbox (+pad ring) — the polygon
     cell-cover primitive used to pre-join PIP candidates. Enumerates
     the axial range of the projected bbox corners; exact containment
     is always refined afterwards with points_in_ring."""
-    corners_lon = [min_lon, max_lon, min_lon, max_lon]
-    corners_lat = [min_lat, min_lat, max_lat, max_lat]
-    if min_lat < 0.0 < max_lat:
-        # x = R·λ·cosφ peaks at φ=0, which is INTERIOR for a bbox
-        # spanning the equator — the corner extremes alone would
-        # under-cover; add the (lon, 0) pseudo-corners
-        corners_lon += [min_lon, max_lon]
-        corners_lat += [0.0, 0.0]
-    q, r = cell_qr(np.array(corners_lon), np.array(corners_lat), res)
-    out = []
-    for qq in range(int(q.min()) - pad_cells, int(q.max()) + pad_cells + 1):
-        for rr in range(int(r.min()) - pad_cells, int(r.max()) + pad_cells + 1):
-            out.append((qq, rr))
-    return out
+    _, q, r = _cover_bboxes(
+        *(np.array([v], dtype=np.float64)
+          for v in (min_lon, min_lat, max_lon, max_lat)),
+        res, pad_cells,
+    )
+    return list(zip(q.tolist(), r.tolist()))

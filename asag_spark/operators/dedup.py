@@ -519,7 +519,10 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
         )
         .distinct()
     )
-    e = _with_vec_norm(emb)
+    # zero-norm vectors have no defined cosine and always share every
+    # band: keep them out of the refine, as semdedup does — under the
+    # ANSI runtime one such pair otherwise aborts with DIVIDE_BY_ZERO
+    e = _with_vec_norm(emb).filter(F.col("norm") > 0)
     a = e.alias("a")
     b = e.alias("b")
     dot = F.aggregate(

@@ -138,6 +138,115 @@ def test_hexgrid_cover_contains_point_cell():
     assert (int(q[0]), int(r[0])) in cover
 
 
+def _loop_cover_bbox(min_lon, min_lat, max_lon, max_lat, res):
+    """The scalar bbox cover (pad 1) the vectorized one replaced."""
+    corners_lon = [min_lon, max_lon, min_lon, max_lon]
+    corners_lat = [min_lat, min_lat, max_lat, max_lat]
+    if min_lat < 0.0 < max_lat:
+        corners_lon += [min_lon, max_lon]
+        corners_lat += [0.0, 0.0]
+    q, r = hexgrid.cell_qr(np.array(corners_lon), np.array(corners_lat), res)
+    return [(qq, rr) for qq in range(int(q.min()) - 1, int(q.max()) + 2)
+            for rr in range(int(r.min()) - 1, int(r.max()) + 2)]
+
+
+def _loop_edge_cells(A, B, res):
+    """The per-piece edge cover loop the vectorized one replaced:
+    edge i → the set of cells its ~cell-size pieces' bboxes cover."""
+    ax_m, ay_m = hexgrid._project(A[:, 0], A[:, 1])
+    bx_m, by_m = hexgrid._project(B[:, 0], B[:, 1])
+    n_sub = np.maximum(1, np.ceil(
+        np.hypot(bx_m - ax_m, by_m - ay_m) / hexgrid.EDGE_M[res]
+    ).astype(np.int64))
+    out = []
+    for i in range(len(A)):
+        m = int(n_sub[i])
+        ts = np.linspace(0.0, 1.0, m + 1)
+        px = A[i, 0] + ts * (B[i, 0] - A[i, 0])
+        py = A[i, 1] + ts * (B[i, 1] - A[i, 1])
+        cells = set()
+        for j in range(m):
+            cells.update(_loop_cover_bbox(
+                min(px[j], px[j + 1]), min(py[j], py[j + 1]),
+                max(px[j], px[j + 1]), max(py[j], py[j + 1]), res,
+            ))
+        out.append(cells)
+    return out
+
+
+def _parity_edges(res):
+    """Benchmark-shaped zone-grid ring edges (a slice of the zones, to
+    bound the loop's cost), random equator-crossing edges, zero-length
+    edges and edges longer than 100 cells."""
+    from asag_spark.datagen import generate_dense_zone_grid
+
+    class _Rows:
+        def createDataFrame(self, rows, schema):
+            return rows
+
+    rows = generate_dense_zone_grid(_Rows(), nx=25, ny=25)
+    rings = [parse_polygon(w) for *_, w in rows[::4 if res == 3 else 40]]
+    A = [np.concatenate([v[:-1] for v in rings])]
+    B = [np.concatenate([v[1:] for v in rings])]
+    rng = np.random.default_rng(res)
+    deg = np.degrees(hexgrid.EDGE_M[res] / hexgrid.EARTH_RADIUS_M)
+    a = np.column_stack([rng.uniform(-20, 20, 40), rng.uniform(-8, 0, 40) * deg])
+    A.append(a)
+    B.append(a + np.column_stack([rng.uniform(-6, 6, 40),
+                                  rng.uniform(8, 16, 40)]) * deg)
+    z = np.array([[10.0, 60.0], [-0.3, 0.0], [179.9, -45.0]])
+    A.append(z)
+    B.append(z)
+    L = np.array([[5.0, 58.0], [-3.0, -2.0], [100.0, 30.0]])
+    A.append(L)
+    B.append(L + np.array([[0.0, 110.0], [120.0, 60.0], [-130.0, 0.0]]) * deg)
+    return np.concatenate(A), np.concatenate(B)
+
+
+@pytest.mark.parametrize("res", [7, 3])
+def test_edge_cells_matches_per_piece_loop(res):
+    """The vectorized snap edge index equals the per-piece loop: the
+    pruned cell → ascending-edge-list map, and the dilate=1 (cell, edge)
+    set the distributed strategy joins on."""
+    from asag_spark.operators.pip import _edge_cells
+
+    A, B = _parity_edges(res)
+    # the bbox cover alone: random boxes, and (at res 3, where they
+    # stay small) two equator-spanning boxes near ±180° whose q extreme
+    # is the (lon, 0) pseudo-corner
+    rng = np.random.default_rng(7)
+    lo = np.column_stack([rng.uniform(-180, 170, 30), rng.uniform(-30, 5, 30)])
+    hi = lo + rng.uniform(0.0, 0.25 if res == 7 else 25.0, (30, 2))
+    if res == 3:
+        lo = np.vstack([lo, [[-180.0, -5.0], [160.0, -40.0]]])
+        hi = np.vstack([hi, [[-170.0, 40.0], [179.0, 3.0]]])
+    ref_boxes = [_loop_cover_bbox(*a, *b, res) for a, b in zip(lo, hi)]
+    assert [hexgrid.cover_bbox(*a, *b, res) for a, b in zip(lo, hi)] \
+        == ref_boxes
+    box, q, r = hexgrid._cover_bboxes(lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1],
+                                      res)
+    assert list(zip(box.tolist(), q.tolist(), r.tolist())) == [
+        (i, *c) for i, cells in enumerate(ref_boxes) for c in cells]
+    ref = _loop_edge_cells(A, B, res)
+    ref_map = {}
+    for i, cells in enumerate(ref):
+        for c in cells:
+            ref_map.setdefault(c, []).append(i)
+    edge, q, r = _edge_cells(A[:, 0], A[:, 1], B[:, 0], B[:, 1], res)
+    got_map = {}
+    for i, qq, rr in zip(edge.tolist(), q.tolist(), r.tolist()):
+        got_map.setdefault((qq, rr), []).append(i)
+    assert got_map == ref_map
+    offs = hexgrid.grid_disk(0, 0, 1)
+    ref_dil = {(cq + dq, cr + dr, i) for i, cells in enumerate(ref)
+               for cq, cr in cells for dq, dr in offs}
+    edge, q, r = _edge_cells(A[:, 0], A[:, 1], B[:, 0], B[:, 1], res,
+                             dilate=1)
+    got_dil = list(zip(q.tolist(), r.tolist(), edge.tolist()))
+    assert len(got_dil) == len(set(got_dil))
+    assert set(got_dil) == ref_dil
+
+
 # ---- WKT / ray cast ---------------------------------------------------
 
 BOX = "POLYGON((10.95 58.97, 10.97 58.97, 10.97 58.99, 10.95 58.99, 10.95 58.97))"

@@ -120,6 +120,26 @@ def test_embedding_near_dups(vectors):
     assert all(p == (0, 1) for p in nd)
 
 
+def test_embedding_near_dups_zero_norm(spark):
+    """Two zero vectors share every LSH band but have no cosine: they
+    must drop out of the refine instead of aborting the stage with
+    DIVIDE_BY_ZERO, in embedding_near_dups and so in hard_negatives."""
+    import pandas as pd
+
+    from asag_spark.operators.similarity import hard_negatives
+
+    vecs = [[0.0] * 8, [0.0] * 8, [1.0] + [0.0] * 7,
+            [0.99, 0.01] + [0.0] * 6, [0.0, 1.0] + [0.0] * 6]
+    e = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(1, 6), "embedding": vecs}),
+        "vec_id long, embedding array<double>",
+    )
+    nd = embedding_near_dups(e.filter(F.col("vec_id") < 5), threshold=0.9)
+    assert [(r["vec_a"], r["vec_b"]) for r in nd.collect()] == [(3, 4)]
+    hn = hard_negatives(e, e.filter(F.col("vec_id") == 3), k=5).collect()
+    assert [(r["query_id"], r["neighbor_id"]) for r in hn] == [(3, 5)]
+
+
 def test_media_pipeline(spark):
     from asag_spark.datagen import fixture_docs
     from asag_spark.sources import docs_from_documents
