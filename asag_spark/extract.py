@@ -15,15 +15,14 @@ Formulations measured on 10M docs (identical output, exceptAll-checked):
   array): 22 s at 16 cores — CodegenFallback re-interprets the lambda
   tree per element AND Catalyst inlines the multi-referenced alias
   into every consumer;
-* ``mapInArrow`` index-scatter kernel (kept as
-  :func:`extract_entities_arrow`): fastest per-core on an unloaded
-  box, but the JVM→Python→JVM Arrow round-trip of every span text is
-  memory-bandwidth it cannot afford at full occupancy on a
-  bandwidth-capped host (hypervisor steal 25 s during a 10 s 16-core
+* a Python index-scatter kernel over Arrow batches: fastest per-core
+  on an unloaded box, but the JVM→Python→JVM Arrow round-trip of every
+  span text is memory bandwidth it cannot afford at full occupancy on
+  a bandwidth-capped host (hypervisor steal 25 s during a 10 s 16-core
   run; 4→16-core scaling 0.54);
-* str_to_map JVM path (the default): ~same wall at 16 cores, near-zero
-  steal, no Python workers, and the ``spans`` passthrough column is
-  free because it never leaves the JVM.
+* str_to_map JVM path (the implementation): ~same wall at 16 cores,
+  near-zero steal, no Python workers, and the ``spans`` passthrough
+  column is free because it never leaves the JVM.
 
 Per-row invariant (input_hint): the original ``spans`` array rides
 through unchanged so span-sequence equality can be asserted on any
@@ -37,126 +36,13 @@ codegen, and null means "property absent".
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .schema import ENTITY_PROP_KEYS, SPAN
+from .schema import ENTITY_PROP_KEYS
 
 
-def _first_pos(n: int, rows: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """Per doc row, the flat-span position of its FIRST matching span
-    (the reference's findFirst semantics), -1 where none. Assign
-    reversed so earlier spans overwrite later ones."""
-    dest = np.full(n, -1, dtype=np.int64)
-    dest[rows[::-1]] = pos[::-1]
-    return dest
-
-
-def _take_at(texts, src: np.ndarray):
-    """pc.take with -1 → null: gather each doc's span text (or value)
-    by precomputed position — no Python-object materialization."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    return pc.take(texts, pa.array(src, mask=src < 0, type=pa.int64()))
-
-
-def _extract_batches(batches, prop_keys=ENTITY_PROP_KEYS, spans_through=True):
-    """Index-scatter kernel: every span is classified ONCE (one
-    split_pattern + one index_in over the flat span buffer), matched
-    span *positions* are scattered first-wins into per-column index
-    vectors, and output columns are built with ``pc.take`` — all Arrow
-    C++; no per-key prefix scans, no object arrays. (The previous
-    per-key ``starts_with``+filter+object-scatter kernel did ~3 passes
-    per prop key over the flat buffer and one Python-object column
-    conversion per key — measured 1.9× more CPU per batch and, from the
-    allocation storm, a 1.47× per-core CPU inflation at 16 concurrent
-    tasks.)"""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    key_set = pa.array(list(prop_keys), type=pa.string())
-    n_keys = len(prop_keys)
-
-    for batch in batches:
-        doc_id = batch.column(0)
-        spans = batch.column(1)
-        n = len(spans)
-        lens = pc.list_value_length(spans).to_numpy(zero_copy_only=False)
-        lens = np.nan_to_num(lens.astype("float64"), nan=0.0).astype(np.int64)
-        vals = spans.flatten()
-        kinds = vals.field("kind")
-        texts = vals.field("text")
-        row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-
-        kind_np = kinds.to_numpy(zero_copy_only=False)
-        meta_np = kind_np == "meta"
-        geom_np = kind_np == "geom"
-        prop_np = kind_np == "prop"
-
-        # meta: first meta span per doc, then one regex pass per field
-        # over the n-length (per-doc) gather — not over every span
-        meta_src = _first_pos(n, row_idx[meta_np], np.nonzero(meta_np)[0])
-        meta_texts = _take_at(texts, meta_src)
-        meta_cols = {}
-        for field in ("entity_type", "id", "version"):
-            ext = pc.extract_regex(meta_texts, f"{field}=(?P<v>[^;]*)")
-            meta_cols[field] = ext.field("v")
-
-        geom_col = _take_at(
-            texts, _first_pos(n, row_idx[geom_np], np.nonzero(geom_np)[0])
-        )
-
-        # props: split each prop span ONCE at the first '=' (values may
-        # contain '=' — KeyValuesHelper-style split semantics), map keys
-        # to canonical indices with one index_in, scatter positions
-        # first-wins into an (n_keys × n) index matrix, take per key.
-        prop_pos = np.nonzero(prop_np)[0]
-        src_mat = np.full((n_keys, n), -1, dtype=np.int64)
-        if len(prop_pos):
-            ptexts = pc.take(texts, pa.array(prop_pos, type=pa.int64()))
-            split = pc.split_pattern(ptexts, "=", max_splits=1)
-            ok = pc.equal(pc.list_value_length(split), 2)
-            ok_np = ok.to_numpy(zero_copy_only=False).astype(bool)
-            if not ok_np.all():
-                split = pc.filter(split, ok)
-                prop_pos = prop_pos[ok_np]
-            keys = pc.list_element(split, 0)
-            pvals = pc.list_element(split, 1)
-            kidx = pc.index_in(keys, value_set=key_set)
-            kv = kidx.fill_null(-1).to_numpy(zero_copy_only=False)
-            known = kv >= 0
-            rows_v = row_idx[prop_pos][known]
-            keys_v = kv[known]
-            pos_v = np.nonzero(known)[0]
-            src_mat[keys_v[::-1], rows_v[::-1]] = pos_v[::-1]
-            prop_cols = [_take_at(pvals, src_mat[i]) for i in range(n_keys)]
-        else:
-            null_col = pa.nulls(n, type=pa.string())
-            prop_cols = [null_col] * n_keys
-
-        props_arr = pa.StructArray.from_arrays(prop_cols, names=list(prop_keys))
-        arrays = [
-            doc_id,
-            meta_cols["entity_type"],
-            meta_cols["id"],
-            meta_cols["version"],
-            props_arr,
-            geom_col,
-        ]
-        names = ["doc_id", "entity_type", "id", "version", "props", "geom_wkt"]
-        if spans_through:
-            arrays.append(spans)
-            names.append("spans")
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-
-def extract_entities(
-    docs: DataFrame,
-    prop_keys: tuple[str, ...] = ENTITY_PROP_KEYS,
-    spans_through: bool = True,
-) -> DataFrame:
+def extract_entities(docs: DataFrame, spans_through: bool = True) -> DataFrame:
     """docs(doc_id, spans) → typed entity frame (schema.ENTITIES) —
     pure-JVM implementation (no Python round-trip).
 
@@ -166,18 +52,16 @@ def extract_entities(
     prop spans: ``key=value`` → typed ``props`` struct. geom span: WKT
     passthrough. First span of a kind wins (findFirst semantics).
 
-    Why JVM rather than the Arrow kernel (kept as
-    ``extract_entities_arrow``): this host hard-caps memory bandwidth
-    per guest (BENCH/BASELINE.md hardware probes: a pure-memcpy probe
-    scales 4→16 cores at 0.46 with hypervisor steal exploding, vs 0.91
-    for pure ALU), and the mapInArrow round-trip ships every span text
-    JVM→Python→JVM — measured 25 steal-sec during a 10 s 16-core run.
-    The JVM formulation classifies spans with THREE one-pass
-    higher-order traversals (filter per kind), folds the prop spans
-    into one ``str_to_map``, and reads canonical keys with codegen'd
-    map lookups. Identical output (exceptAll-verified on 10M docs) with
-    zero IPC; the ``spans`` passthrough column (input_hint invariant)
-    is free — it never leaves the JVM.
+    Why JVM rather than a Python/Arrow kernel: this host hard-caps
+    memory bandwidth per guest (BENCH/BASELINE.md hardware probes: a
+    pure-memcpy probe scales 4→16 cores at 0.46 with hypervisor steal
+    exploding, vs 0.91 for pure ALU), and an Arrow UDF round-trip ships
+    every span text JVM→Python→JVM — measured 25 steal-sec during a
+    10 s 16-core run. The JVM formulation classifies spans with THREE
+    one-pass higher-order traversals (filter per kind), folds the prop
+    spans into one ``str_to_map``, and reads canonical keys with
+    codegen'd map lookups: zero IPC, and the ``spans`` passthrough
+    column (input_hint invariant) is free — it never leaves the JVM.
 
     First-wins semantics: the prop array is ``reverse``d before
     ``str_to_map`` and the session pins
@@ -187,9 +71,8 @@ def extract_entities(
     KeyValuesHelper semantics); the span encoding reserves the ASCII
     record separator 0x1E as the pair delimiter.
 
-    ``prop_keys`` narrows the emitted props struct; unlike the Arrow
-    kernel this is just a smaller projection — Catalyst prunes unread
-    map lookups automatically either way.
+    ``props`` carries every key of schema.ENTITY_PROP_KEYS; Catalyst
+    prunes the map lookups a consumer never reads.
     """
     s = F.col("spans")
 
@@ -208,7 +91,7 @@ def extract_entities(
         F.lit("\x1e"),
         F.lit("="),
     )
-    props = F.struct(*[pm[k].alias(k) for k in prop_keys])
+    props = F.struct(*[pm[k].alias(k) for k in ENTITY_PROP_KEYS])
 
     cols = [
         "doc_id",
@@ -223,68 +106,6 @@ def extract_entities(
     if spans_through:
         cols.append("spans")
     return docs.select(*cols)
-
-
-def extract_entities_arrow(
-    docs: DataFrame,
-    prop_keys: tuple[str, ...] = ENTITY_PROP_KEYS,
-    spans_through: bool = True,
-) -> DataFrame:
-    """Arrow-kernel variant of :func:`extract_entities` (index-scatter
-    ``mapInArrow`` over the flat span buffers). Same output, checked by
-    tests/test_features.py parity. Kept as the template for span
-    payloads that genuinely need Python (e.g. binary media decode,
-    operators/media.py) — for the plain text encoding the JVM path
-    wins on this host's bandwidth-capped cores (see extract_entities
-    docstring).
-
-    ``prop_keys`` / ``spans_through`` prune the KERNEL OUTPUT — the
-    manual equivalent of column pruning, which Catalyst cannot push
-    through an opaque mapInArrow (the Python side always materializes
-    and Arrow-transfers its full declared schema; the JVM discards
-    pruned columns only after the transfer).
-    """
-    from pyspark.sql import types as T
-
-    fields = [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), True),
-        T.StructField("id", T.StringType(), True),
-        T.StructField("version", T.StringType(), True),
-        T.StructField(
-            "props",
-            T.StructType(
-                [T.StructField(k, T.StringType(), True) for k in prop_keys]
-            ),
-            True,
-        ),
-        T.StructField("geom_wkt", T.StringType(), True),
-    ]
-    if spans_through:
-        fields.append(
-            T.StructField("spans", T.ArrayType(SPAN, containsNull=False), False)
-        )
-    out_schema = T.StructType(fields)
-
-    def run(batches):
-        return _extract_batches(
-            batches, prop_keys=prop_keys, spans_through=spans_through
-        )
-
-    parsed = docs.select("doc_id", "spans").mapInArrow(run, out_schema)
-    cols = [
-        "doc_id",
-        "entity_type",
-        "id",
-        "version",
-        "props",
-        "geom_wkt",
-        F.to_timestamp_ntz(F.col("props")["validFrom"]).alias("valid_from"),
-        F.to_timestamp_ntz(F.col("props")["validTo"]).alias("valid_to"),
-    ]
-    if spans_through:
-        cols.append("spans")
-    return parsed.select(*cols)
 
 
 def keylist_value(props: Column, key: str) -> Column:

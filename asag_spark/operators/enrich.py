@@ -1,4 +1,6 @@
-"""Feature projections P1-P15, adjacency join J1, union U1.
+"""Feature projections P1-P15 and adjacency join J1 in one feature
+build, :func:`build_features` (U1's per-type union is its CASE
+projection).
 
 Re-expresses the reference mappers
 (/root/reference/src/main/java/org/entur/asag/mapbox/mapper/*.java and
@@ -14,9 +16,11 @@ Scale notes (100 TB design):
   registry-sized case the reference serves (~10^5 stops) and rely on
   AQE to fall back to shuffled hash join past
   ``spark.sql.autoBroadcastJoinThreshold``.
-* The only shuffle in the whole feature pipeline is the adjacency
-  ``groupBy(id)`` over rows that HAVE adjacent sites (a few % of stops
-  — FIXTURES.md §3 rate 1/25); the union/projections are shuffle-free.
+* The feature build's shuffles: one window exchange keyed on
+  ``(xxhash64(_pkey), _pkey)`` that carries both the A1 dedup and the
+  X1 quay gate, and the adjacency aggregations over rows that HAVE
+  adjacent sites (a few % of stops — FIXTURES.md §3 rate 1/25). The
+  CASE projection is shuffle-free.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from pyspark.sql import functions as F
 from ..extract import extract_entities, keylist_value
 from ..schema import ENTITY_PROP_KEYS, PROP_FIELDS, SUBMODE_KEYS
 from ..datagen import AS_OF
-from .filters import validity_filter, validity_predicate, geometry_presence_filter
+from .filters import validity_filter, validity_predicate
 
 SECTION_STOPS = 0
 SECTION_PARKINGS = 1
@@ -38,8 +42,7 @@ SECTION_TARIFF_ZONES = 2
 # _pkey, _adj_sorted), so carrying the source strings through the
 # shuffle+sort is pure dead weight — and UnsafeRow struct cost is
 # ~8 B/field of offset alone. Measured at 10M docs / 16 pinned cores:
-# pruning them cut the windowed sub-plan from 8.7 s to 4.0 s
-# (tools/ab_probe.py).
+# pruning them cut the windowed sub-plan from 8.7 s to 4.0 s.
 _POST_WINDOW_PROP_KEYS = tuple(
     k for k in ENTITY_PROP_KEYS
     if k not in ("validFrom", "validTo", "adjacentSites", "parentDocId")
@@ -123,6 +126,29 @@ def _zone_base_entries(df_props: Column, id_col: Column,
     }
 
 
+def _parking_entries(p: Column) -> dict:
+    """P14 — ParkingToGeoJsonFeatureMapper.java:55-75. Capacities are
+    BigInteger→string (MapperHelper.java:50-54); parkingVehicleTypes is
+    the sorted, ','-joined enum-value list (A4, :64-69)."""
+    return {
+        **_zone_base_entries(p, F.col("id"), "Parking"),
+        "totalCapacity": p["totalCapacity"],
+        "principalCapacity": p["principalCapacity"],
+        "numberOfParkingLevels": p["numberOfParkingLevels"],
+        "publicCode": F.nullif(p["publicCode"], F.lit("")),
+        "covered": p["covered"],
+        "parkingVehicleTypes": F.when(
+            p["parkingVehicleTypes"].isNotNull(),
+            F.array_join(
+                F.array_sort(F.split(p["parkingVehicleTypes"], ",")), ","
+            ),
+        ),
+        "hasParentSiteRef": F.when(
+            p["parentSiteRef"].isNotNull(), "true"
+        ).otherwise("false"),
+    }
+
+
 # -- J1: adjacency broadcast self-join --------------------------------------
 
 def adjacent_sites_sorted(props: Column) -> Column:
@@ -184,17 +210,19 @@ def adjacency_final_types_from_aux(
        per adjacent ref, one *edge row* (key=ref, probe=own id) — a
        single ``explode`` over a per-row built array, still one scan;
     2. gather 1 (exchange on key): hash-aggregate resolves each edge's
-       ``ref_type`` from the group's type row. Unknown refs get null
-       (the reference's Optional.ifPresent,
-       DeliveryPublicationStreamToGeoJson.java:153-154);
+       ref to the set of the group's type rows (one per version).
+       Unknown refs resolve to nothing (the reference's
+       Optional.ifPresent, DeliveryPublicationStreamToGeoJson.java:
+       153-154);
     3. gather 2 (exchange on probe, O(|edges|) rows only): union the
-       resolved types with the probe's own type, sort, '_'-join.
+       resolved types with the probe's own types, sort, '_'-join.
 
     Both exchanges carry 3 thin string columns; ~60 B/row at any
     scale. Duplicate (id, version) rows need no pre-dedup under either
-    strategy: max/collect_set/first are idempotent under duplicates
-    (the reference's toMap would throw on a dup id — undefined input
-    we tolerate).
+    strategy: collect_set is idempotent under duplicates, and several
+    versions of one id fold by the rule in :func:`_adjacency_fold` (the
+    reference's toMap would throw on a dup id — undefined input we
+    tolerate).
     """
     if strategy == "broadcast_prune":
         edges = stops_aux.filter(F.size("adj_sorted") > 0).select(
@@ -232,12 +260,15 @@ def adjacency_final_types_from_aux(
         ).alias("x")
     ).select("x.key", "x.probe", "x.own_type")
 
+    # gather 1 resolves each ref to the set of its versions' types; an
+    # unknown ref resolves to the empty set, and explode_outer keeps its
+    # edge row so the probe's own type still reaches the fold
     resolved = (
         scattered.groupBy("key")
         .agg(
-            F.max(
+            F.collect_set(
                 F.when(F.col("probe").isNull(), F.col("own_type"))
-            ).alias("ref_type"),
+            ).alias("ref_types"),
             F.collect_list(
                 F.when(
                     F.col("probe").isNotNull(),
@@ -246,11 +277,11 @@ def adjacency_final_types_from_aux(
             ).alias("edges"),
         )
         .filter(F.size("edges") > 0)
-        .select(F.explode("edges").alias("e"), "ref_type")
+        .select(F.explode("edges").alias("e"), "ref_types")
         .select(
             F.col("e.probe").alias("id"),
             F.col("e.own_type").alias("own_type"),
-            "ref_type",
+            F.explode_outer("ref_types").alias("ref_type"),
         )
     )
     return _adjacency_fold(resolved)
@@ -258,17 +289,20 @@ def adjacency_final_types_from_aux(
 
 def _adjacency_fold(resolved: DataFrame) -> DataFrame:
     """(id, own_type, ref_type) edge rows → (id, final_joined_type):
-    distinct found types ∪ own type, sorted, '_'-joined (A3 —
-    DeliveryPublicationStreamToGeoJson.java:150-159). collect_set drops
-    null ref_types, so unresolved refs contribute nothing."""
+    the id's types ∪ the found ref types, distinct, sorted, '_'-joined
+    (A3 — DeliveryPublicationStreamToGeoJson.java:150-159).
+
+    Multi-version rule, the same under both strategies: a stop id's
+    types are the set of its valid versions' types. On the ref side
+    every version of the referenced id contributes its type; on the
+    probe side every version that carries the edge contributes its own
+    type, so every version of a stop that carries adjacentSites gets
+    the same string. collect_set drops null ref_types, so unresolved
+    refs contribute nothing (Optional.ifPresent, :153-154)."""
     return resolved.groupBy("id").agg(
         F.array_join(
             F.array_sort(
-                F.array_distinct(
-                    F.array_append(
-                        F.collect_set("ref_type"), F.first("own_type")
-                    )
-                )
+                F.array_union(F.collect_set("own_type"), F.collect_set("ref_type"))
             ),
             "_",
         ).alias("final_joined_type")
@@ -295,204 +329,34 @@ def adjacency_final_types(
     return adjacency_final_types_from_aux(aux, strategy=strategy)
 
 
-# -- per-entity-type feature projections ------------------------------------
-
-def stop_features(stops: DataFrame) -> DataFrame:
-    """P6/P7 — StopPlaceToGeoJsonFeatureMapper.java:56-91.
-
-    finalStopPlaceType precedence exactly as the mapper writes it:
-    submode → overwritten by stopPlaceType only when submode absent →
-    overwritten by the adjacency-joined string ONLY for the primary
-    adjacent site (:84-87).
-    """
-    adj = adjacency_final_types(stops)
-    p = F.col("props")
-    adj_sorted = adjacent_sites_sorted(p)
-    has_adj = adj_sorted.isNotNull() & (F.size(adj_sorted) > 0)
-    # P7 — primary iff no adjacent ref is strictly greater than own id,
-    # case-insensitively (TreeSet.higher(id) == null,
-    # StopPlaceToGeoJsonFeatureMapper.java:79-86)
-    is_primary = has_adj & (
-        F.size(
-            F.filter(adj_sorted, lambda r: F.lower(r) > F.lower(F.col("id")))
-        )
-        == 0
-    )
-    submode = resolved_submode(p)
-    base_final = F.coalesce(submode, p["stopPlaceType"])
-    # adj is small (only stops WITH adjacent sites, two thin columns) —
-    # broadcast so the full stop side never shuffles for this join
-    enriched = stops.join(F.broadcast(adj), "id", "left")
-    final_type = F.when(
-        has_adj & is_primary, F.col("final_joined_type")
-    ).otherwise(base_final)
-
-    return enriched.select(
-        F.col("id").alias("feature_id"),
-        F.lit(SECTION_STOPS).alias("section"),
-        F.lit("StopPlace").alias("entity_type"),
-        F.col("geom_wkt").alias("geometry_wkt"),
-        point_lon(F.col("geom_wkt")).alias("lon"),
-        point_lat(F.col("geom_wkt")).alias("lat"),
-        _props_struct(
-            {
-                **_zone_base_entries(p, F.col("id"), "StopPlace"),
-                "submode": submode,
-                "stopPlaceType": p["stopPlaceType"],
-                "finalStopPlaceType": final_type,
-                "publicCode": F.nullif(p["publicCode"], F.lit("")),
-                "weighting": p["weighting"],
-                "hasParentSiteRef": F.when(
-                    p["parentSiteRef"].isNotNull(), "true"
-                ).otherwise("false"),
-                "isParentStopPlace": keylist_value(p, "IS_PARENT_STOP_PLACE"),
-                "isPrimaryAdjacentSite": F.when(has_adj, is_primary.cast("string")),
-            }
-        ).alias("properties"),
-        F.when(has_adj, adj_sorted).alias("adjacent_sites"),
-        "doc_id",
-    )
-
-
-def quay_features(quays: DataFrame, valid_stop_ids: DataFrame) -> DataFrame:
-    """P13/X1 — quays ride with their parent stop
-    (DeliveryPublicationStreamToGeoJson.java:259-267;
-    QuayToGeoJsonFeatureMapper.java:45-66): a quay is emitted iff its
-    parent stop survived validity filtering. ``valid_stop_ids`` is a
-    one-column frame (doc_id) — broadcast semi-join, no shuffle of the
-    quay side."""
-    p = F.col("props")
-    kept = quays.join(
-        F.broadcast(valid_stop_ids.select(F.col("doc_id").alias("parent_doc"))),
-        F.col("props")["parentDocId"] == F.col("parent_doc"),
-        "left_semi",
-    )
-    return kept.select(
-        F.col("id").alias("feature_id"),
-        F.lit(SECTION_STOPS).alias("section"),
-        F.lit("Quay").alias("entity_type"),
-        F.col("geom_wkt").alias("geometry_wkt"),
-        point_lon(F.col("geom_wkt")).alias("lon"),
-        point_lat(F.col("geom_wkt")).alias("lat"),
-        _props_struct(
-            {
-                **_zone_base_entries(p, F.col("id"), "Quay"),
-                "publicCode": F.nullif(p["publicCode"], F.lit("")),
-            }
-        ).alias("properties"),
-        F.lit(None).cast("array<string>").alias("adjacent_sites"),
-        "doc_id",
-    )
-
-
-def parking_features(parkings: DataFrame) -> DataFrame:
-    """P14 — ParkingToGeoJsonFeatureMapper.java:55-75. Capacities are
-    BigInteger→string (MapperHelper.java:50-54); parkingVehicleTypes is
-    the sorted, ','-joined enum-value list (A4, :64-69)."""
-    p = F.col("props")
-    return parkings.select(
-        F.col("id").alias("feature_id"),
-        F.lit(SECTION_PARKINGS).alias("section"),
-        F.lit("Parking").alias("entity_type"),
-        F.col("geom_wkt").alias("geometry_wkt"),
-        point_lon(F.col("geom_wkt")).alias("lon"),
-        point_lat(F.col("geom_wkt")).alias("lat"),
-        _props_struct(_parking_entries(p)).alias("properties"),
-        F.lit(None).cast("array<string>").alias("adjacent_sites"),
-        "doc_id",
-    )
-
-
-def _parking_entries(p: Column) -> dict:
-    return {
-        **_zone_base_entries(p, F.col("id"), "Parking"),
-        "totalCapacity": p["totalCapacity"],
-        "principalCapacity": p["principalCapacity"],
-        "numberOfParkingLevels": p["numberOfParkingLevels"],
-        "publicCode": F.nullif(p["publicCode"], F.lit("")),
-        "covered": p["covered"],
-        "parkingVehicleTypes": F.when(
-            p["parkingVehicleTypes"].isNotNull(),
-            F.array_join(
-                F.array_sort(F.split(p["parkingVehicleTypes"], ",")), ","
-            ),
-        ),
-        "hasParentSiteRef": F.when(
-            p["parentSiteRef"].isNotNull(), "true"
-        ).otherwise("false"),
-    }
-
-
-def tariff_zone_features(zones: DataFrame) -> DataFrame:
-    """P15 — TariffZoneToGeoJsonFeatureMapper.java:39-42 (zone base only)."""
-    p = F.col("props")
-    return zones.select(
-        F.col("id").alias("feature_id"),
-        F.lit(SECTION_TARIFF_ZONES).alias("section"),
-        F.lit("TariffZone").alias("entity_type"),
-        F.col("geom_wkt").alias("geometry_wkt"),
-        point_lon(F.col("geom_wkt")).alias("lon"),
-        point_lat(F.col("geom_wkt")).alias("lat"),
-        _props_struct(_zone_base_entries(p, F.col("id"), "TariffZone")).alias(
-            "properties"
-        ),
-        F.lit(None).cast("array<string>").alias("adjacent_sites"),
-        "doc_id",
-    )
-
-
 # -- the flagship pipeline ---------------------------------------------------
-
-def build_features_union(docs: DataFrame, as_of: str = AS_OF) -> DataFrame:
-    """Reference-shaped 4-branch union variant (one branch per entity
-    type, mirroring E2's per-type write loops). Semantically identical
-    to build_features; kept for parity reading — the branch-per-type
-    plan re-scans the source once per branch, so the single-pass
-    variant below is the production path."""
-    e = extract_entities(docs)
-    e = validity_filter(e, as_of)
-    e = e.dropDuplicates(["id", "version"])
-
-    stops = geometry_presence_filter(e.filter(F.col("entity_type") == "StopPlace"))
-    quays = e.filter(F.col("entity_type") == "Quay")
-    parkings = geometry_presence_filter(e.filter(F.col("entity_type") == "Parking"))
-    tz = geometry_presence_filter(e.filter(F.col("entity_type") == "TariffZone"))
-
-    return (
-        stop_features(stops)
-        .unionByName(quay_features(quays, stops.select("doc_id")))
-        .unionByName(parking_features(parkings))
-        .unionByName(tariff_zone_features(tz))
-    )
-
 
 def build_features(
     docs: DataFrame,
     as_of: str = AS_OF,
-    shared_scan: bool = True,
     adjacency: str = "broadcast_prune",
 ) -> DataFrame:
-    """docs → canonical feature table (E2's lineage, SURVEY.md §3) —
-    SINGLE-PASS plan for scale.
+    """docs → canonical feature table (E2's lineage, SURVEY.md §3) — the
+    one feature build every pipeline, sink and oracle runs.
 
     Stages: extract → F1 validity → one wide shuffle keyed on
     coalesce(parentDocId, doc_id) carrying BOTH the A1 dedup and the X1
     quay-parent gate as windows → broadcast join of the (small) J1
     adjacency result → one conditional projection (CASE per entity_type
-    building each type's property map). F2 geometry presence folds into
-    the keep-predicate (quays follow their parent, matching the
-    reference's handle() which only checks the top-level zone).
+    building each type's property map, P6–P15). F2 geometry presence
+    folds into the keep-predicate (quays follow their parent, matching
+    the reference's handle() which only checks the top-level zone).
 
-    Scan count: with ``shared_scan`` (default) ONE extraction pass — the
-    entity frame is persisted and both the main path and the adjacency
-    build side read the cache (a global stop→type map needs a second
-    pass over the *entities* by construction — the reference buffers
-    everything for the same reason,
-    DeliveryPublicationStreamToGeoJson.java:135 — but not a second
-    parse). ``shared_scan=False`` keeps the cache-free 2-scan plan
-    (useful when the entity frame exceeds cluster storage memory and
-    the input scan is cheaper than the disk-tier round-trip). The
-    4-branch union variant cost 7 scans / 8 shuffles at 200k docs.
+    Scan count: ONE extraction pass — the entity frame is persisted and
+    both the main path and the adjacency build side read the cache (a
+    global stop→type map needs a second pass over the *entities* by
+    construction — the reference buffers everything for the same
+    reason, DeliveryPublicationStreamToGeoJson.java:135 — but not a
+    second parse). A reference-shaped plan with one branch per entity
+    type unioned at the end cost 7 scans / 8 shuffles at 200k docs.
+
+    ``adjacency`` picks J1's physical strategy (see
+    :func:`adjacency_final_types_from_aux`); both give the same rows.
 
     Output is unordered; canonical order is (section, feature_id) —
     the reference's within-section order is HashSet-nondeterministic
@@ -517,22 +381,22 @@ def build_features(
     # merges them; subexpr elimination dedups), and every operator
     # above (window, filters, join, final projection) references only
     # materialized attributes of that one projection.
-    e0 = extract_entities(docs, spans_through=False)
-    if shared_scan:
-        # One extraction pass shared by the main path and the adjacency
-        # build side: materialize the (spans-free) entity frame in the
-        # columnar block cache and derive both consumers from it.
-        # Without this the aux side re-scans the parquet + re-runs the
-        # str_to_map extraction over every doc — measured as 30% of job
-        # CPU at 10M docs, and the worst-inflating stage at 16 cores on
-        # a bandwidth-capped host (the checkpointed job gets the same
-        # effect by reading the materialized entity stage, plans/job.py).
-        # MEMORY_AND_DISK: the entity frame is ~20% the size of the raw
-        # span text; at 1.75 GB heap/core the storage pool holds it at
-        # bench scale, and the disk tier is the executor's local NVMe.
-        from pyspark.storagelevel import StorageLevel
+    #
+    # One extraction pass shared by the main path and the adjacency
+    # build side: materialize the (spans-free) entity frame in the
+    # columnar block cache and derive both consumers from it. Without
+    # this the aux side re-scans the parquet + re-runs the str_to_map
+    # extraction over every doc — measured as 30% of job CPU at 10M
+    # docs, and the worst-inflating stage at 16 cores on a
+    # bandwidth-capped host. MEMORY_AND_DISK: the entity frame is ~20%
+    # the size of the raw span text; at 1.75 GB heap/core the storage
+    # pool holds it at bench scale, and the disk tier is the executor's
+    # local NVMe.
+    from pyspark.storagelevel import StorageLevel
 
-        e0 = e0.persist(StorageLevel.MEMORY_AND_DISK)
+    e0 = extract_entities(docs, spans_through=False).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     p = F.col("props")
     et = F.col("entity_type")
@@ -606,34 +470,15 @@ def build_features(
         ).over(Window.partitionBy("_pkh", "_pkey")),
     ).filter(F.col("_valid") & F.col("_is_first"))
 
-    # Thin aux frame for the adjacency pass, rooted at e0: one extra
-    # full extract pass. Measured alternatives all lost: deriving it
-    # from the windowed frame does NOT get exchange reuse (column
-    # pruning gives each consumer a different ReadSchema, so the
-    # exchange subtrees never canonicalize equal — the plan ran the
-    # scan 4×); persist() thrashed the block manager at high
-    # parallelism. A global id→type map fundamentally needs a second
-    # pass — the reference buffers the whole registry in RAM for the
-    # same reason (DeliveryPublicationStreamToGeoJson.java:135). In
-    # the checkpointed job the aux pass reads the materialized entity
-    # stage instead (plans/job.py). Dedup is unnecessary here: the
-    # adjacency aggregation is idempotent under duplicate (id, version)
-    # rows (the reference's toMap would throw on a dup id — undefined
-    # input we tolerate).
-    # The aux projection reads only the 14 keys this pass needs (own
-    # type resolution + adjacency + validity); with the JVM extraction
-    # path Catalyst prunes the unread map lookups automatically, the
-    # explicit prop_keys just keeps the plan/schema honest.
-    if shared_scan:
-        e0_aux = validity_filter(e0, as_of)
-    else:
-        aux_keys = (*SUBMODE_KEYS, "stopPlaceType", "adjacentSites",
-                    "validFrom", "validTo")
-        e0_aux = validity_filter(
-            extract_entities(docs, prop_keys=aux_keys, spans_through=False),
-            as_of,
-        )
-    stops_aux = e0_aux.filter(
+    # Thin aux frame for the adjacency pass, read from the e0 cache.
+    # Deriving it from the windowed frame instead does NOT get exchange
+    # reuse (column pruning gives each consumer a different ReadSchema,
+    # so the exchange subtrees never canonicalize equal — that plan ran
+    # the scan 4×). Dedup is unnecessary here: the adjacency
+    # aggregation is idempotent under duplicate (id, version) rows (the
+    # reference's toMap would throw on a dup id — undefined input we
+    # tolerate).
+    stops_aux = validity_filter(e0, as_of).filter(
         (et == "StopPlace") & F.col("geom_wkt").isNotNull()
     ).select(
         "doc_id",
@@ -648,6 +493,11 @@ def build_features(
         F.col("geom_wkt").isNotNull()
     )
 
+    # P6/P7 — StopPlaceToGeoJsonFeatureMapper.java:56-91:
+    # finalStopPlaceType is submode, else stopPlaceType, overwritten by
+    # the adjacency-joined string ONLY for the primary adjacent site
+    # (:84-87); primary iff no adjacent ref is strictly greater than own
+    # id, case-insensitively (TreeSet.higher(id) == null, :79-86)
     adj_sorted = F.col("_adj_sorted")
     has_adj = adj_sorted.isNotNull() & (F.size(adj_sorted) > 0)
     is_primary = has_adj & (
@@ -676,6 +526,7 @@ def build_features(
             "isPrimaryAdjacentSite": F.when(has_adj, is_primary.cast("string")),
         }
     )
+    # P13 — QuayToGeoJsonFeatureMapper.java:45-66
     quay_map = _props_struct(
         {
             **_zone_base_entries(p, F.col("id"), "Quay"),
@@ -683,6 +534,7 @@ def build_features(
         }
     )
     parking_map = _props_struct(_parking_entries(p))
+    # P15 — TariffZoneToGeoJsonFeatureMapper.java:39-42 (zone base only)
     tz_map = _props_struct(_zone_base_entries(p, F.col("id"), "TariffZone"))
 
     return joined.filter(keep).select(

@@ -16,7 +16,10 @@ ValidityFilter.java:28-52):
 (SURVEY.md §7.3).
 
 F2 — geometry presence (DeliveryPublicationStreamToGeoJson.java:225-231):
-zones with neither centroid nor polygon are dropped.
+zones with neither centroid nor polygon are dropped. It has no filter
+here: ``enrich.build_features`` folds it into its keep-predicate (and
+the quay gate counts only parents with a geometry), so it costs no
+extra pass.
 """
 
 from __future__ import annotations
@@ -38,7 +41,3 @@ def validity_predicate(as_of: str,
 def validity_filter(entities: DataFrame, as_of: str) -> DataFrame:
     return entities.filter(validity_predicate(as_of))
 
-
-def geometry_presence_filter(entities: DataFrame,
-                             geom_col: str = "geom_wkt") -> DataFrame:
-    return entities.filter(F.col(geom_col).isNotNull())

@@ -278,7 +278,7 @@ def publish_netex_zip(spark, zip_path: str, workdir: str,
     publishing an empty FeatureCollection."""
     from ..geojson import feature_json, write_feature_collection
     from ..netex import parse_netex_zip
-    from ..operators.enrich import build_features_union
+    from ..operators.enrich import build_features
     from ..schema import DOCS
 
     if not os.path.exists(zip_path):
@@ -291,7 +291,7 @@ def publish_netex_zip(spark, zip_path: str, workdir: str,
             f"no XML deliveries inside {zip_path!r} (reference: "
             "findFirstXmlFileRecursive raises NoSuchElementException)")
     docs = spark.createDataFrame(rows, schema=DOCS)
-    features = feature_json(build_features_union(docs))
+    features = feature_json(build_features(docs))
     os.makedirs(workdir, exist_ok=True)
     out_path = os.path.join(workdir, f"{tileset}.geojson")
     n = write_feature_collection(features, out_path)

@@ -120,9 +120,18 @@ def test_adjacency_strategy_parity(spark):
     """broadcast_prune (registry-scale) and scatter_gather (web-scale)
     are physical strategies of the same J1/A3 operator — identical
     output on the fixtures AND on a generated slice with duplicate and
-    unknown refs."""
-    from asag_spark.datagen import generate_docs
+    unknown refs, and the same exact finalStopPlaceType on multi-version
+    stops: a stop id's types are the set of its valid versions' types,
+    on both sides of the edge."""
+    from asag_spark.datagen import DOCS, _doc, generate_docs
     from asag_spark.operators.enrich import build_features
+
+    def stop(n, version, stop_type, adjacent):
+        _, spans = _doc(f"NSR:StopPlace:{n}", "StopPlace", version=version,
+                        props={"stopPlaceType": stop_type,
+                               "adjacentSites": f"NSR:StopPlace:{adjacent}"},
+                        geom_wkt="POINT(10.75 59.91)")
+        return (f"d{n}v{version}", spans)
 
     for docs in (fixture_docs(spark), generate_docs(spark, 2000)):
         bp = build_features(docs, as_of=AS_OF, adjacency="broadcast_prune")
@@ -135,6 +144,29 @@ def test_adjacency_strategy_parity(spark):
         a, b = bp.select(*cols), sg.select(*cols)
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
+
+    # doc_id → finalStopPlaceType. Stops 2 and 12 are the primary
+    # adjacent sites; stop 2's ref (stop 1) has two versions, and the
+    # mirrored pair has them on the primary side (stop 12).
+    docs = spark.createDataFrame([
+        stop(2, "1", "onstreetBus", 1), stop(1, "1", "onstreetTram", 2),
+        stop(1, "2", "railStation", 2),
+        stop(11, "1", "onstreetTram", 12), stop(12, "1", "onstreetBus", 11),
+        stop(12, "2", "railStation", 11),
+    ], schema=DOCS)
+    all_three = "onstreetBus_onstreetTram_railStation"
+    want = {"d2v1": all_three, "d1v1": "onstreetTram", "d1v2": "railStation",
+            "d11v1": "onstreetTram", "d12v1": all_three, "d12v2": all_three}
+    got = [
+        build_features(docs, as_of=AS_OF, adjacency=strategy).select(
+            F.lit(strategy).alias("strategy"), "doc_id",
+            F.col("properties.finalStopPlaceType").alias("t"))
+        for strategy in ("broadcast_prune", "scatter_gather")
+    ]
+    rows = got[0].unionByName(got[1]).collect()
+    for strategy in ("broadcast_prune", "scatter_gather"):
+        assert {r["doc_id"]: r["t"] for r in rows
+                if r["strategy"] == strategy} == want
 
 
 def test_point_scientific_notation_round_trips(spark):

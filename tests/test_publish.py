@@ -136,3 +136,59 @@ def test_end_to_end_stops_zip(spark, tmp_path):
     assert fc["type"] == "FeatureCollection"
     assert len(fc["features"]) > 0
     assert r.staged_bytes == staged.stat().st_size
+
+
+def test_end_to_end_inline_zip(spark, tmp_path):
+    """The route end-to-end on a small inline delivery (one StopPlace
+    with a centroid, one Quay, one TariffZone polygon), so the success
+    path runs without the reference resources: the staged
+    FeatureCollection holds exactly build_features' rows over the same
+    parsed docs, in (section, feature_id) order."""
+    from asag_spark.geojson import feature_json
+    from asag_spark.netex import parse_netex_zip
+    from asag_spark.operators.enrich import build_features
+    from asag_spark.schema import DOCS
+
+    ns = "http://www.netex.org.uk/netex"
+    gml = "http://www.opengis.net/gml/3.2"
+    delivery = (
+        f'<PublicationDelivery xmlns="{ns}" xmlns:gml="{gml}">'
+        "<dataObjects><SiteFrame>"
+        "<stopPlaces><StopPlace id='NSR:StopPlace:1' version='2'>"
+        "<Name lang='nor'>Drangedal stasjon</Name>"
+        "<Centroid><Location><Longitude>9.071</Longitude>"
+        "<Latitude>59.097</Latitude></Location></Centroid>"
+        "<StopPlaceType>railStation</StopPlaceType>"
+        "<quays><Quay id='NSR:Quay:8' version='1'>"
+        "<Centroid><Location><Longitude>9.0712</Longitude>"
+        "<Latitude>59.0971</Latitude></Location></Centroid>"
+        "<PublicCode>1</PublicCode></Quay></quays>"
+        "</StopPlace></stopPlaces>"
+        "<tariffZones><TariffZone id='VKT:TariffZone:729' version='1'>"
+        "<Name>Drangedal</Name>"
+        "<gml:Polygon><gml:exterior><gml:LinearRing>"
+        "<gml:posList>59.0 9.0 59.2 9.0 59.2 9.2 59.0 9.0</gml:posList>"
+        "</gml:LinearRing></gml:exterior></gml:Polygon>"
+        "</TariffZone></tariffZones>"
+        "</SiteFrame></dataObjects></PublicationDelivery>"
+    )
+    z = tmp_path / "stops.zip"
+    with zipfile.ZipFile(z, "w") as zf:
+        zf.writestr("tiamat-export.xml", delivery)
+
+    t = LocalTransport(str(tmp_path / "s3"),
+                       status_script=[NOT_COMPLETE, COMPLETE])
+    r = publish_netex_zip(spark, str(z), str(tmp_path / "wd"), t,
+                          max_retries=5)
+    assert r.state == STATE_FINISHED
+    staged = tmp_path / "s3" / "staging" / "tiles" / "upload.geojson"
+    got = [(f["id"], f["properties"])
+           for f in json.loads(staged.read_text())["features"]]
+
+    docs = spark.createDataFrame(parse_netex_zip(str(z)), schema=DOCS)
+    want = [json.loads(fj) for _, _, fj in sorted(
+        feature_json(build_features(docs))
+        .select("section", "feature_id", "feature_json").collect())]
+    assert got == [(f["id"], f["properties"]) for f in want]
+    assert [i for i, _ in got] == [
+        "NSR:Quay:8", "NSR:StopPlace:1", "VKT:TariffZone:729"]
