@@ -262,154 +262,6 @@ def _q_zone_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
-            "n", "sum_qty",
-        )
-    )
-
-
-def _q_sorted_stragg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.array_join(
-                F.array_sort(F.collect_set("c_mktsegment")), "_"
-            ).alias("segments")
-        )
-    )
-
-
-def _q1_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-def _q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    rev = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("o_orderkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-    return rev.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc()).limit(10)
-
-
-def _q5_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def _q_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("o_custkey", "o_orderkey", F.col("rn").cast("int").alias("rn"))
-    )
-
-
-def _q_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti").select("c_custkey")
-
-
-def _q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
-            "n",
-        )
-    )
-
-
-def _q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    return (
-        c.select(F.col("c_nationkey").cast("int").alias("nationkey"))
-        .union(s.select(F.col("s_nationkey").cast("int").alias("nationkey")))
-        .distinct()
-    )
-
-
-def _q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = d.select(
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token")
-    )
-    return (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("token").asc())
-        .limit(20)
-    )
-
-
-def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.groupBy(
-            F.date_trunc("hour", "ts").alias("hour_start"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
 def _q_asof_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.events import asof_join_window
 
@@ -426,68 +278,6 @@ def _q_topk_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.events import topk_per_user
 
     return topk_per_user(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentile aggregation (sort-based; Spark `percentile` and
-    DuckDB `quantile_cont` share linear interpolation)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.expr("percentile(l_quantity, 0.5)"), 2).alias("med_qty"),
-        F.round(F.expr("percentile(l_quantity, 0.9)"), 2).alias("p90_qty"),
-        F.round(F.expr("percentile(l_extendedprice, 0.99)"), 2).alias("p99_price"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def _q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (wide aggregation) with a pinned value list — at scale the
-    value list MUST be explicit or Spark runs a distinct scan first."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-        .select(
-            "l_returnflag",
-            F.col("F").alias("qty_f"),
-            F.col("O").alias("qty_o"),
-        )
-    )
-
-
-def _q_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (price above per-type average),
-    re-expressed as a broadcast aggregate join — the scalable plan."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    avg_t = p.groupBy("p_type").agg(F.avg("p_retailprice").alias("avg_rp"))
-    return (
-        p.join(F.broadcast(avg_t), "p_type")
-        .filter(F.col("p_retailprice") > F.col("avg_rp"))
-        .groupBy("p_type")
-        .agg(F.count(F.lit(1)).alias("n_above"))
-    )
-
-
-def _q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile window bucketing per nation + per-bucket rollup."""
-    from pyspark.sql import Window
-
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey").asc()
-    )
-    return (
-        c.select(
-            "c_nationkey", "c_acctbal",
-            F.ntile(4).over(w).alias("bucket"),
-        )
-        .groupBy("c_nationkey", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("c_acctbal"), 2).alias("sum_bal"),
-        )
-    )
 
 
 def _g_compact_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1686,12 +1476,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_kmv_distinct": _t_kmv_distinct,
         # round-3 training-data additions (live SQL oracles): sequence
         # packing (two-phase global prefix sum), deterministic
-        # stratified sampling, train/test decontamination — promoted
-        # into the 50 in place of three redundant relational demos
-        # (q_cube / q1_agg / q5_multijoin, now in demoted_queries()
-        # with the same oracles; grouping/agg/join families stay
-        # represented live by zone_cover_stats, t_corpus_stats and the
-        # pip/knn/adjacency joins)
+        # stratified sampling, train/test decontamination
         "t_seq_pack": _t_seq_pack,
         "t_stratified_sample": _t_stratified,
         "t_contamination": _t_contamination,
@@ -1729,40 +1514,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def demoted_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Redundant relational demos demoted from the 50-entry driver
-    registry (each op family keeps a representative above: grouping →
-    q_cube, windows → q_window_topk, as-of → q_asof_window, raster →
-    rasterize/polygon_raster fixtures). Still correctness-gated:
-    tests/test_demoted_oracles.py runs each against its DuckDB oracle,
-    and tools/check_oracles.py covers both registries."""
+    """Engine operators demoted from the 50-entry driver registry
+    (each op family keeps a representative above: as-of →
+    q_asof_window, raster → rasterize/polygon_raster fixtures). Still
+    correctness-gated: tests/test_demoted_oracles.py runs each against
+    its DuckDB oracle, and tools/check_oracles.py covers both
+    registries."""
     return {
-        # demoted round 2 to make room for t_ivf_topk: its oracle is
-        # the same hourly aggregation s_hourly_stream still carries in
-        # the live registry (availableNow batch-parity)
-        "q_events_hourly": _q_events_hourly,
-        # demoted round 2 for t_dedup_clusters: sorted string-agg stays
-        # represented by adjacency_types (A3) and q_cube (grouping)
-        "q_sorted_stragg": _q_sorted_stragg,
-        # demoted round 2 for t_tfidf_top / t_corpus_stats: the window
-        # family keeps q_asof_window + q_sessionize (+ tfidf's own
-        # rank window); exact percentiles stay exercised by
-        # t_corpus_stats itself
-        "q_window_topk": _q_window,
-        # demoted round 2: token explode is exercised end-to-end by
-        # t_tfidf_top / t_token_count / the shingle family
-        "q_explode_tokens": _q_explode_tokens,
-        # demoted round 2 for t_kmv_distinct: join+agg+topk stays
-        # represented by q5_multijoin / t_tfidf_top's rank window
-        "q3_topk": _q3_topk,
-        "q_anti_join": _q_anti,
-        "q_rollup": _q_rollup,
-        "q_union_distinct": _q_union_distinct,
         "q_asof_pandas": _q_asof_pandas,
         "q_topk_per_user": _q_topk_user,
-        "q_percentiles": _q_percentiles,
-        "q_pivot": _q_pivot,
-        "q_above_avg": _q_above_avg,
-        "q_ntile": _q_ntile,
         "q_xyz_raster": _q_xyz_raster,
         "q_xyz_vectorize": _q_xyz_vectorize,
         # streaming dedup: replay-duplicated input -> exactly-once set
@@ -1771,13 +1531,6 @@ def demoted_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # deterministic train/val/test split (hash-bucketed, stable
         # under appends and across engines)
         "t_split_assign": _t_split_assign,
-        # demoted round 3 for t_seq_pack / t_stratified_sample /
-        # t_contamination: TPC-H-style demos whose operator families
-        # (grouping sets, hash agg, multiway join) stay represented
-        # live (zone_cover_stats, t_corpus_stats, pip/knn/adjacency)
-        "q_cube": _q_cube,
-        "q1_agg": _q1_agg,
-        "q5_multijoin": _q5_multijoin,
         # round-3 addition: bounded-interval range join (time-bucketed
         # equi-join, not a nested-loop) — as-of stays live via
         # q_asof_window, so the range variant rides here, same oracle
@@ -3419,37 +3172,6 @@ FROM h
             WINDOW w AS (PARTITION BY event_type ORDER BY hour_start
                          ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
         """,
-        "q_percentiles": """
-            SELECT l_returnflag,
-                   ROUND(quantile_cont(l_quantity, 0.5), 2) AS med_qty,
-                   ROUND(quantile_cont(l_quantity, 0.9), 2) AS p90_qty,
-                   ROUND(quantile_cont(l_extendedprice, 0.99), 2) AS p99_price,
-                   COUNT(*) AS n
-            FROM lineitem GROUP BY 1
-        """,
-        "q_pivot": """
-            SELECT l_returnflag,
-                   ROUND(SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_f,
-                   ROUND(SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o
-            FROM lineitem GROUP BY 1
-        """,
-        "q_above_avg": """
-            SELECT p_type, COUNT(*) AS n_above FROM (
-              SELECT p_type, p_retailprice,
-                     AVG(p_retailprice) OVER (PARTITION BY p_type) AS avg_rp
-              FROM part
-            ) WHERE p_retailprice > avg_rp GROUP BY 1
-        """,
-        "q_ntile": """
-            SELECT c_nationkey, bucket, COUNT(*) AS n,
-                   ROUND(SUM(c_acctbal), 2) AS sum_bal
-            FROM (
-              SELECT c_nationkey, c_acctbal,
-                     NTILE(4) OVER (PARTITION BY c_nationkey
-                                    ORDER BY c_acctbal DESC, c_custkey ASC) AS bucket
-              FROM customer
-            ) GROUP BY 1, 2
-        """,
         "s_hourly_stream": """
             SELECT date_trunc('hour', ts) AS hour_start, event_type,
                    COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
@@ -3496,75 +3218,6 @@ FROM h
               ('VKT:TariffZone:730', 62779724.0, 30903.0, 11)
             ) AS t(zone_id, area_m2, perimeter_m, n_vertices)
         """,
-        "q_cube": """
-            SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-                   COALESCE(l_linestatus, 'ALL') AS ls,
-                   COUNT(*) AS n, ROUND(SUM(l_quantity), 2) AS sum_qty
-            FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        """,
-        "q_sorted_stragg": """
-            SELECT n_name,
-                   string_agg(DISTINCT c_mktsegment, '_' ORDER BY c_mktsegment) AS segments
-            FROM customer JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "q1_agg": """
-            SELECT l_returnflag, l_linestatus,
-                   ROUND(SUM(l_quantity), 2) AS sum_qty,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   COUNT(*) AS n
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "q3_topk": """
-            SELECT o_orderkey,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            GROUP BY o_orderkey
-            ORDER BY revenue DESC, o_orderkey ASC
-            LIMIT 10
-        """,
-        "q5_multijoin": """
-            SELECT r_name, n_name,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   COUNT(*) AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey  = o_orderkey
-            JOIN customer ON o_custkey   = c_custkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            GROUP BY r_name, n_name
-        """,
-        "q_window_topk": """
-            SELECT o_custkey, o_orderkey, CAST(rn AS INTEGER) AS rn FROM (
-              SELECT o_custkey, o_orderkey,
-                     ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                        ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-              FROM orders
-            ) WHERE rn <= 2
-        """,
-        "q_anti_join": """
-            SELECT c_custkey FROM customer
-            WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        """,
-        "q_rollup": """
-            SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-                   COALESCE(l_linestatus, 'ALL') AS ls,
-                   COUNT(*) AS n
-            FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        """,
-        "q_union_distinct": """
-            SELECT CAST(c_nationkey AS INTEGER) AS nationkey FROM customer
-            UNION
-            SELECT CAST(s_nationkey AS INTEGER) AS nationkey FROM supplier
-        """,
-        "q_explode_tokens": """
-            SELECT token, COUNT(*) AS cnt FROM (
-              SELECT UNNEST(string_split_regex(trim(lower(text)), '\\s+')) AS token
-              FROM documents
-            ) GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 20
-        """,
         # DISTINCT, not SELECT * — independent of event_id uniqueness
         # in the fixture (identical replayed rows collapse either way)
         "s_dedup_stream": "SELECT DISTINCT * FROM events",
@@ -3579,11 +3232,6 @@ FROM h
                       / 1152921504606846976.0) AS u
               FROM documents
             )
-        """,
-        "q_events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour_start, event_type,
-                   COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
-            FROM events GROUP BY 1, 2
         """,
         "q_asof_window": """
             SELECT p.event_id, p.user_id, p.ts, b.ts AS matched_ts

@@ -147,23 +147,3 @@ def cell_level(cell_id: int) -> int:
 
 
 COVER_LEVELS = (10, 12, 14, 16)
-
-
-def cover_point(lon: np.ndarray, lat: np.ndarray,
-                levels: tuple[int, ...] = COVER_LEVELS) -> list[list[str]]:
-    """Multi-level covering tokens per point (a point's 'cover' is its
-    ancestor chain — cheap and exact)."""
-    leafs = leaf_cell_id(lon, lat)
-    per_level = [token(parent_id(leafs, lv)) for lv in levels]
-    return [list(t) for t in zip(*per_level)]
-
-
-def cover_point_joined(leafs: np.ndarray,
-                       levels: tuple[int, ...] = COVER_LEVELS) -> np.ndarray:
-    """Ancestor-cover tokens '|'-joined per point — a flat string array
-    (cheap Arrow transfer; split back to array<string> JVM-side)."""
-    per_level = [token(parent_id(leafs, lv)).astype("U16") for lv in levels]
-    out = per_level[0]
-    for nxt in per_level[1:]:
-        out = np.char.add(np.char.add(out, "|"), nxt)
-    return out.astype(object)

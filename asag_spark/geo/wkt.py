@@ -1,29 +1,16 @@
 """Vectorized WKT geometry helpers (numpy; used inside Arrow pandas UDFs).
 
-shapely is not available in this container, so the two WKT kinds the
-reference produces (Point from a centroid, Polygon exterior ring —
-ZoneToGeoJsonFeatureMapper.java:76-112; interior rings intentionally
-unsupported, matching the reference's no-holes semantics) are parsed
-here. Parsing happens only inside Arrow-batched UDFs — never per-row
-Python at the DataFrame layer.
+shapely is not available in this container, so the polygon WKT the
+reference produces (exterior ring only — ZoneToGeoJsonFeatureMapper
+.java:76-112; interior rings intentionally unsupported, matching the
+reference's no-holes semantics) is parsed here; POINT WKT is parsed
+JVM-side (enrich.point_lon / point_lat). Parsing happens only inside
+Arrow-batched UDFs — never per-row Python at the DataFrame layer.
 """
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
-
-_POINT_RE = re.compile(r"POINT\s*\(\s*([-\d.eE+]+)\s+([-\d.eE+]+)\s*\)")
-
-
-def parse_points(wkt: "pd.Series") -> tuple[np.ndarray, np.ndarray]:  # noqa: F821
-    """Series of 'POINT(lon lat)' → (lon, lat) float64 arrays (NaN on miss)."""
-    ext = wkt.str.extract(_POINT_RE, expand=True)
-    return (
-        ext[0].astype("float64").to_numpy(),
-        ext[1].astype("float64").to_numpy(),
-    )
 
 
 def parse_polygon(wkt: str) -> np.ndarray:

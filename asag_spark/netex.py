@@ -415,14 +415,6 @@ def parse_netex_zip(path: str) -> list[tuple[str, list]]:
     return rows
 
 
-def docs_from_netex(spark, source) -> "DataFrame":  # noqa: F821
-    """Docs DataFrame from one delivery file (driver-side parse —
-    fixture-scale ingestion)."""
-    from .schema import DOCS
-
-    return spark.createDataFrame(parse_publication_delivery(source), schema=DOCS)
-
-
 def docs_from_netex_files(spark, paths_glob: str) -> "DataFrame":  # noqa: F821
     """Distributed ingestion: one NeTEx delivery (or zip) per file via
     binaryFile scan; each file parses independently inside an Arrow

@@ -20,9 +20,9 @@ proven scale pieces:
      pair is produced exactly once (the pair's cell offset (dx, dy)
      is unique, and id_a < id_b kills the mirror);
   2. connected components from the dedup family
-     (operators/dedup.dedup_clusters: min-label propagation, exact
-     termination, O(diameter) rounds — or the O(log n) star variant
-     for adversarial chains).
+     (operators/dedup.dedup_clusters: a driver-side numpy closure up
+     to CLOSURE_COLLECT_MAX_EDGES edges, min-label propagation with
+     exact termination in O(diameter) rounds above it).
 
 Distance is PLANAR in coordinate units ((dlon^2 + dlat^2) <= eps^2) —
 pure +,-,*: every intermediate is a deterministic IEEE double, so a

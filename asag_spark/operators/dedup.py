@@ -650,9 +650,7 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 25,
     bounds adversarial chains and non-convergence raises rather than
     returning silently-wrong labels. localCheckpoint() truncates plan
     lineage each round (25 chained joins would bloat analysis and
-    recompute; ContextCleaner reclaims dropped round RDDs). For
-    pathological diameters use ``dedup_clusters_star`` below —
-    O(log n) contraction rounds, parity-tested against this one.
+    recompute; ContextCleaner reclaims dropped round RDDs).
     Deterministic at any parallelism: min() is order-invariant."""
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -717,130 +715,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 25,
     if not converged:
         raise RuntimeError(
             f"dedup_clusters: not converged after {max_iter} rounds "
-            "(graph diameter exceeds max_iter — raise it, or use "
-            "dedup_clusters_star, the O(log n)-round contraction)"
+            "(the graph diameter exceeds max_iter — raise max_iter)"
         )
     return labels
-
-
-def _edge_checksum(edges: DataFrame):
-    """(count, xor-free order-invariant hash) of a canonical edge set —
-    the cheap fixpoint test for star contraction."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # XOR, not SUM: order-invariant AND overflow-free under ANSI
-        # (a long-sum of 64-bit hashes overflows and throws)
-        F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
-def dedup_clusters_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") — the O(log n)-round path for PATHOLOGICAL diameters
-    where min-label propagation's O(diameter) rounds would hurt; both
-    produce identical (doc_id, cluster_id = component-min) labels and
-    are parity-tested against each other and brute-force union-find.
-
-    Per round (each a couple of narrow shuffles over the shrinking
-    edge set):
-      large-star: per node u, m = min(N(u) ∪ {u}); every LARGER
-        neighbor v > u re-links to m.
-      small-star: per node u over its smaller neighbors S (edges keyed
-        to the larger endpoint), m = min(S); relink S ∪ {u} to m.
-    Fixpoint = the canonical edge set stops changing (order-invariant
-    count+hash checksum); the converged graph is a star per component,
-    read out directly as labels (roots label themselves)."""
-    edges = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("a"),
-            F.least("doc_a", "doc_b").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    converged = False
-    sig = _edge_checksum(edges)
-    for _ in range(max_iter):
-        # large-star over the symmetrized view
-        sym = edges.select("a", "b").union(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = sym.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
-        )
-        ls = (
-            sym.filter(F.col("b") > F.col("a"))
-            .join(mins, "a")
-            .select(
-                F.col("b").alias("a"), F.col("m").alias("b")
-            )  # v > u ≥ m ⇒ already (larger, smaller)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            # materialize: ls feeds BOTH smins and the relink join —
-            # unmaterialized, the whole sym-join/distinct subtree plans
-            # twice per round and reuse depends on ReusedExchange
-            # canonicalization
-            .localCheckpoint()
-        )
-        # small-star: edges keyed to the larger endpoint (ls rows
-        # already are (larger, smaller)); relink each node's
-        # smaller-neighborhood S to m = min(S), and u itself to m
-        smins = ls.groupBy("a").agg(F.min("b").alias("m"))
-        ss = (
-            ls.join(smins, "a")
-            .select(
-                F.greatest("b", "m").alias("a"), F.least("b", "m").alias("b")
-            )
-            .union(smins.select(F.col("a"), F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = _edge_checksum(ss)
-        prev = edges
-        edges = ss
-        if new_sig == sig:
-            # checksum equality is necessary but (at 2^-64) not
-            # sufficient — a colliding different edge set would stop
-            # contraction early and return silently-wrong labels
-            # (ADVICE r02). Confirm exactly once at the candidate
-            # fixpoint: both sets are distinct and counts match (the
-            # checksum carries the count), so one-sided exceptAll
-            # emptiness ⟺ set equality. Cost: one extra join-sized
-            # pass at convergence only, never per round.
-            if ss.exceptAll(prev).isEmpty():
-                converged = True
-                break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters_star: no fixpoint after {max_iter} rounds"
-        )
-    # converged star: every edge is (node, component-min); roots appear
-    # only on the b side and label themselves
-    labels = edges.select(
-        F.col("a").alias("doc_id"), F.col("b").alias("cluster_id")
-    )
-    roots = (
-        edges.select(F.col("b").alias("doc_id"))
-        .distinct()
-        .join(labels.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    labeled = labels.union(roots)
-    # parity with dedup_clusters on degenerate input: a node whose only
-    # pair is a self-pair (x, x) has no surviving edge but IS in the
-    # pair graph — label it to itself rather than dropping the row
-    isolated = (
-        pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
-        .distinct()
-        .join(labeled.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    return labeled.union(isolated)
 
 
 def paragraph_dedup(

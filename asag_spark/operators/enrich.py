@@ -9,13 +9,17 @@ program. Everything is built-in ``pyspark.sql.functions`` — no UDFs —
 so Catalyst prunes/pushes and whole-stage codegen covers the whole
 projection.
 
-Scale notes (100 TB design):
-* J1's build side is ``stops.select(id, own_type)`` — two thin columns.
-  Even at 10^9 stops that's tens of GB, so at true web scale the hint
-  degrades gracefully: we keep the explicit ``broadcast()`` for the
-  registry-sized case the reference serves (~10^5 stops) and rely on
-  AQE to fall back to shuffled hash join past
-  ``spark.sql.autoBroadcastJoinThreshold``.
+Scale notes:
+* J1 runs on explicit ``broadcast()`` hints, and a hint overrides
+  ``spark.sql.autoBroadcastJoinThreshold`` — there is no fallback to a
+  shuffled join. Three thin frames go through the driver: the
+  distinct adjacent refs (O(distinct refs)), the referenced stops'
+  ``(id, own_type)`` rows (O(distinct refs) × versions), and J1's
+  result, joined back in :func:`build_features` (O(stops with
+  adjacentSites)). At the reference's registry scale (~10^5 stops,
+  ~1/25 with adjacentSites) these are thousands of rows. The plan
+  stops working where they outgrow the driver's memory or
+  ``spark.sql.maxBroadcastTableSize``, whatever the stop table's size.
 * The feature build's shuffles: one window exchange keyed on
   ``(xxhash64(_pkey), _pkey)`` that carries both the A1 dedup and the
   X1 quay gate, and the adjacency aggregations over rows that HAVE
@@ -171,18 +175,12 @@ def adjacent_sites_sorted(props: Column) -> Column:
     )
 
 
-def adjacency_final_types_from_aux(
-    stops_aux: DataFrame, strategy: str = "broadcast_prune"
-) -> DataFrame:
+def adjacency_final_types_from_aux(stops_aux: DataFrame) -> DataFrame:
     """J1/A3 over the thin aux frame (id, own_type, adj_sorted) — see
     adjacency_final_types for semantics/citations.
 
-    Two physical strategies, same output (tests/test_features.py
-    asserts parity):
-
-    ``broadcast_prune`` (default — the registry-scale plan): the edge
-    set (stops WITH adjacentSites × refs) is a few % of stops
-    (FIXTURES.md §3 rate 1/25), so the referenced-id set is tiny.
+    The edge set (stops WITH adjacentSites × refs) is a few % of stops
+    (FIXTURES.md §3 rate 1/25), so the referenced-id set is small:
 
     1. ``edges`` = explode(adj_sorted) over the adj-bearing stops;
     2. broadcast ``distinct(ref)`` and LEFT-SEMI join the full stop
@@ -192,98 +190,23 @@ def adjacency_final_types_from_aux(
     3. broadcast the pruned ``(id, own_type)`` result and left-join
        the edges; groupBy(id) over O(|edges|) rows only.
 
-    Measured at 10M docs / 16 pinned cores: 3.2 s vs 6.5 s for the
-    scatter-gather below — the full-stop-table exchange (a type row
-    per stop, ~60 B × n_stops) disappears; what remains is two cache
-    scans plus broadcasts of ~|edges| thin rows. The broadcast chain
-    serializes ~tens of MB through the driver at registry scale
-    (10^5-10^7 stops); past ~10^8 stops the ref set outgrows the
-    driver and ``scatter_gather`` is the right physical choice — the
-    caller flips the strategy, the semantics are identical.
-
-    ``scatter_gather`` (the web-scale plan — no broadcast, no driver
-    materialization, fully parallel at any size): every aux row is
-    scanned ONCE and scattered as thin rows keyed so that an edge
-    meets its referenced stop's type row in the same reduce group:
-
-    1. scatter: per stop emit one *type row* (key=id, probe=null) and,
-       per adjacent ref, one *edge row* (key=ref, probe=own id) — a
-       single ``explode`` over a per-row built array, still one scan;
-    2. gather 1 (exchange on key): hash-aggregate resolves each edge's
-       ref to the set of the group's type rows (one per version).
-       Unknown refs resolve to nothing (the reference's
-       Optional.ifPresent, DeliveryPublicationStreamToGeoJson.java:
-       153-154);
-    3. gather 2 (exchange on probe, O(|edges|) rows only): union the
-       resolved types with the probe's own types, sort, '_'-join.
-
-    Both exchanges carry 3 thin string columns; ~60 B/row at any
-    scale. Duplicate (id, version) rows need no pre-dedup under either
-    strategy: collect_set is idempotent under duplicates, and several
-    versions of one id fold by the rule in :func:`_adjacency_fold` (the
-    reference's toMap would throw on a dup id — undefined input we
-    tolerate).
+    Both broadcasts pass through the driver: O(distinct refs) and
+    O(referenced stops) thin rows (module docstring). Duplicate
+    (id, version) rows need no pre-dedup: collect_set is idempotent
+    under duplicates, and several versions of one id fold by the rule
+    in :func:`_adjacency_fold` (the reference's toMap would throw on a
+    dup id — undefined input we tolerate).
     """
-    if strategy == "broadcast_prune":
-        edges = stops_aux.filter(F.size("adj_sorted") > 0).select(
-            "id", "own_type", F.explode("adj_sorted").alias("ref")
-        )
-        ref_ids = edges.select("ref").distinct()
-        ref_types = stops_aux.join(
-            F.broadcast(ref_ids), stops_aux["id"] == ref_ids["ref"], "left_semi"
-        ).select(F.col("id").alias("_rid"), F.col("own_type").alias("ref_type"))
-        resolved = edges.join(
-            F.broadcast(ref_types), edges["ref"] == F.col("_rid"), "left"
-        ).select("id", "own_type", "ref_type")
-        return _adjacency_fold(resolved)
-
-    scattered = stops_aux.select(
-        F.explode(
-            F.array_append(
-                F.transform(
-                    F.coalesce(
-                        F.col("adj_sorted"),
-                        F.array().cast("array<string>"),
-                    ),
-                    lambda r: F.struct(
-                        r.alias("key"),
-                        F.col("id").alias("probe"),
-                        F.col("own_type").alias("own_type"),
-                    ),
-                ),
-                F.struct(
-                    F.col("id").alias("key"),
-                    F.lit(None).cast("string").alias("probe"),
-                    F.col("own_type").alias("own_type"),
-                ),
-            )
-        ).alias("x")
-    ).select("x.key", "x.probe", "x.own_type")
-
-    # gather 1 resolves each ref to the set of its versions' types; an
-    # unknown ref resolves to the empty set, and explode_outer keeps its
-    # edge row so the probe's own type still reaches the fold
-    resolved = (
-        scattered.groupBy("key")
-        .agg(
-            F.collect_set(
-                F.when(F.col("probe").isNull(), F.col("own_type"))
-            ).alias("ref_types"),
-            F.collect_list(
-                F.when(
-                    F.col("probe").isNotNull(),
-                    F.struct(F.col("probe"), F.col("own_type")),
-                )
-            ).alias("edges"),
-        )
-        .filter(F.size("edges") > 0)
-        .select(F.explode("edges").alias("e"), "ref_types")
-        .select(
-            F.col("e.probe").alias("id"),
-            F.col("e.own_type").alias("own_type"),
-            F.explode_outer("ref_types").alias("ref_type"),
-        )
+    edges = stops_aux.filter(F.size("adj_sorted") > 0).select(
+        "id", "own_type", F.explode("adj_sorted").alias("ref")
     )
+    ref_ids = edges.select("ref").distinct()
+    ref_types = stops_aux.join(
+        F.broadcast(ref_ids), stops_aux["id"] == ref_ids["ref"], "left_semi"
+    ).select(F.col("id").alias("_rid"), F.col("own_type").alias("ref_type"))
+    resolved = edges.join(
+        F.broadcast(ref_types), edges["ref"] == F.col("_rid"), "left"
+    ).select("id", "own_type", "ref_type")
     return _adjacency_fold(resolved)
 
 
@@ -292,13 +215,13 @@ def _adjacency_fold(resolved: DataFrame) -> DataFrame:
     the id's types ∪ the found ref types, distinct, sorted, '_'-joined
     (A3 — DeliveryPublicationStreamToGeoJson.java:150-159).
 
-    Multi-version rule, the same under both strategies: a stop id's
-    types are the set of its valid versions' types. On the ref side
-    every version of the referenced id contributes its type; on the
-    probe side every version that carries the edge contributes its own
-    type, so every version of a stop that carries adjacentSites gets
-    the same string. collect_set drops null ref_types, so unresolved
-    refs contribute nothing (Optional.ifPresent, :153-154)."""
+    Multi-version rule: a stop id's types are the set of its valid
+    versions' types. On the ref side every version of the referenced
+    id contributes its type; on the probe side every version that
+    carries the edge contributes its own type, so every version of a
+    stop that carries adjacentSites gets the same string. collect_set
+    drops null ref_types, so unresolved refs contribute nothing
+    (Optional.ifPresent, :153-154)."""
     return resolved.groupBy("id").agg(
         F.array_join(
             F.array_sort(
@@ -309,9 +232,7 @@ def _adjacency_fold(resolved: DataFrame) -> DataFrame:
     )
 
 
-def adjacency_final_types(
-    stops: DataFrame, strategy: str = "broadcast_prune"
-) -> DataFrame:
+def adjacency_final_types(stops: DataFrame) -> DataFrame:
     """J1/A3 — per stop with adjacentSites: probe every ref against the
     broadcast ``id → ownType`` map, union the found types with the own
     type, sort, '_'-join (DeliveryPublicationStreamToGeoJson.java:135,
@@ -326,16 +247,12 @@ def adjacency_final_types(
         own_stop_type(F.col("props")).alias("own_type"),
         adjacent_sites_sorted(F.col("props")).alias("adj_sorted"),
     )
-    return adjacency_final_types_from_aux(aux, strategy=strategy)
+    return adjacency_final_types_from_aux(aux)
 
 
 # -- the flagship pipeline ---------------------------------------------------
 
-def build_features(
-    docs: DataFrame,
-    as_of: str = AS_OF,
-    adjacency: str = "broadcast_prune",
-) -> DataFrame:
+def build_features(docs: DataFrame, as_of: str = AS_OF) -> DataFrame:
     """docs → canonical feature table (E2's lineage, SURVEY.md §3) — the
     one feature build every pipeline, sink and oracle runs.
 
@@ -354,9 +271,6 @@ def build_features(
     reason, DeliveryPublicationStreamToGeoJson.java:135 — but not a
     second parse). A reference-shaped plan with one branch per entity
     type unioned at the end cost 7 scans / 8 shuffles at 200k docs.
-
-    ``adjacency`` picks J1's physical strategy (see
-    :func:`adjacency_final_types_from_aux`); both give the same rows.
 
     Output is unordered; canonical order is (section, feature_id) —
     the reference's within-section order is HashSet-nondeterministic
@@ -486,7 +400,7 @@ def build_features(
         own_stop_type(F.col("props")).alias("own_type"),
         adjacent_sites_sorted(F.col("props")).alias("adj_sorted"),
     )
-    adj = adjacency_final_types_from_aux(stops_aux, strategy=adjacency)
+    adj = adjacency_final_types_from_aux(stops_aux)
     joined = gated.join(F.broadcast(adj), "id", "left")
 
     keep = F.when(et == "Quay", F.col("_parent_ok") == 1).otherwise(

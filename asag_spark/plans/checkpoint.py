@@ -67,13 +67,17 @@ class CheckpointedPipeline:
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
         out = self.spark.read.parquet(data_dir)
+        # count per source part file, not per read split: the reader
+        # packs small files into one split, so spark_partition_id()
+        # would merge output partitions. part-NNNNN is the write task's
+        # partition id.
         metrics = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
+            out.groupBy(F.col("_metadata.file_name").alias("file"))
             .agg(F.count(F.lit(1)).alias("row_count"))
             .select(
                 F.lit(stage).alias("stage"),
-                F.col("partition_id").cast("int"),
+                F.regexp_extract("file", r"^part-(\d+)", 1)
+                .cast("int").alias("partition_id"),
                 F.col("row_count").cast("long"),
                 F.lit(fp).alias("input_fingerprint"),
                 F.lit(wall_ms).cast("long").alias("wall_ms"),

@@ -27,10 +27,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # Norway-ish bbox used for deterministic coordinate derivation
 _LON0, _LON1 = 4.5, 31.0
 _LAT0, _LAT1 = 57.9, 71.2
@@ -373,9 +369,8 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
     a prefix char no cast emits) and column-order-canonical (names
     sorted), so reordered schemas diff identically. A hash equality
     standing in for value equality accepts the 2^-64 collision
-    false-"unchanged" — the same documented trade as
-    dedup_clusters_star's checksum, and callers needing certainty can
-    pass compare_cols and join the flagged keys back.
+    false-"unchanged"; callers needing certainty can pass compare_cols
+    and join the flagged keys back.
 
     Plan shape at 100 TB: ONE full outer join keyed by the primary
     key; each side is first reduced map-side to (key, row_hash) — the

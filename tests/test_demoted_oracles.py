@@ -1,11 +1,10 @@
 """Correctness gate for the demoted query registry.
 
 The driver checks the first 50 entries of __spark_entry__.queries();
-the redundant relational demos were moved to demoted_queries() to make
-room for the dedup/ANN/media family (VERDICT r01). They keep the SAME
-oracle discipline here: each runs against its DuckDB oracle with the
-driver's compare (row count, column set, order-insensitive value
-hash) at the test scale factor.
+engine operators past that window ride in demoted_queries() (VERDICT
+r01). They keep the SAME oracle discipline here: each runs against
+its DuckDB oracle with the driver's compare (row count, column set,
+order-insensitive value hash) at the test scale factor.
 """
 
 import hashlib

@@ -3,6 +3,7 @@
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from asag_spark.plans.checkpoint import CheckpointedPipeline
@@ -171,6 +172,21 @@ def test_checkpoint_resume(spark, sf_dir, tmp_path):
     make(p4)
     assert calls == {"a": 2, "b": 3}
     assert [s["resumed"] for s in p4.stage_log] == [True, False]
+
+    # one metrics row per output part file, even where the reader packs
+    # small files into fewer splits; partition i holds i + 1 rows
+    p4.run_stage("stage_c", lambda: spark.range(0, 400, 1, 8).filter(
+        F.col("id") % 50 <= F.floor(F.col("id") / 50)))
+    data_dir = os.path.join(workdir, "stage_c", "data")
+    footers = {
+        int(f.split("-")[1]): pq.ParquetFile(os.path.join(data_dir, f))
+        .metadata.num_rows
+        for f in os.listdir(data_dir) if f.startswith("part-")
+    }
+    m = spark.read.parquet(os.path.join(workdir, "stage_c", "metrics")).collect()
+    got = {r["partition_id"]: r["row_count"] for r in m}
+    assert len(m) == len(footers) == 8
+    assert got == footers == {i: i + 1 for i in range(8)}
 
 
 def test_sessionize_stateful_cross_batch(spark, sf_dir, tmp_path):

@@ -957,12 +957,14 @@ def test_split_assign_stable_under_append(spark):
 
 
 def test_star_contraction_parity(spark):
-    """dedup_clusters_star == dedup_clusters == brute union-find on
-    seeded random graphs (chains, cliques, sparse forests), plus the
-    deep-chain case where star contraction's O(log n) rounds matter."""
+    """dedup_clusters == brute union-find on seeded random graphs
+    (chains, cliques, sparse forests, a star, a self-pair node) through
+    both gated paths: the default driver closure on every case, the
+    distributed min-label propagation (collect_max_edges=0) on every
+    case but the 60-edge deep chain."""
     import random
 
-    from asag_spark.operators.dedup import dedup_clusters, dedup_clusters_star
+    from asag_spark.operators.dedup import dedup_clusters
 
     def brute(edges, nodes):
         parent = {n: n for n in nodes}
@@ -980,34 +982,37 @@ def test_star_contraction_parity(spark):
         return {n: find(n) for n in nodes}
 
     rng = random.Random(99)
-    cases = []  # (edges, check_min_label_too)
+    cases = []  # (edges, run_distributed_too)
     for trial in range(4):
         n = rng.randrange(20, 70)
         m = rng.randrange(n // 2, 2 * n)
         cases.append(
             ([(rng.randrange(n), rng.randrange(n)) for _ in range(m)], True)
         )
-    # deep chain: star's O(log n) arm only — min-label would burn ~60
-    # sequential Spark rounds here for no extra coverage (its
+    # deep chain: driver closure only — min-label propagation would
+    # burn ~60 sequential Spark rounds here for no extra coverage (its
     # O(diameter) behavior is already pinned by the depth-15 chain)
     cases.append(([(i, i + 1) for i in range(60)], False))
     cases.append(([(i, i + 1) for i in range(15)], True))
     cases.append(([(0, i) for i in range(1, 40)], True))   # star
     cases.append(([(7, 7), (1, 2), (2, 3)], True))          # self-pair node
-    for edges, check_min in cases:
+    for edges, distributed in cases:
         nodes = {x for e in edges for x in e}
         real = [(a, b) for a, b in edges if a != b]
         if not real:
             continue
         want = brute(real, nodes)
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got_star = {r.doc_id: r.cluster_id
-                    for r in dedup_clusters_star(pairs).collect()}
-        assert got_star == want, (sorted(got_star.items())[:8], sorted(want.items())[:8])
-        if check_min:
-            got_min = {r.doc_id: r.cluster_id
-                       for r in dedup_clusters(pairs, max_iter=30).collect()}
-            assert got_min == want
+        got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()}
+        assert got == want, (sorted(got.items())[:8], sorted(want.items())[:8])
+        if distributed:
+            got_dist = {
+                r.doc_id: r.cluster_id
+                for r in dedup_clusters(
+                    pairs, max_iter=30, collect_max_edges=0
+                ).collect()
+            }
+            assert got_dist == want
 
 
 # --- round-3 training-data additions ----------------------------------
