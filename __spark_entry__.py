@@ -120,7 +120,7 @@ def _q_pip_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coverage-gap audit: fixture points inside NO zone — the LEFT
     ANTI complement of pip_fixture, emitted in one zero-exchange
-    mapInPandas pass (no join; see pip.pip_anti_join)."""
+    mapInArrow pass (no join; see pip.pip_anti_join)."""
     from asag_spark.datagen import fixture_zones
     from asag_spark.operators.enrich import build_features
     from asag_spark.operators.pip import pip_anti_join

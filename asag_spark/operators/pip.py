@@ -6,14 +6,19 @@ Strategy (100 TB-ready):
 1. The polygon side (tariff zones / municipalities) is SMALL relative
    to the point side — registry-scale, like the reference's zone set.
    Its exterior rings are parsed once and broadcast to every executor
-   (the "broadcast R-tree side" of BASELINE.json; here a dict keyed by
-   hex cell instead of an STRtree — same role: O(1) candidate lookup).
+   (the "broadcast R-tree side" of BASELINE.json; here a flat cell
+   index instead of an STRtree — same role: candidate lookup by one
+   np.searchsorted over sorted cell keys).
 2. Candidate pruning is a CELL PRE-JOIN: each zone is expanded to the
-   res-7 hex cells covering its bbox (cover_bbox), each point gets its
-   res-7 cell — a broadcast equi-join on the cell id. The big point
-   side never shuffles.
+   res-7 hex cells covering its bbox (hexgrid._cover_bboxes), each
+   point gets its res-7 cell — a broadcast equi-join on the cell id.
+   The big point side never shuffles.
 3. Exact refine: even-odd ray cast (geo.wkt.points_in_ring) inside an
-   Arrow-batched pandas UDF, vectorized across the batch per zone.
+   Arrow UDF, vectorized across the batch per zone.
+
+pip_join, pip_anti_join and pip_flag_join share one kernel
+(_pip_hits) and one validity rule: a point is valid iff its lon and
+lat are both finite. NULL, NaN and ±inf coordinates never hit a zone.
 
 Skew: dense urban cells only inflate the candidate row count of those
 cells' points; the join stays broadcast so no shuffle hotspot exists.
@@ -24,6 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,6 +39,13 @@ from ..geo.wkt import parse_polygon, points_in_ring, ring_bbox
 
 PIP_RES = 7
 PIP_SALT = 16
+_ZONE_CELLS = T.StructType([T.StructField("zone_id", T.StringType()),
+                            T.StructField("cell", T.StringType())])
+
+
+def _pairs_schema(id_col: str) -> T.StructType:
+    return T.StructType([T.StructField(id_col, T.StringType()),
+                         T.StructField("zone_id", T.StringType())])
 
 
 def _best_wkt_per_id(rows: list, id_key: str) -> dict[str, str]:
@@ -49,53 +62,118 @@ def _best_wkt_per_id(rows: list, id_key: str) -> dict[str, str]:
     return best
 
 
-def _zone_index(zones_rows: list) -> tuple[dict, dict]:
-    """rings[zone_id] = (N,2) ring; cover[cell_qr] = [zone_id, ...].
+def _cell_key(q: np.ndarray, r: np.ndarray) -> np.ndarray:
+    """(q, r) → one int64: q in the high, r in the low 32 bits."""
+    return (q << 32) ^ (r & 0xFFFFFFFF)
+
+
+def _ring_covers(rings: list, res: int) -> tuple[np.ndarray, np.ndarray,
+                                                 np.ndarray]:
+    """(ring index, q, r) rows of every ring's bbox cover at ``res`` —
+    cover_bbox's cells in cover_bbox's order — from one
+    hexgrid._cover_bboxes call over all rings."""
+    bb = np.array([ring_bbox(ring) for ring in rings],
+                  dtype=np.float64).reshape(-1, 4)
+    return hexgrid._cover_bboxes(*bb.T, res=res)
+
+
+def _cell_names(q: np.ndarray, r: np.ndarray, res: int) -> list[str]:
+    return [f"h{res}_{a}_{b}" for a, b in zip(q.tolist(), r.tolist())]
+
+
+def _zone_index(zones_rows: list) -> tuple:
+    """Flat broadcast index of the PIP family: (zone ids, rings, cell
+    keys, offsets, zone positions). ``zone ids`` and ``rings`` are
+    indexed by zone position (zone ids sorted); ``cell keys`` are the
+    sorted unique _cell_key of every res-PIP_RES cover cell, and cell
+    i's zones are ``zone positions[offsets[i]:offsets[i + 1]]``,
+    ascending.
 
     Dirty-input guard: duplicate zone_id rows keep the max geom_wkt
     (_best_wkt_per_id — the same rule pip_join_partitioned applies) —
-    so both PIP variants agree (and no zone appears twice in a cell's
-    cover list, which would duplicate output rows)."""
+    so both PIP variants agree (and no zone appears twice in a cell,
+    which would duplicate output rows)."""
     best = _best_wkt_per_id(zones_rows, "zone_id")
-    rings: dict[str, np.ndarray] = {}
-    cover: dict[tuple[int, int], list[str]] = {}
-    for zid in best:
-        ring = parse_polygon(best[zid])
-        rings[zid] = ring
-        bb = ring_bbox(ring)
-        for qr in hexgrid.cover_bbox(*bb, res=PIP_RES):
-            cover.setdefault(qr, []).append(zid)
-    return rings, cover
+    zids = np.array(sorted(best), dtype=object)
+    rings = [parse_polygon(best[zid]) for zid in zids]
+    zpos, q, r = _ring_covers(rings, PIP_RES)
+    key = _cell_key(q, r)
+    o = np.lexsort((zpos, key))
+    ckeys, starts = np.unique(key[o], return_index=True)
+    offsets = np.append(starts, len(o)).astype(np.int32)
+    return zids, rings, ckeys, offsets, zpos[o].astype(np.int32)
+
+
+def _coords(batch: pa.RecordBatch, lon_col: str,
+            lat_col: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """float64 lon, lat of an Arrow batch (NULL reads as NaN) and the
+    PIP family's validity rule: a point is valid iff lon and lat are
+    both finite."""
+    lon, lat = (
+        batch.column(c).cast(pa.float64()).to_numpy(zero_copy_only=False)
+        for c in (lon_col, lat_col)
+    )
+    return lon, lat, np.isfinite(lon) & np.isfinite(lat)
+
+
+def _pip_hits(lon: np.ndarray, lat: np.ndarray, valid: np.ndarray,
+              index: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """(point index, zone position) of every valid point inside a zone
+    ring — the one candidate + refine kernel behind pip_join,
+    pip_anti_join and pip_flag_join. Each UNIQUE point cell is looked
+    up in the flat index with one np.searchsorted (points cluster, so
+    unique cells << points); every point then takes its cell's zones,
+    and the even-odd ray cast runs once per candidate zone, vectorized
+    over that zone's points."""
+    _, rings, ckeys, offsets, zpos = index
+    pts = np.flatnonzero(valid)
+    if not len(pts) or not len(ckeys):
+        return pts[:0], zpos[:0]
+    q, r = hexgrid.cell_qr(lon[pts], lat[pts], PIP_RES)
+    uniq, inv = np.unique(_cell_key(q, r), return_inverse=True)
+    pos = np.minimum(np.searchsorted(ckeys, uniq), len(ckeys) - 1)
+    cell = np.where(ckeys[pos] == uniq, pos, -1)[inv]
+    pts, cell = pts[cell >= 0], cell[cell >= 0]
+    lo, n = offsets[cell], offsets[cell + 1] - offsets[cell]
+    pt = np.repeat(pts, n)
+    zone = zpos[np.arange(len(pt)) + np.repeat(lo - (np.cumsum(n) - n), n)]
+    o = np.argsort(zone, kind="stable")
+    pt, zone = pt[o], zone[o]
+    bounds = np.searchsorted(zone, np.arange(len(rings) + 1))
+    inside = np.zeros(len(pt), dtype=bool)
+    for z in np.flatnonzero(np.diff(bounds)):
+        s = slice(bounds[z], bounds[z + 1])
+        inside[s] = points_in_ring(lon[pt[s]], lat[pt[s]], rings[z])
+    return pt[inside], zone[inside]
+
+
+def _broadcast_index(points: DataFrame, zones: DataFrame):
+    return points.sparkSession.sparkContext.broadcast(
+        _zone_index(zones.collect())
+    )
 
 
 def zone_covers(zones: DataFrame, res: int = PIP_RES) -> DataFrame:
     """Explode each zone polygon to its covering hex cells at ``res``
     (bbox cover + pad ring — the candidate-generation primitive; exact
-    refinement always follows with the ray cast). Arrow-batched.
+    refinement always follows with the ray cast). Arrow-batched, one
+    vectorized cover per batch.
 
     Output: (zone_id, cell) — deterministic pure function of the ring.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("zone_id", T.StringType()),
-            T.StructField("cell", T.StringType()),
-        ]
-    )
 
     def expand(batches):
         for pdf in batches:
-            zids, cells = [], []
-            for zid, wkt in zip(pdf["zone_id"], pdf["geom_wkt"]):
-                ring = parse_polygon(wkt)
-                for q, r in hexgrid.cover_bbox(*ring_bbox(ring), res=res):
-                    zids.append(zid)
-                    cells.append(f"h{res}_{q}_{r}")
-            yield pd.DataFrame({"zone_id": zids, "cell": cells})
+            zids = pdf["zone_id"].to_numpy(dtype=object)
+            i, q, r = _ring_covers(
+                [parse_polygon(w) for w in pdf["geom_wkt"]], res
+            )
+            yield pd.DataFrame({"zone_id": zids[i],
+                                "cell": _cell_names(q, r, res)})
 
-    return zones.select("zone_id", "geom_wkt").mapInPandas(expand, schema=schema)
+    return zones.select("zone_id", "geom_wkt").mapInPandas(
+        expand, schema=_ZONE_CELLS
+    )
 
 
 def zone_polyfill(zones: DataFrame, res: int = PIP_RES) -> DataFrame:
@@ -114,69 +192,35 @@ def zone_polyfill(zones: DataFrame, res: int = PIP_RES) -> DataFrame:
     unique preimage), so membership is a pure function of (ring, res)
     at any parallelism.
 
-    Plan shape: one Arrow mapInPandas over the zone table, per-zone
-    work O(bbox cells) with the ray cast vectorized across all
-    candidate centers at once; NO shuffle, no join — zones distribute
-    across partitions, a continent-scale cadastre polyfills
+    Plan shape: one Arrow mapInPandas over the zone table; each batch
+    covers all its zones in one vectorized pass and ray-casts each
+    zone's candidate centers at once; NO shuffle, no join — zones
+    distribute across partitions, a continent-scale cadastre polyfills
     embarrassingly parallel. Output: (zone_id, cell), cell =
     ``h{res}_{q}_{r}``.
     """
-    schema = T.StructType(
-        [
-            T.StructField("zone_id", T.StringType()),
-            T.StructField("cell", T.StringType()),
-        ]
-    )
     # dirty-input guard (the _best_wkt_per_id rule, relational
     # spelling): duplicate zone_id rows would emit duplicate
     # (zone_id, cell) rows and inflate coverage stats
     zones = zones.groupBy("zone_id").agg(F.max("geom_wkt").alias("geom_wkt"))
 
     def fill(batches):
-        from ..geo import hexgrid
-
         for pdf in batches:
-            zids, cells = [], []
-            for zid, wkt in zip(pdf["zone_id"], pdf["geom_wkt"]):
-                ring = parse_polygon(wkt)
-                cand = hexgrid.cover_bbox(*ring_bbox(ring), res=res)
-                q = np.array([c[0] for c in cand], dtype=np.int64)
-                r = np.array([c[1] for c in cand], dtype=np.int64)
-                clon, clat = hexgrid.cell_center_exact(q, r, res)
-                inside = points_in_ring(clon, clat, ring)
-                for qq, rr in zip(q[inside], r[inside]):
-                    zids.append(zid)
-                    cells.append(f"h{res}_{qq}_{rr}")
-            yield pd.DataFrame({"zone_id": zids, "cell": cells})
+            zids = pdf["zone_id"].to_numpy(dtype=object)
+            rings = [parse_polygon(w) for w in pdf["geom_wkt"]]
+            i, q, r = _ring_covers(rings, res)
+            clon, clat = hexgrid.cell_center_exact(q, r, res)
+            bounds = np.searchsorted(i, np.arange(len(rings) + 1))
+            inside = np.zeros(len(i), dtype=bool)
+            for k, ring in enumerate(rings):
+                s = slice(bounds[k], bounds[k + 1])
+                inside[s] = points_in_ring(clon[s], clat[s], ring)
+            yield pd.DataFrame({"zone_id": zids[i[inside]],
+                                "cell": _cell_names(q[inside], r[inside], res)})
 
-    return zones.select("zone_id", "geom_wkt").mapInPandas(fill, schema=schema)
-
-
-def _batch_candidates(lon: np.ndarray, lat: np.ndarray,
-                      cover: dict) -> dict[str, np.ndarray]:
-    """zone_id → indices of batch points whose res-7 cell is in that
-    zone's cover — the shared candidate-generation step of the PIP
-    kernels. Lookup per UNIQUE cell, not per point: points cluster
-    (Zipf urban skew), so unique cells << points and the Python loop
-    cost is O(cells), with numpy carrying the per-point work
-    (sort + slice; the ray cast follows in the caller)."""
-    q, r = hexgrid.cell_qr(lon, lat, PIP_RES)
-    key = (q.astype(np.int64) << 32) ^ (r.astype(np.int64) & 0xFFFFFFFF)
-    uniq, rep, inv = np.unique(key, return_index=True, return_inverse=True)
-    order = np.argsort(inv, kind="stable")
-    bounds = np.searchsorted(inv[order], np.arange(len(uniq) + 1))
-    zone_to_pts: dict[str, list[np.ndarray]] = {}
-    for ci in range(len(uniq)):
-        zids = cover.get((int(q[rep[ci]]), int(r[rep[ci]])), ())
-        if not zids:
-            continue
-        pts = order[bounds[ci]:bounds[ci + 1]]
-        for zid in zids:
-            zone_to_pts.setdefault(zid, []).append(pts)
-    return {
-        zid: (parts[0] if len(parts) == 1 else np.concatenate(parts))
-        for zid, parts in zone_to_pts.items()
-    }
+    return zones.select("zone_id", "geom_wkt").mapInPandas(
+        fill, schema=_ZONE_CELLS
+    )
 
 
 def pip_join(points: DataFrame, zones: DataFrame,
@@ -186,40 +230,23 @@ def pip_join(points: DataFrame, zones: DataFrame,
 
     ``points``: any frame with id/lon/lat. ``zones``: schema.ZONES.
     Output columns: (<id_col>, zone_id) — matching pip_golden
-    (FIXTURES.md §4).
+    (FIXTURES.md §4). A point is valid iff lon and lat are both
+    finite; invalid points (NULL, NaN, ±inf) are in no pair.
     """
-    spark = points.sparkSession
-    rings, cover = _zone_index(zones.collect())
-    bc = spark.sparkContext.broadcast((rings, cover))
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("zone_id", T.StringType()),
-        ]
-    )
+    bc = _broadcast_index(points, zones)
 
     def refine(batches):
-        rings_l, cover_l = bc.value
-        for pdf in batches:
-            lon = pdf[lon_col].to_numpy(dtype="float64", na_value=np.nan)
-            lat = pdf[lat_col].to_numpy(dtype="float64", na_value=np.nan)
-            ids = pdf[id_col].to_numpy(dtype=object)
-            ok = ~(np.isnan(lon) | np.isnan(lat))
-            if not ok.any():
-                yield pd.DataFrame({id_col: [], "zone_id": []})
-                continue
-            lon, lat, ids = lon[ok], lat[ok], ids[ok]
-            out_ids, out_zones = [], []
-            for zid, pis_a in _batch_candidates(lon, lat, cover_l).items():
-                inside = points_in_ring(lon[pis_a], lat[pis_a], rings_l[zid])
-                hit = pis_a[inside]
-                out_ids.extend(ids[hit])
-                out_zones.extend([zid] * len(hit))
-            yield pd.DataFrame({id_col: out_ids, "zone_id": out_zones})
+        index = bc.value
+        for batch in batches:
+            pt, zone = _pip_hits(*_coords(batch, lon_col, lat_col), index)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).take(pt).cast(pa.string()),
+                 pa.array(index[0][zone], pa.string())],
+                names=[id_col, "zone_id"],
+            )
 
-    return points.select(id_col, lon_col, lat_col).mapInPandas(
-        refine, schema=out_schema
+    return points.select(id_col, lon_col, lat_col).mapInArrow(
+        refine, schema=_pairs_schema(id_col)
     )
 
 
@@ -230,7 +257,10 @@ def pip_join_partitioned(points: DataFrame, zones: DataFrame,
     """Broadcast-free PIP join — the plan for when the polygon side
     outgrows a broadcast (continent-scale cadastral tables, SCALE.md
     §4). Output rows are IDENTICAL to ``pip_join``; only the physical
-    plan differs.
+    plan differs. Same validity rule: a point is valid iff lon and lat
+    are both finite; invalid points are filtered before the JVM cell
+    id is computed (its BIGINT cast would abort on NaN/±inf under
+    ANSI).
 
     Shape:
     1. candidates: points get their res-7 cell as a codegen'd JVM
@@ -257,9 +287,12 @@ def pip_join_partitioned(points: DataFrame, zones: DataFrame,
     # keep one row per zone_id (max geom_wkt: deterministic, and
     # matches nothing when zones are clean, the normal case)
     zones = zones.groupBy("zone_id").agg(F.max("geom_wkt").alias("geom_wkt"))
+    # the validity rule: Spark orders NaN above +inf, so abs(x) < inf
+    # holds exactly for finite x (and is NULL, so filtered, for NULL)
+    inf = F.lit(float("inf"))
     pts = points.select(
         F.col(id_col), F.col(lon_col).alias("_lon"), F.col(lat_col).alias("_lat")
-    ).filter(F.col("_lon").isNotNull() & F.col("_lat").isNotNull())
+    ).filter((F.abs("_lon") < inf) & (F.abs("_lat") < inf))
     cand = (
         pts.withColumn("cell", hex_cell(F.col("_lon"), F.col("_lat"), PIP_RES))
         .join(zone_covers(zones, res=PIP_RES).hint("shuffle_hash"), "cell")
@@ -288,13 +321,6 @@ def pip_join_partitioned(points: DataFrame, zones: DataFrame,
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(PIP_SALT)]))
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType()),
-            T.StructField("zone_id", T.StringType()),
-        ]
-    )
-
     def refine(key, cand_pdf, zone_pdf):
         if not len(cand_pdf) or not len(zone_pdf):
             return pd.DataFrame({id_col: [], "zone_id": []})
@@ -312,7 +338,7 @@ def pip_join_partitioned(points: DataFrame, zones: DataFrame,
     return (
         cand.groupBy("zone_id", "_salt")
         .cogroup(zsalt.groupBy("zone_id", "_salt"))
-        .applyInPandas(refine, schema=out_schema)
+        .applyInPandas(refine, schema=_pairs_schema(id_col))
     )
 
 
@@ -320,31 +346,27 @@ def pip_anti_join(points: DataFrame, zones: DataFrame,
                   id_col: str = "feature_id",
                   lon_col: str = "lon", lat_col: str = "lat",
                   with_coords: bool = False) -> DataFrame:
-    """Spatial ANTI-join: ids of points inside NO zone polygon — the
-    coverage-gap audit every zone-assignment pipeline needs (stops the
-    tariff map forgot, docs outside every municipality). Complements
-    pip_join the way LEFT ANTI complements INNER.
+    """Spatial ANTI-join: ids of valid points inside NO zone polygon —
+    the coverage-gap audit every zone-assignment pipeline needs (stops
+    the tariff map forgot, docs outside every municipality).
+    Complements pip_join the way LEFT ANTI complements INNER.
 
     Plan shape (100 TB): PIP membership is a PER-POINT predicate, so
-    the anti set needs no join at all — the same broadcast cell-index
-    + vectorized ray cast as ``pip_join``, output inverted per Arrow
-    batch in ONE mapInPandas pass over the point side. A naive
-    ``points LEFT ANTI JOIN pip_join(...)`` would scan the points
-    twice and shuffle both sides on the id; this emits identical rows
-    with zero exchange. Short-circuit: each zone ray-casts only the
-    batch points not already covered by an earlier zone, so overlap-
-    heavy zone sets do strictly less work than the positive variant.
+    the anti set needs no join at all — pip_join's broadcast flat cell
+    index and kernel, output inverted per Arrow batch in ONE
+    mapInArrow pass over the point side. A naive ``points LEFT ANTI
+    JOIN pip_join(...)`` would scan the points twice and shuffle both
+    sides on the id; this emits identical rows with zero exchange.
 
-    Null-coordinate points follow pip_join's contract (the caller
-    filters them; they are neither covered nor reported).
-    Output: (<id_col>) — one row per uncovered point; with
-    ``with_coords`` also (<lon_col>, <lat_col>), so a downstream
-    fallback (e.g. knn.snap_nearest_zone) needs no join back to the
-    big point table.
+    Validity follows pip_join: a point is valid iff lon and lat are
+    both finite. Invalid points (NULL, NaN, ±inf) are neither covered
+    nor reported — the anti set is the valid points minus the hit
+    points. Output: (<id_col>) — one row per uncovered point; with
+    ``with_coords`` also (<lon_col>, <lat_col>) as doubles, so a
+    downstream fallback (e.g. knn.snap_nearest_zone) needs no join
+    back to the big point table.
     """
-    spark = points.sparkSession
-    rings, cover = _zone_index(zones.collect())
-    bc = spark.sparkContext.broadcast((rings, cover))
+    bc = _broadcast_index(points, zones)
     fields = [T.StructField(id_col, T.StringType())]
     if with_coords:
         fields += [T.StructField(lon_col, T.DoubleType()),
@@ -352,30 +374,20 @@ def pip_anti_join(points: DataFrame, zones: DataFrame,
     out_schema = T.StructType(fields)
 
     def refine(batches):
-        rings_l, cover_l = bc.value
-        for pdf in batches:
-            lon = pdf[lon_col].to_numpy(dtype="float64", na_value=np.nan)
-            lat = pdf[lat_col].to_numpy(dtype="float64", na_value=np.nan)
-            ids = pdf[id_col].to_numpy(dtype=object)
-            ok = ~(np.isnan(lon) | np.isnan(lat))
-            if not ok.any():
-                yield pd.DataFrame({c.name: [] for c in fields})
-                continue
-            lon, lat, ids = lon[ok], lat[ok], ids[ok]
-            covered = np.zeros(len(ids), dtype=bool)
-            for zid, pis_a in _batch_candidates(lon, lat, cover_l).items():
-                pis_a = pis_a[~covered[pis_a]]
-                if not len(pis_a):
-                    continue
-                inside = points_in_ring(lon[pis_a], lat[pis_a], rings_l[zid])
-                covered[pis_a[inside]] = True
-            out = {id_col: ids[~covered]}
+        index = bc.value
+        for batch in batches:
+            lon, lat, valid = _coords(batch, lon_col, lat_col)
+            keep = valid.copy()
+            keep[_pip_hits(lon, lat, valid, index)[0]] = False
+            cols = [batch.column(id_col).filter(pa.array(keep))
+                    .cast(pa.string())]
             if with_coords:
-                out[lon_col] = lon[~covered]
-                out[lat_col] = lat[~covered]
-            yield pd.DataFrame(out)
+                cols += [pa.array(lon[keep]), pa.array(lat[keep])]
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[f.name for f in fields]
+            )
 
-    return points.select(id_col, lon_col, lat_col).mapInPandas(
+    return points.select(id_col, lon_col, lat_col).mapInArrow(
         refine, schema=out_schema
     )
 
@@ -389,43 +401,28 @@ def pip_flag_join(points: DataFrame, zones: DataFrame,
     other data (e.g. the streaming coverage-gap monitor, which windows
     uncovered points by event time: the positive/anti variants drop
     the timestamp). Same zero-exchange broadcast kernel; STATELESS, so
-    it runs unchanged on a Structured Streaming frame (mapInPandas is
-    streaming-capable; watermarks/windows attach downstream).
+    it runs unchanged on a Structured Streaming frame (mapInArrow is
+    streaming-capable; watermarks/windows attach downstream). The bit
+    is appended to each Arrow batch as is, so the input columns pass
+    through unconverted (a NaN stays NaN, a NULL stays NULL).
 
-    Null coordinates yield ``covered = false`` here — rows survive (a
-    monitor must see them), unlike pip_join/pip_anti_join's
-    filter-first contract where they vanish from both sides.
+    Validity follows pip_join: a point is valid iff lon and lat are
+    both finite. Invalid points keep their row with ``covered =
+    false`` (a monitor must see them).
     """
-    spark = points.sparkSession
-    rings, cover = _zone_index(zones.collect())
-    bc = spark.sparkContext.broadcast((rings, cover))
+    bc = _broadcast_index(points, zones)
     out_schema = T.StructType(
         list(points.schema.fields) + [T.StructField(flag_col, T.BooleanType())]
     )
 
     def refine(batches):
-        rings_l, cover_l = bc.value
-        for pdf in batches:
-            covered_full = np.zeros(len(pdf), dtype=bool)
-            lon = pdf[lon_col].to_numpy(dtype="float64", na_value=np.nan)
-            lat = pdf[lat_col].to_numpy(dtype="float64", na_value=np.nan)
-            ok = ~(np.isnan(lon) | np.isnan(lat))
-            if ok.any():
-                idx = np.nonzero(ok)[0]
-                lon_o, lat_o = lon[ok], lat[ok]
-                covered = np.zeros(len(idx), dtype=bool)
-                for zid, pis in _batch_candidates(lon_o, lat_o, cover_l).items():
-                    pis = pis[~covered[pis]]
-                    if not len(pis):
-                        continue
-                    inside = points_in_ring(lon_o[pis], lat_o[pis], rings_l[zid])
-                    covered[pis[inside]] = True
-                covered_full[idx] = covered
-            out = pdf.copy()
-            out[flag_col] = covered_full
-            yield out
+        index = bc.value
+        for batch in batches:
+            covered = np.zeros(batch.num_rows, dtype=bool)
+            covered[_pip_hits(*_coords(batch, lon_col, lat_col), index)[0]] = True
+            yield batch.append_column(flag_col, pa.array(covered))
 
-    return points.mapInPandas(refine, schema=out_schema)
+    return points.mapInArrow(refine, schema=out_schema)
 
 
 SNAP_RES = 7
@@ -500,11 +497,6 @@ def _dedup_cells(edge: np.ndarray, q: np.ndarray,
     return edge[o], q[o], r[o]
 
 
-def _cell_key(q: np.ndarray, r: np.ndarray) -> np.ndarray:
-    """(q, r) → one int64: q in the high, r in the low 32 bits."""
-    return (q << 32) ^ (r & 0xFFFFFFFF)
-
-
 def snap_to_boundary(points: DataFrame, zones: DataFrame,
                      id_col: str = "feature_id",
                      lon_col: str = "lon", lat_col: str = "lat",
@@ -541,7 +533,7 @@ def snap_to_boundary(points: DataFrame, zones: DataFrame,
       edges): edges are additionally indexed per hex cell at ``res``
       (``_edge_cells``; long edges split so they index O(length)
       cells), and each Arrow batch groups its points by cell
-      (`_batch_candidates`' unique-cell trick) and ring-expands
+      (the unique-cell grouping of `_pip_hits`) and ring-expands
       (hexgrid.grid_ring) until candidates appear — with a vectorized
       nearest-occupied-cell jump after ``_SNAP_JUMP_G`` empty rings —
       then keeps expanding until every unexplored cell is provably

@@ -42,13 +42,15 @@ def pts(spark):
     ))
 
 
-def test_pip_broadcast_plan_has_no_shuffle(spark, pts):
-    """pip_join's contract: the (10^12-row) point side NEVER shuffles —
-    candidates come from a broadcast index probe inside mapInPandas."""
+@pytest.mark.parametrize("op", ["pip_join", "pip_anti_join", "pip_flag_join"])
+def test_pip_broadcast_plan_has_no_shuffle(spark, pts, op):
+    """The broadcast PIP family's contract: the (10^12-row) point side
+    NEVER shuffles — candidates come from a broadcast index probe
+    inside one mapInArrow pass."""
     from asag_spark.datagen import generate_zones
-    from asag_spark.operators.pip import pip_join
+    from asag_spark.operators import pip
 
-    plan = _plan(pip_join(pts, generate_zones(spark)))
+    plan = _plan(getattr(pip, op)(pts, generate_zones(spark)))
     assert _shuffles(plan) == 0, plan
 
 

@@ -166,6 +166,165 @@ def test_pip_anti_brute_force_parity(spark):
     assert len(got_anti) > 300 and len(hit_ids) > 300
 
 
+_SWEEP_ZONES = [
+    ("Z:sq", "POLYGON((10.0 59.9, 10.1 59.9, 10.1 60.0, 10.0 60.0, "
+             "10.0 59.9))"),
+    ("Z:tri", "POLYGON((10.05 59.95, 10.2 59.95, 10.05 60.05, "
+              "10.05 59.95))"),
+    ("Z:am_e", "POLYGON((179.9 -0.5, 180.0 -0.5, 180.0 0.5, 179.9 0.5, "
+               "179.9 -0.5))"),
+    ("Z:am_w", "POLYGON((-180.0 -0.5, -179.9 -0.5, -179.9 0.5, "
+               "-180.0 0.5, -180.0 -0.5))"),
+    ("Z:np", "POLYGON((-10.0 89.99, 10.0 89.99, 10.0 90.0, -10.0 90.0, "
+             "-10.0 89.99))"),
+    ("Z:sp", "POLYGON((-10.0 -90.0, 10.0 -90.0, 10.0 -89.99, "
+             "-10.0 -89.99, -10.0 -90.0))"),
+]
+_INF, _NAN = float("inf"), float("nan")
+
+
+def _cell_boundary_points(lon, lat):
+    """Points on the res-7 hex edges and vertices around the cell of
+    (lon, lat): edge midpoints and corners of the cell, mapped back
+    through the projection's exact inverse."""
+    import numpy as np
+
+    from asag_spark.geo import hexgrid
+
+    s, R = hexgrid.EDGE_M[7], hexgrid.EARTH_RADIUS_M
+    q, r = hexgrid.cell_qr(np.array([lon]), np.array([lat]), 7)
+    x = s * np.sqrt(3.0) * (q[0] + r[0] / 2.0)
+    y = s * 1.5 * r[0]
+    offs = [(s * np.sqrt(3.0) / 2.0 * dx, s * 0.75 * dy)
+            for dx, dy in ((1, 0), (-1, 0), (0.5, 1), (-0.5, -1))]
+    offs += [(0.0, s), (0.0, -s), (s * np.sqrt(3.0) / 2.0, s / 2.0),
+             (-s * np.sqrt(3.0) / 2.0, -s / 2.0)]
+    out = []
+    for dx, dy in offs:
+        la = np.degrees((y + dy) / R)
+        lo = np.degrees((x + dx) / (R * np.cos(np.radians(la))))
+        out.append((float(lo), float(la)))
+    return out
+
+
+def _sweep_case(name):
+    """(points, zones) of one PIP edge case; points are (id, lon, lat),
+    None = NULL."""
+    zones = list(_SWEEP_ZONES)
+    inside = [("A", 10.05, 59.95), ("B", 10.07, 59.97), ("C", 20.0, 20.0)]
+    if name == "empty":
+        return [], zones
+    if name == "no_zones":
+        return inside, []
+    if name == "all_invalid":
+        bad = (None, _NAN, _INF, -_INF)
+        return [(f"P{i}{j}", lo, la) for i, lo in enumerate(bad)
+                for j, la in enumerate(bad + (59.95,))] + [
+            (f"Q{i}", 10.05, la) for i, la in enumerate(bad)
+        ], zones
+    if name == "duplicates":
+        # repeated point ids; a zone_id repeated with different WKT
+        return inside + [("A", 10.06, 59.96), ("A", 25.0, 60.0),
+                         ("A", _NAN, 59.95), ("B", 10.07, 59.97),
+                         ("D", 11.05, 60.05), ("E", 12.05, 60.05)], zones + [
+            ("Z:dup", "POLYGON((11.0 60.0, 11.1 60.0, 11.1 60.1, 11.0 60.1, "
+                      "11.0 60.0))"),
+            ("Z:dup", "POLYGON((12.0 60.0, 12.1 60.0, 12.1 60.1, 12.0 60.1, "
+                      "12.0 60.0))"),
+        ]
+    if name == "antimeridian_poles":
+        return [(f"M{i}", lo, la) for i, (lo, la) in enumerate(
+            [(179.9999, 0.1), (-179.9999, 0.1), (179.9999, -0.4999),
+             (-179.9999, 0.4999), (180.0, 0.0), (-180.0, 0.0),
+             (179.9999, 0.6), (-179.9999, -0.6),
+             (0.0, 89.999), (5.0, 89.999), (-9.9, 89.999), (15.0, 89.999),
+             (0.0, -89.999), (9.9, -89.999), (-15.0, -89.999),
+             (0.0, 90.0), (0.0, -90.0)])], zones
+    if name == "boundaries":
+        on_ring = [(10.0, 59.9), (10.1, 60.0), (10.0, 60.0), (10.05, 59.9),
+                   (10.0, 59.95), (10.1, 59.95), (10.05, 60.0),
+                   (10.05, 59.95), (10.2, 59.95), (10.05, 60.05),
+                   (10.125, 59.95), (10.125, 60.0), (10.05, 60.025)]
+        cells = _cell_boundary_points(10.05, 59.95) + _cell_boundary_points(
+            10.099, 59.999)
+        return [(f"V{i}", lo, la)
+                for i, (lo, la) in enumerate(on_ring + cells)], zones
+    raise ValueError(name)
+
+
+@pytest.mark.parametrize("case", [
+    "empty", "no_zones", "all_invalid", "duplicates", "antimeridian_poles",
+    "boundaries",
+])
+def test_pip_family_edge_cases(spark, case):
+    """The broadcast PIP family (pip_join, pip_anti_join,
+    pip_flag_join) and pip_join_partitioned on edge-case inputs, each
+    against a brute-force ray cast of every valid point against every
+    deduplicated zone ring. One validity rule for all four: a point is
+    valid iff lon and lat are both finite. Pairs: same multiset from
+    both joins and the brute force. Anti: the ids of the valid points
+    that hit nothing, as a multiset. Flag: every input row and value
+    kept (NaN stays NaN, NULL stays NULL), covered = brute hit."""
+    import math
+    from collections import Counter
+
+    import numpy as np
+    import pyarrow as pa
+
+    from asag_spark.geo.wkt import parse_polygon, points_in_ring
+    from asag_spark.operators.pip import (
+        pip_anti_join, pip_flag_join, pip_join_partitioned,
+    )
+
+    points, zone_rows = _sweep_case(case)
+    # Arrow tables keep NaN apart from NULL and build the frames in the
+    # JVM (a Python-row frame costs a Python task per partition)
+    pts = spark.createDataFrame(pa.table({
+        "feature_id": pa.array([p[0] for p in points], pa.string()),
+        "lon": pa.array([p[1] for p in points], pa.float64()),
+        "lat": pa.array([p[2] for p in points], pa.float64()),
+        "k": pa.array(range(len(points)), pa.int32()),
+    }))
+    zones = spark.createDataFrame(pa.table({
+        "zone_id": pa.array([z[0] for z in zone_rows], pa.string()),
+        "geom_wkt": pa.array([z[1] for z in zone_rows], pa.string()),
+    }))
+
+    best = {}
+    for zid, wkt in zone_rows:
+        best[zid] = max(wkt, best.get(zid, wkt))
+    lon = np.array([np.nan if p[1] is None else p[1] for p in points])
+    lat = np.array([np.nan if p[2] is None else p[2] for p in points])
+    valid = np.isfinite(lon) & np.isfinite(lat)
+    want_pairs, hit = Counter(), np.zeros(len(points), dtype=bool)
+    for zid, wkt in best.items():
+        inside = np.zeros(len(points), dtype=bool)
+        inside[valid] = points_in_ring(lon[valid], lat[valid],
+                                       parse_polygon(wkt))
+        hit |= inside
+        want_pairs.update((points[k][0], zid) for k in np.flatnonzero(inside))
+
+    def pairs(df):
+        return Counter((r["feature_id"], r["zone_id"]) for r in df.collect())
+
+    assert pairs(pip_join(pts, zones)) == want_pairs
+    assert pairs(pip_join_partitioned(pts, zones)) == want_pairs
+    assert Counter(r["feature_id"] for r in pip_anti_join(pts, zones).collect()) \
+        == Counter(points[k][0] for k in np.flatnonzero(valid & ~hit))
+
+    flagged = sorted(pip_flag_join(pts, zones).collect(), key=lambda r: r["k"])
+    assert [r["k"] for r in flagged] == list(range(len(points)))
+    for r, (pid, lo, la), h in zip(flagged, points, hit):
+        assert r["feature_id"] == pid and r["covered"] == bool(h)
+        for got, want in ((r["lon"], lo), (r["lat"], la)):
+            assert got == want or (
+                got is not None and want is not None
+                and math.isnan(got) and math.isnan(want)
+            ), (r, lo, la)
+    if case in ("duplicates", "antimeridian_poles", "boundaries"):
+        assert want_pairs   # real hits or the case proves nothing
+
+
 def test_knn_golden(spark, features):
     """The four F-ADJ stops are within ~100 m of each other and >50 km
     from everything else → each one's 3-NN are exactly the other three."""
