@@ -162,13 +162,21 @@ def _cover_bboxes(min_lon: np.ndarray, min_lat: np.ndarray,
     """Vectorized ``cover_bbox`` over n bboxes: (bbox index, q, r) rows,
     each bbox's cells in cover_bbox's order (q outer, r inner). One
     cell_qr call projects every corner of every bbox."""
-    # x = R·λ·cosφ peaks at φ=0, which is INTERIOR for a bbox spanning
-    # the equator — the corner extremes alone would under-cover, so
-    # such a bbox adds the (lon, 0) pseudo-corners; any other bbox
-    # repeats its (lon, min_lat) corners there, which moves no extreme
-    eq_lat = np.where((min_lat < 0.0) & (0.0 < max_lat), 0.0, min_lat)
-    lon6 = np.stack([min_lon, max_lon, min_lon, max_lon, min_lon, max_lon], 1)
-    lat6 = np.stack([min_lat, min_lat, max_lat, max_lat, eq_lat, eq_lat], 1)
+    # r ∝ φ and q is linear in λ along a parallel, so both peak at the
+    # corners — except q ∝ (√3/3)·λ·cosφ − φ/3 along a meridian, which
+    # peaks INSIDE the east/west edge at sinφ* = −1/(√3·λ) once
+    # |λ| > 1/√3 rad (≈ 33°). Each edge adds the pseudo-corner
+    # (lon, clip(φ*)); where φ* lies off the edge (or does not exist)
+    # the clip lands on a corner, which moves no extreme.
+    edge_lon = np.stack([min_lon, max_lon], 1)
+    with np.errstate(divide="ignore"):
+        sin_star = np.clip(-1.0 / (_SQRT3 * np.radians(edge_lon)), -1.0, 1.0)
+    star_lat = np.clip(np.degrees(np.arcsin(sin_star)),
+                       min_lat[:, None], max_lat[:, None])
+    lon6 = np.concatenate(
+        [np.stack([min_lon, max_lon, min_lon, max_lon], 1), edge_lon], 1)
+    lat6 = np.concatenate(
+        [np.stack([min_lat, min_lat, max_lat, max_lat], 1), star_lat], 1)
     q, r = cell_qr(lon6, lat6, res)
     q0 = q.min(axis=1) - pad_cells
     r0 = r.min(axis=1) - pad_cells
@@ -182,10 +190,10 @@ def _cover_bboxes(min_lon: np.ndarray, min_lat: np.ndarray,
 
 def cover_bbox(min_lon: float, min_lat: float, max_lon: float, max_lat: float,
                res: int, pad_cells: int = 1) -> list[tuple[int, int]]:
-    """Hex cells covering a lon/lat bbox (+pad ring) — the polygon
-    cell-cover primitive used to pre-join PIP candidates. Enumerates
-    the axial range of the projected bbox corners; exact containment
-    is always refined afterwards with points_in_ring."""
+    """Hex cells covering a lon/lat bbox (+pad ring): ``_cover_bboxes``
+    for one bbox, as a list of (q, r). Enumerates the axial range of
+    the projected bbox corners and east/west-edge pseudo-corners; the
+    geo and spatial tests use it as the scalar reference cover."""
     _, q, r = _cover_bboxes(
         *(np.array([v], dtype=np.float64)
           for v in (min_lon, min_lat, max_lon, max_lat)),

@@ -382,100 +382,3 @@ def within_distance_join(
          + (home["_ya"] - probe["_yb"]) * (home["_ya"] - probe["_yb"])
          ).alias("dist_sq"),
     )
-
-
-def cluster_hulls(points: DataFrame, labels: DataFrame,
-                  id_col: str = "point_id",
-                  lon_col: str = "lon", lat_col: str = "lat",
-                  min_size: int = 3) -> DataFrame:
-    """Convex hull per spatial cluster — the points→polygon
-    aggregation that turns cluster LABELS into serveable geometry
-    (coverage footprints, heat regions, cluster outlines on a map).
-    Andrew's monotone chain per cluster, computed with numpy inside
-    applyInPandas over cluster groups: deterministic (input sorted by
-    (lon, lat, id); strictly-convex turns only, so collinear boundary
-    points are dropped canonically) and verified against a pure-Python
-    scalar reference plus containment/convexity property tests.
-
-    Plan shape: labels join is id-keyed, then ONE shuffle groups
-    points by cluster_id (the same sessionization-style contract:
-    per-cluster member counts are bounded by eps-density, and the
-    skew-heavy giant cluster is exactly the case the two-level
-    partitioned clustering strategy documents); the hull itself is
-    O(n log n) per group, output one row per cluster. Clusters
-    smaller than ``min_size`` (hull would degenerate to a point or
-    segment) are emitted with ring NULL and their size, so the
-    consumer sees every cluster exactly once.
-
-    Output: (cluster_id, n_points, ring_wkt) — ring_wkt a closed
-    POLYGON exterior ring in counter-clockwise order starting from
-    the lexicographically smallest vertex, 7-dp coordinates.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    joined = points.select(
-        F.col(id_col).alias("point_id"), lon_col, lat_col
-    ).join(labels.select("point_id", "cluster_id"), "point_id")
-
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                "cluster_id", joined.schema["cluster_id"].dataType
-            ),
-            T.StructField("n_points", T.LongType()),
-            T.StructField("ring_wkt", T.StringType()),
-        ]
-    )
-
-    def hull(key, pdf):
-        cid = key[0]
-        n = len(pdf)
-        if n < min_size:
-            return pd.DataFrame(
-                {"cluster_id": [cid], "n_points": [n], "ring_wkt": [None]}
-            )
-        pts = np.unique(
-            np.round(
-                np.stack(
-                    [pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy()],
-                    axis=1,
-                ),
-                7,
-            ),
-            axis=0,
-        )  # sorted lexicographically by (lon, lat); exact duplicates out
-        if len(pts) < 3:
-            return pd.DataFrame(
-                {"cluster_id": [cid], "n_points": [n], "ring_wkt": [None]}
-            )
-
-        def chain(seq):
-            out: list = []
-            for p in seq:
-                while len(out) >= 2 and np.cross(
-                    out[-1] - out[-2], p - out[-2]
-                ) <= 0:
-                    out.pop()
-                out.append(p)
-            return out
-
-        lower = chain(pts)
-        upper = chain(pts[::-1])
-        ring = lower[:-1] + upper[:-1]
-        if len(ring) < 3:  # all points collinear
-            return pd.DataFrame(
-                {"cluster_id": [cid], "n_points": [n], "ring_wkt": [None]}
-            )
-        ring.append(ring[0])
-        coords = ", ".join(f"{p[0]:.7f} {p[1]:.7f}".rstrip() for p in ring)
-        return pd.DataFrame(
-            {
-                "cluster_id": [cid],
-                "n_points": [n],
-                "ring_wkt": [f"POLYGON (({coords}))"],
-            }
-        )
-
-    return joined.groupBy("cluster_id").applyInPandas(hull, out_schema)

@@ -186,7 +186,7 @@ def zone_polyfill(zones: DataFrame, res: int = PIP_RES) -> DataFrame:
     a planar subdivision's polyfill is a partition of its cells.
 
     Determinism: candidate cells enumerate from the projected bbox
-    corner range (cover_bbox's exact axial-extent argument) and each
+    corner range (hexgrid._cover_bboxes' exact axial extent) and each
     center maps back through the EXACT lattice inverse
     (hexgrid.cell_center_exact — y alone fixes lat, then lon is the
     unique preimage), so membership is a pure function of (ring, res)

@@ -6,8 +6,9 @@ Contract per stage:
 * output parquet at ``<workdir>/<stage>/data`` (atomic via Spark's
   _SUCCESS marker);
 * a metrics parquet at ``<workdir>/<stage>/metrics`` with one row per
-  output partition: (stage, partition_id, row_count, input_fingerprint,
-  wall_ms) — schema.METRICS;
+  output part file, its row_count read from the file's parquet footer:
+  (stage, partition_id, row_count, input_fingerprint, wall_ms) —
+  schema.METRICS;
 * ``input_fingerprint`` = fingerprint of the stage INPUT (plan-level:
   hash of the input fingerprint chain + stage name), so a resume run
   re-executes a stage iff its input lineage changed;
@@ -19,10 +20,15 @@ Contract per stage:
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from asag_spark.schema import METRICS
 
 
 def _fingerprint(parent_fp: str, stage: str, params: str = "") -> str:
@@ -66,28 +72,28 @@ class CheckpointedPipeline:
         df.write.mode("overwrite").parquet(data_dir)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        out = self.spark.read.parquet(data_dir)
-        # count per source part file, not per read split: the reader
-        # packs small files into one split, so spark_partition_id()
-        # would merge output partitions. part-NNNNN is the write task's
-        # partition id.
-        metrics = (
-            out.groupBy(F.col("_metadata.file_name").alias("file"))
-            .agg(F.count(F.lit(1)).alias("row_count"))
-            .select(
-                F.lit(stage).alias("stage"),
-                F.regexp_extract("file", r"^part-(\d+)", 1)
-                .cast("int").alias("partition_id"),
-                F.col("row_count").cast("long"),
-                F.lit(fp).alias("input_fingerprint"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-            )
-        )
-        metrics.write.mode("overwrite").parquet(metrics_dir)
+        # one row per part file, its count read from the parquet footer
+        # and the table written on the driver: no Spark job, and an
+        # empty part file still gets its row. part-NNNNN is the write
+        # task's partition id.
+        parts = sorted(f for f in os.listdir(data_dir)
+                       if f.startswith("part-"))
+        metrics = pa.table({
+            "stage": [stage] * len(parts),
+            "partition_id": [int(f.split("-")[1]) for f in parts],
+            "row_count": [pq.read_metadata(os.path.join(data_dir, f)).num_rows
+                          for f in parts],
+            "input_fingerprint": [fp] * len(parts),
+            "wall_ms": [wall_ms] * len(parts),
+        }, schema=to_arrow_schema(METRICS))
+        shutil.rmtree(metrics_dir, ignore_errors=True)
+        os.makedirs(metrics_dir)
+        pq.write_table(metrics, os.path.join(metrics_dir, "part-00000.parquet"))
+        open(m_success, "w").close()
         self.stage_log.append(
             {"stage": stage, "resumed": False, "wall_ms": wall_ms}
         )
-        return out
+        return self.spark.read.parquet(data_dir)
 
     def metrics(self) -> DataFrame:
         paths = [

@@ -37,7 +37,7 @@ def run(spark, input_path: str, workdir: str, *, n_shards: int = 8,
         quality_gate: str = "gopher", quality_share: float = 0.8,
         contract: str = "assert") -> dict:
     """The curation pipeline body, callable on an EXISTING session
-    (bench.py's curate_e2e leg and tests drive this directly; the CLI
+    (perfbench's curate_job workload drives this directly; the CLI
     wrapper below owns session create/stop). Returns the summary dict
     main() prints."""
     from pyspark.sql import functions as F

@@ -120,62 +120,6 @@ def write_bucketed(
     )
 
 
-def write_zordered(df: DataFrame, path: str, cols: tuple[str, ...],
-                   bits: int = 16, partitions: int | None = None) -> None:
-    """Multi-column Z-order clustered parquet — the OPTIMIZE ZORDER
-    analog for any numeric column pair(s), generalizing
-    ``write_clustered``'s quadkey (which IS the z-curve of lon/lat):
-    each column is min/max-quantized to ``bits`` levels, the bit
-    levels are interleaved into one z-value (pure codegen shift/or
-    expressions — no UDF), and the table is range-partitioned + sorted
-    on it. Result: every FILE covers a small hyper-rectangle in ALL
-    ``cols`` simultaneously, so parquet footer min/max stats prune
-    predicates on ANY clustered column — a single-column sort leaves
-    every file spanning the full range of the other columns, so a
-    second-column predicate scans 100% of files. That second-column
-    pruning is pinned by test over the actual footer metadata.
-
-    Quantization bounds come from one min/max agg over the input (two
-    passes total: stats + write — what table-maintenance jobs do)."""
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"z-value needs bits*len(cols) <= 63 (bit 63 is the long "
-            f"sign bit and would invert the sort); got {bits}*{len(cols)}"
-        )
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-    ).collect()[0]
-    if any(stats[f"mn_{c}"] is None or stats[f"mx_{c}"] is None
-           for c in cols):
-        # empty input or an all-null column: no quantization bounds —
-        # a maintenance no-op, not a job failure
-        df.write.mode("overwrite").parquet(path)
-        return
-    levels = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for ci, c in enumerate(cols):
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) or 1.0
-        q = F.least(
-            F.lit(levels),
-            F.floor((F.col(c).cast("double") - F.lit(mn))
-                    / F.lit(span) * F.lit(levels + 1)).cast("long"),
-        )
-        for b in range(bits):
-            z = z + ((F.shiftright(q, b) % 2)
-                     * F.lit(1 << (b * len(cols) + ci)))
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def docs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(doc_id,text,lang,source,n_chars) → docs(doc_id, spans).
 
@@ -248,110 +192,6 @@ def docs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         has_media, F.concat(spans, F.array(media_span))
     ).otherwise(spans)
     return d.select(sid.alias("doc_id"), spans_full.alias("spans"))
-
-
-def write_training_shards(docs: DataFrame, path: str,
-                          n_shards: int = 8,
-                          id_col: str = "doc_id",
-                          seed: str = "epoch-0") -> None:
-    """Materialize a training epoch: text.train_shuffle's deterministic
-    permutation written as ``shard=K`` parquet directories with rows
-    PHYSICALLY ordered by the epoch position — the final "write N
-    shard files a trainer streams in order" step.
-
-    Layout contract: partitionBy(shard) gives one directory per shard;
-    repartition(n_shards, shard) + sortWithinPartitions(pos) makes each
-    directory a single ordered run (Spark writes a partition's rows in
-    iterator order), so a reader streaming any shard file start to end
-    replays that shard's slice of the epoch without sorting. Shard
-    directories are independent — a trainer's data-parallel ranks map
-    1:1 to them.
-
-    At 100 TB, n_shards is the trainer's file-count dial (10^4-10^5);
-    the write costs exactly the one shard-keyed exchange train_shuffle
-    already pays (the sort rides inside each write task).
-    """
-    from ..operators.text import train_shuffle
-
-    order = train_shuffle(docs, n_shards=n_shards, id_col=id_col, seed=seed)
-    out = docs.join(order, id_col)
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def compact_partitions(spark: SparkSession, path: str,
-                       partition_col: str,
-                       target_bytes: int = 128 * 1024 * 1024) -> dict:
-    """Small-file compaction for a hive-partitioned parquet layout —
-    the Iceberg ``rewrite_data_files`` analogue, as an engine op:
-    every append (ivf_index_append, streaming foreachBatch sinks,
-    per-batch curation writes) grows the per-partition file count
-    until open/footer costs dominate the scan; this rewrites each
-    partition directory to ceil(partition_bytes / target_bytes) files
-    and leaves row contents byte-identical (parity-tested).
-
-    Plan shape: ONE job — the scan reads the whole table (compaction
-    IS a full rewrite, there is no cheaper exact variant), a
-    rebalance-by-partition-key exchange sizes output files via AQE's
-    advisory partition size (set to ``target_bytes`` for this one
-    write), and partitionBy re-derives the directory layout. The
-    rewrite lands in a sibling temp dir first and atomically replaces
-    the old directory only after _SUCCESS — a killed compaction
-    leaves the original layout untouched (resume = rerun).
-
-    Returns {"files_before", "files_after", "bytes"} for the caller's
-    maintenance log.
-    """
-    import os
-    import shutil
-
-    def _files(p):
-        return [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    before = _files(path)
-    total = sum(os.path.getsize(f) for f in before)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df = spark.read.parquet(path)
-    old_advisory = spark.conf.get(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            str(target_bytes),
-        )
-        (
-            df.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", old_advisory
-        )
-    if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        raise RuntimeError("compaction write did not complete")
-    old = path.rstrip("/") + "._compact_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = _files(path)
-    return {
-        "files_before": len(before),
-        "files_after": len(after),
-        "bytes": total,
-    }
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],

@@ -227,65 +227,3 @@ def test_within_distance_join_brute_parity_and_boundaries(spark):
 
     with pytest.raises(ValueError):
         within_distance_join(ldf, rdf, 0.0)
-
-
-def test_cluster_hulls_properties(spark):
-    """Containment + convexity + canonical start vertex, against a
-    seeded point cloud; scalar reference cross-check."""
-    import numpy as np
-
-    from asag_spark.operators.cluster import cluster_hulls, spatial_clusters
-
-    rng = np.random.default_rng(7)
-    blobs = []
-    for b in range(3):
-        c = rng.uniform(0, 50, 2)
-        blobs.append(c + rng.normal(0, 0.5, (40, 2)))
-    pts_np = np.vstack(blobs)
-    pts = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts_np)],
-        "point_id long, lon double, lat double",
-    )
-    labels = spatial_clusters(pts, eps=5.0)
-    hulls = cluster_hulls(pts, labels).collect()
-    lab = {r["point_id"]: r["cluster_id"] for r in labels.collect()}
-    assert len(hulls) == len({v for v in lab.values()})
-
-    def parse(wkt):
-        body = wkt[len("POLYGON (("):-2]
-        return np.array([[float(v) for v in p.split()] for p in body.split(", ")])
-
-    for h in hulls:
-        ring = parse(h["ring_wkt"])
-        assert np.allclose(ring[0], ring[-1])
-        v = ring[:-1]
-        # strict convexity, CCW turns
-        for i in range(len(v)):
-            a, b, c = v[i - 1], v[i], v[(i + 1) % len(v)]
-            assert np.cross(b - a, c - b) > 0
-        # canonical start: lexicographically smallest vertex
-        assert tuple(v[0]) == min(map(tuple, v))
-        # containment: every member point inside-or-on the hull
-        members = pts_np[[i for i, c in lab.items() if c == h["cluster_id"]]]
-        members = np.round(members, 7)
-        for i in range(len(v)):
-            a, b = v[i], v[(i + 1) % len(v)]
-            side = np.cross(b - a, members - a)
-            assert (side >= -1e-9).all()
-        assert h["n_points"] == len(members)
-
-
-def test_cluster_hulls_degenerate(spark):
-    from asag_spark.operators.cluster import cluster_hulls, spatial_clusters
-
-    pts = spark.createDataFrame(
-        [(0, 0.0, 0.0), (1, 0.1, 0.0), (2, 0.2, 0.0), (3, 0.3, 0.0),
-         (4, 9.0, 9.0)],
-        "point_id long, lon double, lat double",
-    )
-    labels = spatial_clusters(pts, eps=0.5)
-    r = {x["cluster_id"]: x for x in cluster_hulls(pts, labels).collect()}
-    # 4 collinear points: a real cluster but no 2-D hull -> NULL ring
-    assert r[0]["n_points"] == 4 and r[0]["ring_wkt"] is None
-    # singleton below min_size
-    assert r[4]["n_points"] == 1 and r[4]["ring_wkt"] is None

@@ -1,4 +1,4 @@
-"""Tests for the geo kernels (mostly pure numpy; the simplification contract test drives the Spark operator)."""
+"""Tests for the geo kernels (pure numpy)."""
 
 import numpy as np
 import pytest
@@ -138,13 +138,39 @@ def test_hexgrid_cover_contains_point_cell():
     assert (int(q[0]), int(r[0])) in cover
 
 
+@pytest.mark.parametrize("box,res", [
+    ((150.0, -40.0, 151.0, 10.0), 7),
+    ((170.0, -30.0, 179.0, 5.0), 3),
+    ((-151.0, -10.0, -150.0, 40.0), 7),
+])
+def test_cover_bbox_contains_every_cell_far_from_lon0(box, res):
+    """Past |lon| ≈ 33° q peaks inside the east/west edges, not at a
+    corner: every cell of a point on or inside the bbox is covered."""
+    min_lon, min_lat, max_lon, max_lat = box
+    t = np.linspace(0.0, 1.0, 100_001)
+    rng = np.random.default_rng(3)
+    lon = np.concatenate([np.full_like(t, min_lon), np.full_like(t, max_lon),
+                          rng.uniform(min_lon, max_lon, 100_000)])
+    lat = np.concatenate([min_lat + t * (max_lat - min_lat)] * 2
+                         + [rng.uniform(min_lat, max_lat, 100_000)])
+    q, r = hexgrid.cell_qr(lon, lat, res)
+    cover = set(hexgrid.cover_bbox(*box, res))
+    assert set(zip(q.tolist(), r.tolist())) <= cover
+
+
 def _loop_cover_bbox(min_lon, min_lat, max_lon, max_lat, res):
-    """The scalar bbox cover (pad 1) the vectorized one replaced."""
+    """Scalar bbox cover (pad 1): the axial range of the four corners
+    plus, on each east/west edge, the latitude where q peaks
+    (sinφ* = −1/(√3·λ), when |λ| > 1/√3 rad and φ* lies on the edge)."""
     corners_lon = [min_lon, max_lon, min_lon, max_lon]
     corners_lat = [min_lat, min_lat, max_lat, max_lat]
-    if min_lat < 0.0 < max_lat:
-        corners_lon += [min_lon, max_lon]
-        corners_lat += [0.0, 0.0]
+    for lon in (min_lon, max_lon):
+        lam = np.radians(lon)
+        if abs(lam) > 1.0 / np.sqrt(3.0):
+            lat = np.degrees(np.arcsin(-1.0 / (np.sqrt(3.0) * lam)))
+            if min_lat < lat < max_lat:
+                corners_lon.append(lon)
+                corners_lat.append(lat)
     q, r = hexgrid.cell_qr(np.array(corners_lon), np.array(corners_lat), res)
     return [(qq, rr) for qq in range(int(q.min()) - 1, int(q.max()) + 2)
             for rr in range(int(r.min()) - 1, int(r.max()) + 2)]
@@ -213,7 +239,7 @@ def test_edge_cells_matches_per_piece_loop(res):
     A, B = _parity_edges(res)
     # the bbox cover alone: random boxes, and (at res 3, where they
     # stay small) two equator-spanning boxes near ±180° whose q extreme
-    # is the (lon, 0) pseudo-corner
+    # is an east/west-edge pseudo-corner
     rng = np.random.default_rng(7)
     lo = np.column_stack([rng.uniform(-180, 170, 30), rng.uniform(-30, 5, 30)])
     hi = lo + rng.uniform(0.0, 0.25 if res == 7 else 25.0, (30, 2))
@@ -271,98 +297,3 @@ def test_haversine():
     assert 90_000 < d[0] < 150_000
     assert haversine_m(np.array([10.0]), np.array([59.0]),
                        np.array([10.0]), np.array([59.0]))[0] == 0.0
-
-
-def test_simplify_polygons(spark):
-    """Douglas-Peucker contract: (a) pure-Python reference parity,
-    (b) every dropped vertex is within tolerance of the simplified
-    chain (the DP guarantee), (c) collinear mid-points vanish, corner
-    points survive, (d) partitioning invariance, (e) output WKT is a
-    valid closed ring parseable by the repo's own parser."""
-    import numpy as np
-
-    from asag_spark.geo.simplify import dp_keep_mask, simplify_polygons
-    from asag_spark.geo.wkt import parse_polygon
-
-    # (c) a square with redundant edge midpoints + one tiny notch
-    sq = ("POLYGON((0.0000000 0.0000000, 0.5000000 0.0000000, "
-          "1.0000000 0.0000000, 1.0000000 0.5000000, 1.0000000 1.0000000, "
-          "0.5000000 1.0000001, 0.0000000 1.0000000, 0.0000000 0.5000000, "
-          "0.0000000 0.0000000))")
-    df = spark.createDataFrame([("Z", sq)], "zone_id string, geom_wkt string")
-    out = simplify_polygons(df, tolerance=0.001).collect()[0]
-    ring = parse_polygon(out["geom_wkt"])[:-1]   # strip the WKT closing dup
-    assert out["n_after"] == 4 and len(ring) == 4          # corners only
-    assert {tuple(p) for p in ring} == {(0, 0), (1, 0), (1, 1), (0, 1)}
-
-    # (a)+(b)+(d) on seeded NOISY 64-vertex rings where the tolerance
-    # genuinely removes vertices (the 6-vertex municipality hexes lose
-    # nothing at any sane tolerance - a vacuous contract check)
-    rng = np.random.default_rng(31)
-    rows = []
-    for i in range(25):
-        ang = np.sort(rng.uniform(0, 2 * np.pi, 64))
-        rad = 0.3 + rng.normal(0, 0.01, 64)
-        cx, cy = rng.uniform(6, 30), rng.uniform(59, 70)
-        vx, vy = cx + rad * np.cos(ang), cy + rad * np.sin(ang)
-        ring = ", ".join(f"{x:.7f} {y:.7f}" for x, y in zip(vx, vy))
-        rows.append((f"R{i}", f"POLYGON(({ring}, {vx[0]:.7f} {vy[0]:.7f}))"))
-    dense = spark.createDataFrame(rows, "zone_id string, geom_wkt string")
-    tol = 0.02
-    outs = {r["zone_id"]: r for r in
-            simplify_polygons(dense, tol).collect()}
-    outs7 = {r["zone_id"]: r["geom_wkt"] for r in
-             simplify_polygons(dense.repartition(7), tol).collect()}
-    assert {z: r["geom_wkt"] for z, r in outs.items()} == outs7
-    assert sum(r["n_after"] for r in outs.values()) < \
-        0.7 * sum(r["n_before"] for r in outs.values())  # real thinning
-    for zid, wkt in rows:
-        orig = parse_polygon(wkt)
-        simp = parse_polygon(outs[zid]["geom_wkt"])
-        assert len(simp) >= 4
-        # (b): every original vertex within tol of some simplified edge
-        # (+ the 7-dp WKT round-trip quantum)
-        for px, py in orig:
-            dmin = np.inf
-            for (ax, ay), (bx, by) in zip(simp[:-1], simp[1:]):
-                dx, dy = bx - ax, by - ay
-                t = 0.0 if dx == dy == 0 else np.clip(
-                    ((px - ax) * dx + (py - ay) * dy) / (dx * dx + dy * dy),
-                    0, 1)
-                dmin = min(dmin, float(np.hypot(px - (ax + t * dx),
-                                                py - (ay + t * dy))))
-            assert dmin <= tol + 1e-6, (zid, dmin)
-
-    # spike-peninsula regression: line-based DP amputated a vertex 1.0
-    # away from the chain because it is colinear with the chord
-    from asag_spark.geo.simplify import simplify_ring
-    pen = np.array([[0.0, 0.0], [1.0, 0.0], [2.0, 0.00005], [1.0, 0.0001],
-                    [1.0, 1.0], [0.0, 1.0]])
-    kept = simplify_ring(pen, 0.001)
-    assert any(abs(kept[:, 0] - 2.0) < 1e-9), kept  # peninsula survives
-
-    # null / non-polygon rows pass through instead of failing the job
-    mixed = spark.createDataFrame(
-        [("P", "POINT(10 59)"), ("N", None), ("Z", sq)],
-        "zone_id string, geom_wkt string")
-    got = {r["zone_id"]: r for r in
-           simplify_polygons(mixed, 0.001).collect()}
-    assert got["P"]["geom_wkt"] == "POINT(10 59)" and got["P"]["n_after"] == 0
-    assert got["N"]["geom_wkt"] is None
-    assert got["Z"]["n_after"] == 4
-
-    # MULTIPOLYGON (and any non-POLYGON tag) passes through UNCHANGED:
-    # round 2 gated on "((" and silently rewrote a MULTIPOLYGON as a
-    # single-ring POLYGON, dropping its second shell (ADVICE r02)
-    mp = ("MULTIPOLYGON(((0 0, 1 0, 1 1, 0 0)), "
-          "((5 5, 6 5, 6 6, 5 5)))")
-    holed = "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))"
-    mixed2 = spark.createDataFrame(
-        [("M", mp), ("H", holed)], "zone_id string, geom_wkt string")
-    got2 = {r["zone_id"]: r for r in
-            simplify_polygons(mixed2, 0.001).collect()}
-    assert got2["M"]["geom_wkt"] == mp and got2["M"]["n_after"] == 0
-    # POLYGON with interior rings: exterior-ring-only is the repo-wide
-    # compat rule (SURVEY P5) — the simplified output keeps only the
-    # exterior shell, explicitly (not silently)
-    assert got2["H"]["geom_wkt"].startswith("POLYGON((0.0000000 0.0000000")

@@ -183,74 +183,6 @@ def test_tfidf_single_text_pass(spark):
     assert _shuffles(plan) <= 4, plan
 
 
-
-def test_zorder_layout_prunes_second_column(spark, tmp_path):
-    """Z-order layout contract, measured on the actual parquet footers:
-    a predicate on the SECOND clustering column alone must prune most
-    files (each z-ordered file covers a compact box in BOTH columns),
-    while a lon-only sort leaves every file spanning the full lat range
-    — footer min/max pruning on lat then touches 16/16 files."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from asag_spark.sources import write_zordered
-
-    pts = spark.range(20000).select(
-        F.col("id"),
-        (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(10_000)) / 1e4 * 25 + 5
-         ).alias("lon"),
-        (F.pmod(F.xxhash64("id", F.lit(2)), F.lit(10_000)) / 1e4 * 13 + 58
-         ).alias("lat"),
-    )
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    write_zordered(pts, zpath, ("lon", "lat"), partitions=16)
-    (pts.repartitionByRange(16, F.col("lon")).sortWithinPartitions("lon")
-        .write.mode("overwrite").parquet(spath))
-
-    def files_hit(path, lat_lo, lat_hi):
-        hit, total = 0, 0
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            total += 1
-            md = pq.ParquetFile(os.path.join(path, f)).metadata
-            lo, hi = float("inf"), float("-inf")
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for ci in range(row.num_columns):
-                    col = row.column(ci)
-                    if col.path_in_schema == "lat" and col.statistics:
-                        lo = min(lo, col.statistics.min)
-                        hi = max(hi, col.statistics.max)
-            if hi >= lat_lo and lo <= lat_hi:
-                hit += 1
-        return hit, total
-
-    z_hit, z_total = files_hit(zpath, 60.0, 60.5)
-    s_hit, s_total = files_hit(spath, 60.0, 60.5)
-    assert s_hit == s_total, "lon-sort leaves lat stats full-width"
-    assert z_hit <= z_total // 2, (z_hit, z_total)
-
-
-def test_zorder_guards(spark, tmp_path):
-    """write_zordered edge guards: bit-width over the long sign bit is
-    a loud ValueError, empty input degrades to a plain write."""
-    import pytest as pt
-
-    from asag_spark.sources import write_zordered
-
-    pts = spark.range(10).select(
-        F.col("id"), (F.col("id") * 1.0).alias("a"),
-        (F.col("id") * 2.0).alias("b"), (F.col("id") * 3.0).alias("c"),
-        (F.col("id") * 4.0).alias("d"),
-    )
-    with pt.raises(ValueError, match="bits"):
-        write_zordered(pts, str(tmp_path / "x"), ("a", "b", "c", "d"))
-    write_zordered(pts.filter(F.lit(False)), str(tmp_path / "e"), ("a", "b"))
-    assert spark.read.parquet(str(tmp_path / "e")).count() == 0
-
-
 def test_seq_pack_window_is_bucket_partitioned(spark):
     """seq_pack's scale story (SCALE.md §8): the global running sum
     must NEVER compile to a single-partition window — the prefix sum
@@ -280,49 +212,6 @@ def test_contamination_filters_before_fp_join(spark):
     plan = _plan(contamination_check(docs))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_write_training_shards_ordered_runs(spark, tmp_path):
-    """Each shard directory reads back as ONE ordered run: pos strictly
-    ascending in file order (zero read-side sorting for the trainer),
-    every doc appears exactly once across shards, and the layout is
-    reproducible (same seed → identical shard membership)."""
-    from asag_spark.sources import write_training_shards
-
-    docs = spark.range(0, 500).selectExpr(
-        "id AS doc_id", "concat('text ', id) AS text"
-    )
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path, n_shards=4)
-
-    import glob
-
-    seen = {}
-    for d in sorted(glob.glob(f"{path}/shard=*")):
-        shard = int(d.rsplit("=", 1)[1])
-        # read the shard's parquet files in file order WITHOUT Spark
-        # (Spark's scan may reorder splits) — pyarrow preserves row order
-        import pyarrow.parquet as pq
-
-        parts = sorted(glob.glob(f"{d}/*.parquet"))
-        assert len(parts) == 1, "one ordered run per shard directory"
-        t = pq.read_table(parts[0]).to_pydict()
-        ps = t["pos"]
-        assert ps == sorted(ps) and len(set(ps)) == len(ps), shard
-        for did in t["doc_id"]:
-            assert did not in seen
-            seen[did] = shard
-    assert len(seen) == 500
-    # determinism: a rewrite lands every doc in the same shard
-    path2 = str(tmp_path / "shards2")
-    write_training_shards(docs, path2, n_shards=4)
-    for d in sorted(glob.glob(f"{path2}/shard=*")):
-        shard = int(d.rsplit("=", 1)[1])
-        import pyarrow.parquet as pq
-
-        for f in glob.glob(f"{d}/*.parquet"):
-            for did in pq.read_table(f).to_pydict()["doc_id"]:
-                assert seen[did] == shard
 
 
 def test_lm_score_tokenizes_once_per_keyspace(spark, sf_dir):
@@ -374,26 +263,3 @@ def test_ngram_scrub_shuffle_budget(spark, sf_dir):
     plan = _plan(df).split("== Initial Plan ==")[0]
     assert len(re.findall(r"Exchange (?:hash|range|rebalance|Single)",
                           plan)) <= 7
-
-
-def test_compact_partitions_parity_and_file_counts(spark, tmp_path):
-    """Table maintenance: 40 small files per partition collapse to 1
-    (tiny data, huge target) with byte-identical rows, atomically; a
-    second compaction is a no-op in file count."""
-    from asag_spark.sources import compact_partitions
-
-    p = str(tmp_path / "t")
-    base = spark.range(5000).select(
-        F.col("id"), (F.col("id") % 4).alias("part"),
-        F.md5(F.col("id").cast("string")).alias("v"),
-    )
-    for i in range(5):
-        base.filter(F.col("id") % 5 == i).repartition(8).write.mode(
-            "append"
-        ).partitionBy("part").parquet(p)
-    before = spark.read.parquet(p).orderBy("id").collect()
-    stats = compact_partitions(spark, p, "part", target_bytes=1 << 30)
-    assert stats["files_after"] == 4 < stats["files_before"]
-    assert spark.read.parquet(p).orderBy("id").collect() == before
-    stats2 = compact_partitions(spark, p, "part", target_bytes=1 << 30)
-    assert stats2["files_before"] == stats2["files_after"] == 4

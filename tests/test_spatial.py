@@ -249,12 +249,20 @@ def _sweep_case(name):
             10.099, 59.999)
         return [(f"V{i}", lo, la)
                 for i, (lo, la) in enumerate(on_ring + cells)], zones
+    if name == "far_from_lon0":
+        # past |lon| ≈ 33° a tall zone's cell cover peaks in q inside
+        # its east/west edges (here near lat -12.7°), not at a corner
+        return [(f"F{i}", lo, -12.7) for i, lo in enumerate(
+            (150.0001, 150.9999, 150.5, 149.9999, 151.0001))], zones + [
+            ("Z:far", "POLYGON((150.0 -40.0, 151.0 -40.0, 151.0 10.0, "
+                      "150.0 10.0, 150.0 -40.0))"),
+        ]
     raise ValueError(name)
 
 
 @pytest.mark.parametrize("case", [
     "empty", "no_zones", "all_invalid", "duplicates", "antimeridian_poles",
-    "boundaries",
+    "boundaries", "far_from_lon0",
 ])
 def test_pip_family_edge_cases(spark, case):
     """The broadcast PIP family (pip_join, pip_anti_join,
@@ -321,7 +329,8 @@ def test_pip_family_edge_cases(spark, case):
                 got is not None and want is not None
                 and math.isnan(got) and math.isnan(want)
             ), (r, lo, la)
-    if case in ("duplicates", "antimeridian_poles", "boundaries"):
+    if case in ("duplicates", "antimeridian_poles", "boundaries",
+                "far_from_lon0"):
         assert want_pairs   # real hits or the case proves nothing
 
 

@@ -188,6 +188,25 @@ def test_checkpoint_resume(spark, sf_dir, tmp_path):
     assert len(m) == len(footers) == 8
     assert got == footers == {i: i + 1 for i in range(8)}
 
+    # an empty stage: one empty part file, one metrics row with
+    # row_count 0, and a rerun resumes it instead of rebuilding
+    empty = {"builds": 0}
+
+    def build_empty():
+        empty["builds"] += 1
+        return spark.range(10).filter(F.col("id") < 0)
+
+    for resumed in (False, True):
+        p5 = CheckpointedPipeline(spark, workdir, input_fp="fp_empty")
+        assert p5.run_stage("stage_e", build_empty).count() == 0
+        assert [s["resumed"] for s in p5.stage_log] == [resumed]
+    assert empty["builds"] == 1
+    data_dir = os.path.join(workdir, "stage_e", "data")
+    footers = [pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows
+               for f in os.listdir(data_dir) if f.startswith("part-")]
+    m = spark.read.parquet(os.path.join(workdir, "stage_e", "metrics")).collect()
+    assert [r["row_count"] for r in m] == footers == [0]
+
 
 def test_sessionize_stateful_cross_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState with state genuinely carried ACROSS

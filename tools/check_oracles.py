@@ -3,6 +3,9 @@ queries() entry against its oracle_sql() on DuckDB at sf0.01 and
 compare row count, column set, and an order-insensitive value hash.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query_prefix]
+
+Runs on local[n], n = the CPUs this process may use. Exits 1 if any
+query fails or the prefix matches no query.
 """
 
 from __future__ import annotations
@@ -38,10 +41,11 @@ def canon_hash(df: pd.DataFrame) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else ""
-    spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=8)
+    n = len(os.sched_getaffinity(0))
+    spark = get_spark("oracle_check", master=f"local[{n}]", shuffle_partitions=n)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -51,10 +55,11 @@ def main() -> None:
     qs.update(entry_mod.demoted_queries())
     oracles = dict(entry_mod.oracle_sql())
     oracles.update(entry_mod.demoted_oracle_sql())
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_run = 0
     for name, fn in qs.items():
         if only and not name.startswith(only):
             continue
+        n_run += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
@@ -94,7 +99,10 @@ def main() -> None:
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     spark.stop()
+    if not n_run:
+        print(f"no query matches prefix {only!r}")
+    return 1 if n_fail or not n_run else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

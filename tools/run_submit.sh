@@ -5,9 +5,10 @@
 #   tools/run_submit.sh <master> <docs_parquet> <workdir> [zones_parquet]
 #
 # Packages asag_spark into a zip (what a cluster submit ships to the
-# executors), then drives plans/job.py with it. Example A/B pair:
-#   tools/run_submit.sh local[8]  /tmp/asag_bench/docs_500000 /tmp/wd_n
-#   tools/run_submit.sh local[32] /tmp/asag_bench/docs_500000 /tmp/wd_4n
+# executors), then drives plans/job.py with it. Example, on the inputs
+# `python3 perfbench/run.py --workload geo_job` generates:
+#   tools/run_submit.sh local[4] .perfbench_cache/geo_job-full-seed1/docs \
+#     /tmp/wd .perfbench_cache/geo_job-full-seed1/zones
 set -euo pipefail
 
 MASTER="${1:?master (e.g. local[8])}"
