@@ -457,56 +457,6 @@ def _t_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize plan (operators/media.resize_dims)."""
-    from asag_spark.operators.media import resize_dims
-
-    return resize_dims(_media_decoded(spark, sf_dir), target=256).select(
-        "media_ref", "width", "height", "new_width", "new_height"
-    )
-
-
-def _t_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plan (operators/media.sample_frames): sequence +
-    posexplode over the stub duration, one row per sampled frame."""
-    from asag_spark.operators.media import sample_frames
-
-    return sample_frames(_media_decoded(spark, sf_dir), every_s=10).select(
-        "media_ref", "duration_s", "frame_idx", "frame_ts_s"
-    )
-
-
-def _t_media_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel decode end-to-end (VERDICT r04 #5): the media
-    catalog's refs resolve to deterministic uncompressed PPM/BMP blobs
-    (datagen.media_blob — the object-store stand-in), decode_pixels
-    parses the CONTAINER BYTES with the pure-numpy decoder
-    (media.decode_rgb; is_stub=False, no imaging library involved),
-    and the oracle recomputes the expected 16x16 luma from the
-    generative md5-keystream formula — so only a correct byte-level
-    parse (PPM header skip, BMP's bottom-up BGR padded rows) makes the
-    value hashes meet. Output: per-ref thumbnail fingerprint (sum +
-    first/last probes) — scalars, engine-portable."""
-    from asag_spark.datagen import with_media_blobs
-    from asag_spark.operators.media import decode_pixels, extract_media
-    from asag_spark.sources import docs_from_documents
-
-    cat = extract_media(docs_from_documents(spark, sf_dir))
-    m = with_media_blobs(cat).filter(F.col("blob").isNotNull())
-    d = decode_pixels(m, bytes_col="blob", target=16)
-    return d.select(
-        "media_ref",
-        "px_width",
-        "px_height",
-        "is_stub",
-        F.expr(
-            "aggregate(pixels, CAST(0 AS BIGINT), (a, x) -> a + x)"
-        ).alias("px_sum"),
-        F.element_at("pixels", 1).alias("px_first"),
-        F.element_at("pixels", 256).alias("px_last"),
-    )
-
-
 def _t_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.text import token_count
 
@@ -614,40 +564,6 @@ def _t_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weights(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
-def _t_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup cluster-scoped semantic dedup (similarity.semdedup) —
-    IVF coarse cells bound the pairwise cosine; smaller-id keep rule.
-    Threshold 0.3 matches the synthetic corpus's similarity range
-    (its within-cell max cosine is ~0.47; the paper's 0.95 applies to
-    real near-duplicate embeddings)."""
-    from asag_spark.operators.similarity import semdedup
-
-    return semdedup(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.3
-    )
-
-
-def _t_semdedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the paper's keep-best representative
-    (similarity.semdedup_keep_best): the shared pair stage feeds
-    dedup_clusters' components, keeper = argmax(quality) instead of
-    smallest id. Quality is a deterministic md5_long60-derived
-    pseudo-score so the oracle can mirror it exactly (the engine-wide
-    portable-hash idiom)."""
-    from asag_spark.operators.similarity import semdedup_keep_best
-    from asag_spark.operators.text import md5_long60
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    scores = emb.select(
-        "vec_id",
-        F.pmod(
-            md5_long60(F.concat(F.lit("sdkb:"), F.col("vec_id").cast("string"))),
-            F.lit(1000),
-        ).alias("quality"),
-    )
-    return semdedup_keep_best(emb, scores, threshold=0.3)
-
-
 def _t_table_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style data-quality contract (operators/checks.py) over
     the documents table — six rules, one aggregation pass. The range
@@ -675,15 +591,6 @@ def _t_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.text import chunk_windows
 
     return chunk_windows(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def _t_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One distributed Lloyd step of the IVF quantizer
-    (similarity.ivf_train_step) — map-only assignment, bounded-volume
-    mean aggregation."""
-    from asag_spark.operators.similarity import ivf_train_step
-
-    return ivf_train_step(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def _t_quality_topq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,16 +661,6 @@ def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.events import funnel_steps
 
     return funnel_steps(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _t_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining (similarity.hard_negatives): exact cosine
-    shortlist anti-joined against the hyperplane-LSH near-dup pairs,
-    re-ranked — the contrastive-training sampler."""
-    from asag_spark.operators.similarity import hard_negatives
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return hard_negatives(e, e.filter(F.col("vec_id") < 5), k=5)
 
 
 def _t_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1117,22 +1014,6 @@ def _t_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(e, e.filter(F.col("vec_id") < 5), k=5)
 
 
-def _t_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd refinement of the PQ sub-codebooks
-    (operators/similarity.pq_train_step) — integer-exact assignment,
-    per-(subspace, centroid, dim) member means."""
-    from asag_spark.operators.similarity import pq_train_step
-
-    return pq_train_step(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-
-
-def _t_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from asag_spark.operators.similarity import cosine_topk_lsh
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_topk_lsh(e, e.filter(F.col("vec_id") < 5), k=5)
-
-
 def _t_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from asag_spark.operators.similarity import ivf_topk
 
@@ -1297,53 +1178,6 @@ def _s_checks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql("SELECT * FROM s_checks_stream_tbl")
 
 
-def _t_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI drift between the events value distribution and a
-    deterministically shifted snapshot (+120 on even event_ids —
-    half the mass moves up ~2.4 bins, PSI lands in the 'shifted'
-    band); bins/bounds derive from the reference min/max."""
-    from asag_spark.operators.checks import psi_drift
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cur = ev.select(
-        F.when(F.col("event_id") % 2 == 0, F.col("value") + 120)
-        .otherwise(F.col("value")).alias("value")
-    )
-    return psi_drift(ev, cur, "value", bins=10)
-
-
-def _t_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass column profile of the documents table (exact
-    distincts — the expand cost is the documented trade)."""
-    from asag_spark.operators.checks import profile_table
-
-    return profile_table(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        ["doc_id", "lang", "source", "n_chars"],
-    )
-
-
-def _t_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC diff (sources.snapshot_diff) between documents and a
-    deterministically mutated snapshot exercising all four classes:
-    doc_id%10==3 removed, doc_id%13==0 cloned to +1M ids (added),
-    doc_id%5==1 n_chars bumped (changed), rest unchanged. The oracle
-    compares VALUES with IS NOT DISTINCT FROM — deliberately not the
-    hash — so the gate checks the semantics, not the implementation."""
-    from asag_spark.sources import snapshot_diff
-
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    mutated = base.filter(F.col("doc_id") % 10 != 3).withColumn(
-        "n_chars",
-        F.when(F.col("doc_id") % 5 == 1, F.col("n_chars") + 1)
-        .otherwise(F.col("n_chars")),
-    )
-    added = base.filter(F.col("doc_id") % 13 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
-    )
-    return snapshot_diff(base, mutated.unionByName(added), ["doc_id"])
-
-
 def _t_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Efraimidis–Spirakis weighted sample (text.weighted_sample),
     k=100 of the documents weighted by n_chars — longer docs win
@@ -1434,25 +1268,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_minhash_lsh": _t_minhash_lsh,
         "t_cosine_topk": _t_cosine_topk,
         "t_ivf_topk": _t_ivf_topk,
-        # this session: PQ/ADC quantized ANN — the m-bytes-per-vector
-        # compressed read path, integer-exact sub-distances (takes
-        # t_sq8_topk's slot, which rides the demoted registry with the
-        # same oracle; quantized-ANN family stays live here, and SQ8
-        # keeps its pytest parity + bench rows). Slot lineage:
-        # t_corpus_stats -> t_sq8_topk (r3) -> t_pq_topk (r3)
+        # PQ/ADC quantized ANN — the m-bytes-per-vector compressed
+        # read path, integer-exact sub-distances (SQ8 rides the demoted
+        # registry as t_sq8_topk and keeps its pytest parity + bench
+        # rows)
         "t_pq_topk": _t_pq_topk,
         "t_emb_near_dups": _t_emb_near_dups,
         "t_simhash_near_dups": _t_simhash,
         "t_media_decode": _t_media_decode,
-        # this session: bigram-LM fluency scoring (CCNet-style corpus
-        # perplexity dial) — takes t_token_count's slot; raw token
-        # stats stay oracle-gated in the demoted registry and live via
-        # t_quality / t_gopher_filter, which both tokenize
+        # bigram-LM fluency scoring (CCNet-style corpus perplexity
+        # dial); token statistics are live via t_quality /
+        # t_gopher_filter, which both tokenize
         "t_lm_score": _t_lm_score,
         "t_quality": _t_quality,
-        # this session: PII scrubbing — a first-class training-data
-        # op the suite lacked (takes t_frame_sample's slot; media
-        # stays live via t_media_decode / t_media_features)
+        # PII scrubbing — a first-class training-data op (media is
+        # live via t_media_decode / t_media_features)
         "t_pii_scrub": _t_pii_scrub,
         # round-3: composite Gopher quality gate over the repetition +
         # word-length + stopword rules, with per-doc drop reasons
@@ -1461,16 +1291,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t_winnow_fp": _t_winnow,
         "t_exact_dedup": _t_exact_dedup,
         "t_dedup_clusters": _t_dedup_clusters,
-        # this session: distributed BPE merge scoring — tokenizer
-        # training as an engine op (takes t_jaccard_pairs' slot; the
-        # jaccard verify stays exercised inside t_minhash_dedup's
-        # demoted oracle and its own demoted entry)
+        # distributed BPE merge scoring — tokenizer training as an
+        # engine op (the jaccard verify is exercised inside
+        # t_minhash_dedup's demoted oracle and its own demoted entry)
         "t_bpe_pairs": _t_bpe_pairs,
-        # this session: overlapping-window exact-substring scrub —
-        # the strictly stronger Lee-et-al pass (takes
-        # t_paragraph_dedup's slot; fixed-chunk paragraph dedup rides
-        # the demoted registry with the same oracle, and the
-        # misaligned-repeat differentiator is pytest-pinned)
+        # overlapping-window exact-substring scrub — the Lee-et-al
+        # pass; the misaligned-repeat case is pytest-pinned
         "t_ngram_scrub": _t_ngram_scrub,
         "t_tfidf_top": _t_tfidf_top,
         "t_kmv_distinct": _t_kmv_distinct,
@@ -1514,183 +1340,87 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def demoted_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Engine operators demoted from the 50-entry driver registry
-    (each op family keeps a representative above: as-of →
-    q_asof_window, raster → rasterize/polygon_raster fixtures). Still
-    correctness-gated: tests/test_demoted_oracles.py runs each against
-    its DuckDB oracle, and tools/check_oracles.py covers both
-    registries."""
+    """Engine operators outside the 50-entry queries() registry. Each
+    is still correctness-gated: tests/test_demoted_oracles.py runs it
+    against its DuckDB oracle, and tools/check_oracles.py covers both
+    registries. The geo/tiling entries and the curate-pipeline ops are
+    reached outside this registry; the event, text and dedup
+    operators at the end are reached only here and by their tests
+    (tests/test_reach.py keeps that list)."""
     return {
-        "q_asof_pandas": _q_asof_pandas,
-        "q_topk_per_user": _q_topk_user,
+        # spatial indexing and snapping (golden-pinned, with scalar
+        # references and strategy parity in tests/test_spatial.py)
+        "g_geohash": _g_geohash,
+        "g_boundary_snap": _g_boundary_snap,
+        # the open-polyline sibling (stop-to-route map-matching)
+        "g_line_snap": _g_line_snap,
+        # the distributed snap strategy, pinned to g_boundary_snap's
+        # golden rows
+        "g_snap_distributed": _g_snap_distributed,
+        # coverage-gap fallback: nearest zone for PIP's anti set
+        "g_snap_nearest_zone": _q_snap_zone,
+        # exact hex polyfill (center-in-ring), rolled up per zone
+        "g_polyfill_stats": _g_polyfill_stats,
+        # single-level eps clustering; the two-level strategy is live
+        # as g_spatial_clusters_part with the same oracle
+        "g_spatial_clusters": _g_spatial_clusters,
+        # fixed-radius two-table spatial join
+        "g_distance_join": _g_distance_join,
+        # hex focal-mean smoothing
+        "g_cell_smooth": _g_cell_smooth,
+        # Web-Mercator raster and vector tiles
         "q_xyz_raster": _q_xyz_raster,
         "q_xyz_vectorize": _q_xyz_vectorize,
-        # streaming dedup: replay-duplicated input -> exactly-once set
-        # (bounded state via dropDuplicatesWithinWatermark)
+        "q_mvt_coords": _q_mvt_coords,
+        # batch and streaming event jobs (availableNow batch-parity
+        # oracles)
+        "q_sessionize": _q_sessionize,
         "s_dedup_stream": _s_dedup_stream,
-        # deterministic train/val/test split (hash-bucketed, stable
-        # under appends and across engines)
+        "s_tile_stream": _s_tile_stream,
+        "s_checks_stream": _s_checks_stream,
+        # training-data ops that the curate pipeline runs
+        "t_table_checks": _t_table_checks,
         "t_split_assign": _t_split_assign,
-        # round-3 addition: bounded-interval range join (time-bucketed
-        # equi-join, not a nested-loop) — as-of stays live via
-        # q_asof_window, so the range variant rides here, same oracle
-        # discipline
-        "q_range_join": _q_range_join,
-        # demoted round 3 for g_spatial_clusters: ANN top-k stays live
-        # twice over (t_cosine_topk brute, t_ivf_topk indexed) and the
-        # banded-hyperplane LSH path stays live via t_emb_near_dups —
-        # the LSH-probed top-k variant rides here with the same oracle
-        "t_cosine_topk_lsh": _t_cosine_topk_lsh,
-        # demoted round 3 for t_ngram_scrub (the overlapping-window
-        # superset); first-occurrence-wins chunk dedup keeps its oracle
-        "t_paragraph_dedup": _t_paragraph_dedup,
-        # born-demoted round 3: ordered-sequence funnel — the
-        # MATCH_RECOGNIZE-shaped events op (events family live via
-        # q_event_anomaly; sessionization live via
-        # s_sessionize_stateful)
-        "q_funnel": _q_funnel,
-        # born-demoted round 3: hard-negative mining — composes the
-        # live ANN + near-dup primitives into the contrastive sampler
-        "t_hard_negatives": _t_hard_negatives,
-        # born-demoted round 3: rendezvous sharding — the incremental
-        # corpus-maintenance layout (mod-N epoch sharding stays live
-        # via t_seq_pack's family; jump-vs-full-remap pinned in pytest)
         "t_rendezvous_shards": _t_rendezvous,
-        # born-demoted round 3 (live set full at 50): geohash — the
-        # fourth spatial index family (hex, S2, quadkey, geohash)
-        "g_geohash": _g_geohash,
-        # born-demoted round 3 (live set full at 50): nearest-edge
-        # snap, golden-pinned + scalar-reference-verified in pytest
-        "g_boundary_snap": _g_boundary_snap,
-        # round 4: the open-polyline sibling (stop-to-route
-        # map-matching), same shared kernel + pruned gate
-        "g_line_snap": _g_line_snap,
-        # round 5: the no-collect distributed strategy pinned to the
-        # SAME golden rows as g_boundary_snap (VERDICT r04 #1)
-        "g_snap_distributed": _g_snap_distributed,
-        # round 4: exact hex polyfill (center-in-ring), rolled up per
-        # zone — the full cell set is property-gated in pytest
-        "g_polyfill_stats": _g_polyfill_stats,
-        # demoted round 3 for t_pq_topk: SQ8 is the scalar-quantized
-        # sibling of the PQ read path that replaced it live; identical
-        # oracle, plus its own pytest recall/parity gates
-        "t_sq8_topk": _t_sq8_topk,
-        # demoted round 3 for t_lm_score: raw token counting is a
-        # two-expression select; the token pipeline stays live through
-        # t_quality / t_gopher_filter / t_lm_score itself
-        "t_token_count": _t_token_count,
-        # --- restored 50-entry driver window (this session) ---
-        # The round-3 operator batch grew the live registry to 69, but
-        # the driver checks only the FIRST 50 registered entries
-        # (evidence: rounds 1 and 2 both produced exactly 50
-        # CORRECTNESS rows, and round 1's >50 registry left the tail
-        # unchecked — VERDICT r01). Every overflow entry moves here
-        # with its oracle intact; each op family keeps a live
-        # representative in the window:
-        # gap fallback — knn family live via knn_fixture/g_pip_anti
-        "g_snap_nearest_zone": _q_snap_zone,
-        # minhash end-to-end = lsh candidates (live) + jaccard verify
-        # (live), composition parity-tested in tests
-        "t_minhash_dedup": _t_minhash_dedup,
-        # media family live via t_media_decode / t_frame_sample /
-        # t_media_features
-        "t_media_resize": _t_media_resize,
-        # NEW r5: REAL pixel decode (pure-numpy PPM/BMP over
-        # deterministic blobs) with a generative-formula value oracle
-        "t_media_pixels": _t_media_pixels,
-        # repetition stats ride inside the live t_gopher_filter gate
-        "t_repetition": _t_repetition,
-        # fingerprint family live via t_winnow_fp
         "t_fingerprint": _t_fingerprint,
-        # sampling family live via t_stratified_sample
+        "t_jaccard_pairs": _t_jaccard,
+        "t_minhash_dedup": _t_minhash_dedup,
+        "t_quality_topq": _t_quality_topq,
+        # SQ8 quantized ANN, the inline reference for the
+        # sq8_topk_encoded read path that perfbench runs
+        "t_sq8_topk": _t_sq8_topk,
+        # event operators beside the live as-of and anomaly entries:
+        # the pandas as-of plan, per-user top-k, the bounded-interval
+        # range join (time-bucketed equi-join, not a nested loop), the
+        # ordered-sequence funnel and weekly retention cohorts
+        "q_asof_pandas": _q_asof_pandas,
+        "q_topk_per_user": _q_topk_user,
+        "q_range_join": _q_range_join,
+        "q_funnel": _q_funnel,
+        "q_retention_cohorts": _q_retention,
+        # text statistics and sampling: raw token counts, per-source
+        # corpus stats, repetition metrics (live inside
+        # t_gopher_filter), epoch shuffle, per-stratum cap,
+        # temperature resampling, token windows, DSIR importance
+        # weights and the Efraimidis–Spirakis weighted sample
+        "t_token_count": _t_token_count,
+        "t_corpus_stats": _t_corpus_stats,
+        "t_repetition": _t_repetition,
+        "t_train_shuffle": _t_train_shuffle,
+        "t_lang_cap": _t_lang_cap,
         "t_temperature_resample": _t_temperature,
         "t_chunk_windows": _t_chunk_windows,
-        # exact decontamination live via t_contamination; the Bloom
-        # prefilter plan stays pytest-pinned
-        "t_contamination_bloom": _t_contamination_bloom,
-        # single-level clustering kernel; the two-level partitioned
-        # strategy is live (same oracle, parity sweep in tests)
-        "g_spatial_clusters": _g_spatial_clusters,
-        # batch sessionize — s_sessionize_stateful carries the SAME
-        # oracle live (stateful streaming variant)
-        "q_sessionize": _q_sessionize,
-        # cluster family live via t_dedup_clusters
-        "t_dedup_keep_best": _t_dedup_keep_best,
-        # per-stratum cap — selection family live via
-        # t_stratified_sample; exact top-k live via t_tfidf_top
-        "t_lang_cap": _t_lang_cap,
-        # events family live via q_event_anomaly
-        "q_retention_cohorts": _q_retention,
-        # fixed-radius two-table join — spatial-join family live via
-        # pip/knn/g_spatial_clusters_part
-        "g_distance_join": _g_distance_join,
-        # ANN quantizer refinement — ANN live via t_ivf_topk
-        "t_ivf_train_step": _t_ivf_train,
-        # PQ sub-codebook Lloyd step, same discipline (PQ live via
-        # t_pq_topk)
-        "t_pq_train_step": _t_pq_train,
-        # raster family live via rasterize/vectorize/polygon_raster
-        "g_cell_smooth": _g_cell_smooth,
-        # quality family live via t_quality / t_gopher_filter
-        "t_quality_topq": _t_quality_topq,
-        # epoch shuffle — ordering/sharding stays pytest-benched;
-        # packing family live via t_seq_pack
-        "t_train_shuffle": _t_train_shuffle,
-        # MVT coordinate transform rides inside the live g_tile_clip
-        # (extent-4096 coords) and tile family via q_xyz_tiles
-        "q_mvt_coords": _q_mvt_coords,
-        # displaced by t_pii_scrub — media family live via
-        # t_media_decode / t_media_features
-        "t_frame_sample": _t_frame_sample,
-        # displaced by g_compact_tiles — streaming stays live via
-        # s_hourly_stream + s_sessionize_stateful; the tile-keyed
-        # stream also remains batch-parity-tested in tests
-        "s_tile_stream": _s_tile_stream,
-        # displaced by t_sq8_topk — stats family live via t_quality /
-        # q_event_anomaly; the per-source percentile stats stay
-        # oracle-gated here
-        "t_corpus_stats": _t_corpus_stats,
-        # this session, born demoted: CCNet-style corpus-frequency
-        # boilerplate removal (drop ALL copies of hot chunks) — the
-        # dedup family's live slots stay with exact/paragraph/cluster
-        "t_boilerplate": _t_boilerplate,
-        # displaced by t_bpe_pairs — minhash family live via
-        # t_minhash_lsh; jaccard verify also rides t_minhash_dedup
-        "t_jaccard_pairs": _t_jaccard,
-        # this session, born demoted: DSIR importance-resampling
-        # weights (hashed-ngram target/raw log-likelihood ratio) —
-        # the selection family's live slots stay with
-        # t_stratified_sample / t_contamination
         "t_dsir_weights": _t_dsir,
-        # this session, born demoted: SemDeDup cluster-scoped semantic
-        # dedup — the embedding-dedup family's live slot stays with
-        # t_emb_near_dups (banded-LSH pairs); this adds the
-        # IVF-cell-bounded variant with the keep decision inline
-        "t_semdedup": _t_semdedup,
-        "t_semdedup_keep_best": _t_semdedup_keep_best,
-        # this session, born demoted: Deequ-style data-quality contract
-        # (single-pass conditional aggregates; the content-level
-        # validation stage between landing and curation)
-        "t_table_checks": _t_table_checks,
-        # this session, born demoted: the same contract per hourly
-        # event-time window as a streaming monitor (availableNow
-        # batch-parity oracle, like the rest of the streaming family)
-        "s_checks_stream": _s_checks_stream,
-        # this session, born demoted: PSI distribution-drift monitor
-        # (two map-combined bin aggs + a <=bins+1-row join; quantized
-        # per-bin terms so the total is an integer sum)
-        "t_psi_drift": _t_psi_drift,
-        # this session, born demoted: single-pass column profiler (the
-        # observe side of the checks family)
-        "t_profile": _t_profile,
-        # this session, born demoted: key-level snapshot CDC diff
-        # (map-side row hashes, one key-bucketed full outer join;
-        # value-comparison oracle, stronger than the hash)
-        "t_snapshot_diff": _t_snapshot_diff,
-        # this session, born demoted: Efraimidis–Spirakis weighted
-        # sample (exponential race; TakeOrderedAndProject, no full
-        # sort) — the weighted complement of t_stratified_sample
         "t_weighted_sample": _t_weighted_sample,
+        # exact decontamination is live via t_contamination; this is
+        # its Bloom-prefiltered plan
+        "t_contamination_bloom": _t_contamination_bloom,
+        # chunk-level dedup: first-occurrence-wins paragraph dedup,
+        # corpus-frequency boilerplate removal (drops ALL copies of
+        # hot chunks) and the quality-ranked keeper per cluster
+        "t_paragraph_dedup": _t_paragraph_dedup,
+        "t_boilerplate": _t_boilerplate,
+        "t_dedup_keep_best": _t_dedup_keep_best,
     }
 
 
@@ -2389,70 +2119,6 @@ _MEDIA_DECODE_SQL = f"""
 SELECT doc_id, media_ref, width, height, format, duration_s FROM dec
 """
 
-_MEDIA_RESIZE_SQL = f"""
-{_MEDIA_CTE}
-SELECT media_ref, width, height,
-  CAST(CASE WHEN width <= 256 AND height <= 256 THEN width
-            WHEN width >= height THEN 256
-            ELSE GREATEST(CAST(FLOOR(width * 256.0 / height) AS INTEGER), 1)
-       END AS INTEGER) AS new_width,
-  CAST(CASE WHEN width <= 256 AND height <= 256 THEN height
-            WHEN width >= height
-              THEN GREATEST(CAST(FLOOR(height * 256.0 / width) AS INTEGER), 1)
-            ELSE 256
-       END AS INTEGER) AS new_height
-FROM dec
-"""
-
-_FRAME_SAMPLE_SQL = f"""
-{_MEDIA_CTE}
-SELECT media_ref, duration_s,
-       CAST(ts // 10 AS INTEGER) AS frame_idx,
-       CAST(ts AS INTEGER) AS frame_ts_s
-FROM dec, UNNEST(generate_series(0, duration_s - 1, 10)) AS u(ts)
-"""
-
-
-def _ks_byte(c: int) -> str:
-    """SQL: channel-``c`` byte of pixel p from the media-blob keystream
-    (mirrors datagen.media_blob: byte (3p+c) of the concatenated
-    md5(ref || ':px:' || counter) digests — block (3p+c)//16, offset
-    (3p+c)%16)."""
-    idx = f"(p * 3 + {c})"
-    hx = f"md5(ref || ':px:' || CAST({idx} // 16 AS VARCHAR))"
-    off = f"({idx} % 16)"
-    hi = f"(strpos('0123456789abcdef', substr({hx}, 2 * {off} + 1, 1)) - 1)"
-    lo = f"(strpos('0123456789abcdef', substr({hx}, 2 * {off} + 2, 1)) - 1)"
-    return f"({hi} * 16 + {lo})"
-
-
-# real-decode oracle: expected luma recomputed from the generative
-# formula (NOT by parsing the container) — equality proves the engine's
-# byte-level PPM/BMP parse + ITU-R 601-2 integer luma are correct
-_MEDIA_PIXELS_SQL = f"""
-WITH m AS (
-  SELECT 'img://DOC:StopPlace:' || CAST(doc_id AS VARCHAR) || '.jpg' AS ref
-  FROM documents WHERE doc_id % 8 = 0
-),
-sel AS (
-  SELECT ref FROM m WHERE ({_md5_byte('md5(ref)', 0)}) % 4 < 2
-),
-px AS (
-  SELECT ref, p,
-         (299 * {_ks_byte(0)} + 587 * {_ks_byte(1)}
-          + 114 * {_ks_byte(2)}) // 1000 AS lum
-  FROM sel, UNNEST(generate_series(0, 255)) AS u(p)
-)
-SELECT ref AS media_ref,
-       CAST(16 AS INTEGER) AS px_width,
-       CAST(16 AS INTEGER) AS px_height,
-       FALSE AS is_stub,
-       CAST(SUM(lum) AS BIGINT) AS px_sum,
-       CAST(MAX(CASE WHEN p = 0 THEN lum END) AS INTEGER) AS px_first,
-       CAST(MAX(CASE WHEN p = 255 THEN lum END) AS INTEGER) AS px_last
-FROM px GROUP BY ref
-"""
-
 
 def _flagship_tiles_sql() -> str:
     """flagship_tiles golden oracle: the coordinates derive from
@@ -2659,48 +2325,6 @@ def _pq_sql() -> str:
                                dsub=64 // PQ_M)
 
 
-_PQ_TRAIN_SQL = """
-WITH samp AS (
-  SELECT vec_id, embedding::DOUBLE[] AS cv
-  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {ksub}
-),
-cent AS (
-  SELECT cv, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cidx FROM samp
-),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-sub AS (SELECT UNNEST(generate_series(0, {m_minus_1})) AS s),
-dist AS (
-  SELECT e.vec_id, sub.s, cent.cidx,
-         CAST(list_sum(list_transform(generate_series(1, {dsub}),
-           i -> CAST(floor(((v[s*{dsub}+i] - cv[s*{dsub}+i])
-                            * (v[s*{dsub}+i] - cv[s*{dsub}+i]))
-                           * 1e12 + 0.5) AS BIGINT))) AS BIGINT) AS dq
-  FROM e CROSS JOIN sub CROSS JOIN cent
-),
-code AS (
-  SELECT vec_id, s, cidx FROM (
-    SELECT vec_id, s, cidx,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                              ORDER BY dq ASC, cidx ASC) AS rn
-    FROM dist) WHERE rn = 1
-)
-SELECT CAST(c.s AS INTEGER) AS s, CAST(c.cidx AS INTEGER) AS cidx,
-       CAST(i - 1 AS INTEGER) AS dim,
-       ROUND(avg(e.v[c.s * {dsub} + i]), 6) AS m,
-       count(*) AS n_members
-FROM code c JOIN e USING (vec_id),
-     unnest(generate_series(1, {dsub})) AS g(i)
-GROUP BY c.s, c.cidx, i
-"""
-
-
-def _pq_train_sql() -> str:
-    from asag_spark.operators.similarity import PQ_K, PQ_M
-
-    return _PQ_TRAIN_SQL.format(ksub=PQ_K, m_minus_1=PQ_M - 1,
-                                dsub=64 // PQ_M)
-
-
 _SQ8_TOPK_SQL = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 s AS (
@@ -2800,31 +2424,6 @@ e AS (
 )"""
 
 
-# Banded random-hyperplane LSH probe: DETERMINISTIC approximation —
-# the candidate set is exactly the corpus vectors sharing ≥1 band key
-# with the query, so the oracle reproduces it in SQL (recall < 1 vs
-# t_cosine_topk by design; this is the 10^12-vector scale path where
-# the brute-force scan is off the table).
-_COSINE_TOPK_LSH_SQL = f"""
-WITH {_emb_bk_cte()},
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM bk q JOIN bk c ON q.bkey = c.bkey
-  WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(a.v, b.v) / (a.norm * b.norm), 6) AS cosine
-  FROM cand JOIN e a ON a.vec_id = query_id JOIN e b ON b.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS INTEGER) AS rank,
-       cosine
-FROM scored
-QUALIFY rank <= 5
-"""
-
 # IVF-flat oracle mirroring operators/similarity.ivf_topk exactly:
 # centroids = the IVF_CELLS corpus vectors with smallest md5(vec_id)
 # (seeded uniform sample), assignment = rounded-cosine argmax with
@@ -2834,9 +2433,8 @@ QUALIFY rank <= 5
 # = (cosine DESC, neighbor_id ASC). All cosines rounded to 6 dp before
 # any comparison so numpy and DuckDB summation order cannot diverge.
 def _ivf_assign_cte() -> str:
-    """Shared cent/e/assign CTE body — the centroid derivation and
-    rounded-cosine argmax assignment both _ivf_sql (probe path) and
-    _ivf_train_sql (Lloyd step) build on; one idiom, one translation."""
+    """The cent/e/assign CTE body of _ivf_sql: the centroid derivation
+    and the rounded-cosine argmax assignment."""
     from asag_spark.operators.similarity import IVF_CELLS
 
     return f"""cent AS (
@@ -2861,18 +2459,6 @@ assign AS (
     FROM e CROSS JOIN cent
   ) WHERE rn = 1
 )"""
-
-
-def _ivf_train_sql() -> str:
-    return f"""
-WITH {_ivf_assign_cte()}
-SELECT a.c_id AS cell, CAST(i - 1 AS INT) AS dim,
-       ROUND(avg(e.v[i]), 6) AS m,
-       count(*) AS n_members
-FROM assign a JOIN e ON e.vec_id = a.vec_id,
-     unnest(generate_series(1, len(e.v))) AS g(i)
-GROUP BY a.c_id, i
-"""
 
 
 def _ivf_sql() -> str:
@@ -2920,45 +2506,6 @@ SELECT va AS vec_a, vb AS vec_b,
        ROUND(list_dot_product(a.v, b.v) / (a.norm * b.norm), 6) AS cosine
 FROM pairs JOIN e a ON a.vec_id = va JOIN e b ON b.vec_id = vb
 WHERE ROUND(list_dot_product(a.v, b.v) / (a.norm * b.norm), 6) >= 0.3
-"""
-
-
-# hard negatives: brute shortlist (top-20 exact cosine) minus the
-# banded-hyperplane near-dup pairs (either orientation), re-ranked
-_HARD_NEG_SQL = f"""
-WITH {_emb_bk_cte()},
-nd AS (
-  SELECT va, vb FROM (
-    SELECT DISTINCT x.vec_id AS va, y.vec_id AS vb
-    FROM bk x JOIN bk y ON x.bkey = y.bkey
-    WHERE x.vec_id < y.vec_id
-  ) p JOIN e a ON a.vec_id = p.va JOIN e b ON b.vec_id = p.vb
-  WHERE ROUND(list_dot_product(a.v, b.v) / (a.norm * b.norm), 6) >= 0.3
-),
-short AS (
-  SELECT query_id, neighbor_id, cosine FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROUND(list_dot_product(q.v, c.v) / (q.norm * c.norm), 6) AS cosine,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY ROUND(list_dot_product(q.v, c.v)
-                            / (q.norm * c.norm), 6) DESC,
-                      c.vec_id ASC) AS rn
-    FROM e q JOIN e c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id < 5
-  ) WHERE rn <= 20
-),
-kept AS (
-  SELECT s.* FROM short s
-  WHERE NOT EXISTS (
-    SELECT 1 FROM nd
-    WHERE (nd.va = s.query_id AND nd.vb = s.neighbor_id)
-       OR (nd.vb = s.query_id AND nd.va = s.neighbor_id))
-)
-SELECT query_id, neighbor_id,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS INTEGER) AS rank,
-       cosine
-FROM kept QUALIFY rank <= 5
 """
 
 
@@ -3042,7 +2589,6 @@ def _all_oracle_sql() -> dict[str, str]:
         "g_compact_tiles": _compact_sql(),
         "t_sq8_topk": _SQ8_TOPK_SQL,
         "t_pq_topk": _pq_sql(),
-        "t_pq_train_step": _pq_train_sql(),
         "features_fixture": _FEATURES_GOLDEN,
         "validity_filter": _VALIDITY_GOLDEN,
         "adjacency_types": _ADJACENCY_GOLDEN,
@@ -3056,7 +2602,6 @@ def _all_oracle_sql() -> dict[str, str]:
         "g_polyfill_stats": _POLYFILL_GOLDEN,
         "g_geohash": _GEOHASH_GOLDEN,
         "t_rendezvous_shards": _RENDEZVOUS_SQL,
-        "t_hard_negatives": _HARD_NEG_SQL,
         "q_funnel": """
 WITH base AS (
   SELECT DISTINCT user_id FROM events
@@ -3611,122 +3156,6 @@ FROM tk s LEFT JOIN agg a ON a.doc_id = s.doc_id
             SELECT hour_start, 3, 'min_rows', NULL, n::DOUBLE, 14::DOUBLE,
                    CASE WHEN n >= 14 THEN 1 ELSE 0 END FROM a
         """,
-        # psi_drift: bounds from the reference min/max (identical IEEE
-        # double ops both engines), edge-clamped fixed-width bins, an
-        # ALL-BIN spine 0..10 (incl. the null bin — never-occupied
-        # bins still carry their add-one-smoothed terms, standard
-        # smoothed PSI), per-bin term quantized to 1e6 so the total
-        # is an integer sum
-        "t_psi_drift": """
-            WITH ref AS (SELECT value AS v FROM events),
-            cur AS (
-              SELECT CASE WHEN event_id % 2 = 0 THEN value + 120
-                          ELSE value END AS v
-              FROM events
-            ),
-            b AS (SELECT min(v) AS lo, max(v) AS hi FROM ref),
-            rb AS (
-              SELECT CASE WHEN v IS NULL THEN 10
-                          ELSE LEAST(GREATEST(CAST(floor(
-                                 (v - lo) / ((hi - lo) / 10)
-                               ) AS BIGINT), 0), 9) END AS bin,
-                     count(*) AS n_ref
-              FROM ref CROSS JOIN b GROUP BY 1
-            ),
-            cb AS (
-              SELECT CASE WHEN v IS NULL THEN 10
-                          ELSE LEAST(GREATEST(CAST(floor(
-                                 (v - lo) / ((hi - lo) / 10)
-                               ) AS BIGINT), 0), 9) END AS bin,
-                     count(*) AS n_cur
-              FROM cur CROSS JOIN b GROUP BY 1
-            ),
-            j AS (
-              SELECT s.bin AS bin,
-                     COALESCE(n_ref, 0) AS n_ref,
-                     COALESCE(n_cur, 0) AS n_cur
-              FROM (SELECT CAST(range AS INTEGER) AS bin
-                    FROM range(0, 11)) s
-              LEFT JOIN rb ON rb.bin = s.bin
-              LEFT JOIN cb ON cb.bin = s.bin
-            ),
-            t AS (
-              SELECT bin, n_ref, n_cur,
-                     CAST(floor(
-                       ((n_cur + 1) / (sum(n_cur) OVER () + 11.0)
-                        - (n_ref + 1) / (sum(n_ref) OVER () + 11.0))
-                       * ln(((n_cur + 1) / (sum(n_cur) OVER () + 11.0))
-                            / ((n_ref + 1) / (sum(n_ref) OVER () + 11.0)))
-                       * 1e6 + 0.5) AS BIGINT) AS tq
-              FROM j
-            )
-            SELECT bin, n_ref, n_cur,
-                   ROUND(tq / 1e6, 6) AS term,
-                   ROUND(sum(tq) OVER () / 1e6, 6) AS psi
-            FROM t
-        """,
-        # profile_table: per-column stats in one pass; min/max
-        # stringified for type portability (BIGINT -> VARCHAR renders
-        # identically both engines), mean only for numerics
-        "t_profile": """
-            WITH a AS (
-              SELECT count(*) AS n,
-                     count(CASE WHEN doc_id IS NULL THEN 1 END) AS nul0,
-                     count(DISTINCT doc_id) AS d0,
-                     CAST(min(doc_id) AS VARCHAR) AS mn0,
-                     CAST(max(doc_id) AS VARCHAR) AS mx0,
-                     ROUND(avg(doc_id::DOUBLE), 6) AS av0,
-                     count(CASE WHEN lang IS NULL THEN 1 END) AS nul1,
-                     count(DISTINCT lang) AS d1,
-                     min(lang) AS mn1, max(lang) AS mx1,
-                     count(CASE WHEN source IS NULL THEN 1 END) AS nul2,
-                     count(DISTINCT source) AS d2,
-                     min(source) AS mn2, max(source) AS mx2,
-                     count(CASE WHEN n_chars IS NULL THEN 1 END) AS nul3,
-                     count(DISTINCT n_chars) AS d3,
-                     CAST(min(n_chars) AS VARCHAR) AS mn3,
-                     CAST(max(n_chars) AS VARCHAR) AS mx3,
-                     ROUND(avg(n_chars::DOUBLE), 6) AS av3
-              FROM documents
-            )
-            SELECT 'doc_id' AS "column", n AS n_rows, nul0 AS n_nulls,
-                   d0 AS n_distinct, mn0 AS min_value, mx0 AS max_value,
-                   av0 AS mean FROM a
-            UNION ALL
-            SELECT 'lang', n, nul1, d1, mn1, mx1, NULL FROM a
-            UNION ALL
-            SELECT 'source', n, nul2, d2, mn2, mx2, NULL FROM a
-            UNION ALL
-            SELECT 'n_chars', n, nul3, d3, mn3, mx3, av3 FROM a
-        """,
-        # snapshot_diff: the oracle classifies by VALUE comparison
-        # (IS NOT DISTINCT FROM per compared column) while the engine
-        # compares xxhash64 row hashes — agreement checks the diff
-        # semantics end-to-end, stronger than restating the hash
-        "t_snapshot_diff": """
-            WITH o AS (
-              SELECT doc_id, text, lang, source, n_chars FROM documents
-            ),
-            n AS (
-              SELECT doc_id, text, lang, source,
-                     CASE WHEN doc_id % 5 = 1 THEN n_chars + 1
-                          ELSE n_chars END AS n_chars
-              FROM documents WHERE doc_id % 10 <> 3
-              UNION ALL
-              SELECT doc_id + 1000000, text, lang, source, n_chars
-              FROM documents WHERE doc_id % 13 = 0
-            )
-            SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-                   CASE WHEN o.doc_id IS NULL THEN 'added'
-                        WHEN n.doc_id IS NULL THEN 'removed'
-                        WHEN o.text IS NOT DISTINCT FROM n.text
-                         AND o.lang IS NOT DISTINCT FROM n.lang
-                         AND o.source IS NOT DISTINCT FROM n.source
-                         AND o.n_chars IS NOT DISTINCT FROM n.n_chars
-                        THEN 'unchanged'
-                        ELSE 'changed' END AS change
-            FROM o FULL JOIN n ON o.doc_id = n.doc_id
-        """,
         # weighted_sample: same hash_unit u, same 9-dp key rounding,
         # same (skey, id) total order
         "t_weighted_sample": """
@@ -3752,76 +3181,10 @@ FROM tk s LEFT JOIN agg a ON a.doc_id = s.doc_id
             )
         """,
         "t_cosine_topk": _COSINE_TOPK_SQL,
-        "t_cosine_topk_lsh": _COSINE_TOPK_LSH_SQL,
-        # semdedup: reuses the shared IVF assignment CTE (same centroid
-        # sample + rounded-cosine argmax); hits = within-cell pairs
-        # >= threshold keyed to the LARGER id, keep = no hit row
-        "t_semdedup": f"""
-WITH {_ivf_assign_cte()},
-hits AS (
-  SELECT y.vec_id AS vec_id,
-         max(ROUND(list_dot_product(xe.v, ye.v) / (xe.norm * ye.norm), 6))
-           AS max_sim_smaller
-  FROM assign x
-  JOIN assign y ON x.c_id = y.c_id AND x.vec_id < y.vec_id
-  JOIN e xe ON xe.vec_id = x.vec_id
-  JOIN e ye ON ye.vec_id = y.vec_id
-  WHERE xe.norm > 0 AND ye.norm > 0
-    AND ROUND(list_dot_product(xe.v, ye.v) / (xe.norm * ye.norm), 6) >= 0.3
-  GROUP BY y.vec_id
-)
-SELECT a.vec_id, a.c_id AS ivf_cell,
-       CAST(CASE WHEN h.vec_id IS NULL THEN 1 ELSE 0 END AS INTEGER) AS keep,
-       h.max_sim_smaller
-FROM assign a LEFT JOIN hits h ON h.vec_id = a.vec_id
-""",
-        # semdedup_keep_best: same pair stage, then connected
-        # components (recursive reach, the t_dedup_clusters idiom) and
-        # the keep-best window — keeper = argmax(md5-derived quality),
-        # ties to the smaller vec_id; singletons label themselves
-        "t_semdedup_keep_best": f"""
-WITH RECURSIVE {_ivf_assign_cte()},
-pr AS (
-  SELECT x.vec_id AS a, y.vec_id AS b
-  FROM assign x
-  JOIN assign y ON x.c_id = y.c_id AND x.vec_id < y.vec_id
-  JOIN e xe ON xe.vec_id = x.vec_id
-  JOIN e ye ON ye.vec_id = y.vec_id
-  WHERE xe.norm > 0 AND ye.norm > 0
-    AND ROUND(list_dot_product(xe.v, ye.v) / (xe.norm * ye.norm), 6) >= 0.3
-),
-edges AS (SELECT a, b FROM pr UNION SELECT b, a FROM pr),
-reach(node, root) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e2.b, r.root FROM reach r JOIN edges e2 ON e2.a = r.node
-),
-lab AS (SELECT node AS vec_id, MIN(root) AS cluster_id FROM reach GROUP BY node),
-spine AS (
-  SELECT emb.vec_id, COALESCE(lab.cluster_id, emb.vec_id) AS cluster_id
-  FROM embeddings emb LEFT JOIN lab ON lab.vec_id = emb.vec_id
-),
-sc AS (
-  SELECT vec_id,
-         ('0x' || substr(md5('sdkb:' || vec_id::VARCHAR), 1, 15))::BIGINT
-           % 1000 AS quality
-  FROM embeddings
-)
-SELECT s.vec_id, s.cluster_id, sc.quality,
-       CAST(CASE WHEN ROW_NUMBER() OVER (
-              PARTITION BY s.cluster_id
-              ORDER BY sc.quality DESC, s.vec_id ASC) = 1
-            THEN 1 ELSE 0 END AS INTEGER) AS keep
-FROM spine s JOIN sc ON sc.vec_id = s.vec_id
-""",
         "t_ivf_topk": _ivf_sql(),
-        "t_ivf_train_step": _ivf_train_sql(),
         "t_emb_near_dups": _EMB_ND_SQL,
         "t_simhash_near_dups": _simhash_sql(),
         "t_media_decode": _MEDIA_DECODE_SQL,
-        "t_media_resize": _MEDIA_RESIZE_SQL,
-        "t_media_pixels": _MEDIA_PIXELS_SQL,
-        "t_frame_sample": _FRAME_SAMPLE_SQL,
         "t_media_features": _media_features_sql(),
         "flagship_tiles": _flagship_tiles_sql(),
         # round-3 training-data additions. seq_pack: the oracle is the

@@ -398,84 +398,3 @@ def generate_embeddings(spark: SparkSession, n_vecs: int, dim: int = 64,
     parts = partitions or spark.sparkContext.defaultParallelism
     base = spark.range(0, n_vecs, numPartitions=parts)
     return base.mapInPandas(gen, schema="vec_id long, embedding array<float>")
-
-
-MEDIA_BLOB_SIZE = 16  # px per side; 16x16 makes the decode thumbnail
-#                       an identity resize at decode_pixels' default
-
-
-def media_blob(ref: str, size: int = MEDIA_BLOB_SIZE) -> bytes | None:
-    """Deterministic object-store stand-in for one media_ref: ~half of
-    refs resolve to a REAL uncompressed image blob (binary PPM for
-    md5(ref)[0] % 4 == 0, 24-bit bottom-up BMP for == 1), the rest
-    miss (None) — so the real-decode and honest-stub paths both stay
-    exercised in the same pipeline (VERDICT r04 #5). Pixel content is
-    the md5 keystream md5(f"{ref}:px:{counter}") read as top-down RGB
-    triples — a pure function of ref that DuckDB can recompute, which
-    is what gives decode_pixels a VALUE oracle (t_media_pixels): the
-    engine decodes container bytes, the oracle re-derives the expected
-    luma from the generative formula, and only a correct parse (BMP's
-    bottom-up BGR rows included) makes them meet."""
-    import hashlib
-
-    d = hashlib.md5(ref.encode()).digest()
-    sel = d[0] % 4
-    if sel >= 2:
-        return None
-    n = size * size * 3
-    out = bytearray()
-    counter = 0
-    while len(out) < n:
-        out.extend(hashlib.md5(f"{ref}:px:{counter}".encode()).digest())
-        counter += 1
-    px = bytes(out[:n])
-    if sel == 0:  # binary PPM, top-down RGB — header then raw triples
-        return b"P6\n%d %d\n255\n" % (size, size) + px
-    # BMP: 54-byte header, 24 bpp, uncompressed, POSITIVE height →
-    # bottom-up BGR rows, padded to 4 bytes (size 16 → 48 B rows, no pad)
-    rgb = np.frombuffer(px, dtype=np.uint8).reshape(size, size, 3)
-    row_bytes = size * 3
-    pad = (-row_bytes) % 4
-    rows_bu = rgb[::-1, :, ::-1]  # bottom-up, BGR
-    body = b"".join(
-        rows_bu[i].tobytes() + b"\x00" * pad for i in range(size)
-    )
-    off = 54
-    hdr = (
-        b"BM"
-        + (off + len(body)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + off.to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + size.to_bytes(4, "little", signed=True)
-        + size.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(body).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little")
-        + (0).to_bytes(4, "little")
-        + (0).to_bytes(4, "little")
-    )
-    return hdr + body
-
-
-def with_media_blobs(media: DataFrame) -> DataFrame:
-    """Attach the deterministic ``blob`` binary column to a media
-    catalog (doc_id, media_ref, ...) — the sandbox's object-store GET,
-    Arrow-batched, partition-preserving (the real deployment swaps
-    this one stage for an S3 range-read with the same schema)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(media.schema.fields) + [T.StructField("blob", T.BinaryType())]
-    )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["blob"] = [media_blob(r) for r in pdf["media_ref"]]
-            yield pdf
-
-    return media.mapInPandas(fetch, schema=out_schema)

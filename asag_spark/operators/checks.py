@@ -208,170 +208,3 @@ def assert_checks(df: DataFrame, rules: list[dict]) -> DataFrame:
     return out
 
 
-def psi_drift(ref: DataFrame, cur: DataFrame, col: str,
-              bins: int = 10, lo: float | None = None,
-              hi: float | None = None) -> DataFrame:
-    """Population Stability Index between two snapshots of a numeric
-    column — the standard production drift monitor ("did this
-    feature's distribution move between last week's corpus and
-    today's"). PSI = Σ_b (p_cur(b) − p_ref(b)) · ln(p_cur(b)/p_ref(b))
-    over fixed-width bins; the conventional alert bands are ~0.1
-    (drifting) and ~0.25 (shifted).
-
-    Binning: ``bins`` equal-width bins over [lo, hi] — bounds default
-    to the REFERENCE snapshot's min/max (one tiny agg, collected
-    driver-side: two scalars, the broadcast-threshold class of
-    collect); values outside clamp into the edge bins so a shifted
-    current snapshot lands visibly in bin 0 / bins−1 instead of
-    disappearing; nulls get their own bin (id = ``bins``) so null-rate
-    drift is part of the same number. Add-one smoothing keeps every
-    ln() finite regardless of empty bins.
-
-    Engine-portable math: bin ids are exact integer arithmetic; the
-    per-bin PSI term is quantized ONCE (floor(term·1e6 + 0.5), the
-    lm_bigram_score idiom) so the total is an integer sum — identical
-    under any aggregation order, DuckDB-reproducible.
-
-    Plan shape at 100 TB: each snapshot contributes ONE map-combined
-    keyless-then-bin aggregation (wire = bins+1 rows per partition);
-    the bin join and the PSI window run on ≤ bins+1 rows. Nothing is
-    data-dependent except the two scans.
-
-    Output: one row per bin, ALL bins 0..``bins`` (the last is the
-    null bin) whether occupied or not — never-occupied bins still
-    contribute their add-one-smoothed terms, the standard all-bin
-    smoothed PSI — as (bin, n_ref, n_cur, term, psi): ``term`` the
-    bin's smoothed PSI contribution and ``psi`` the total (identical
-    on every row, so a single-row gate reads it without a second
-    pass); both 6 dp.
-    """
-    from pyspark.sql import Window
-
-    if bins < 2:
-        raise ValueError(f"psi_drift: bins must be >= 2, got {bins}")
-    c = F.col(col).cast("double")
-    if lo is None or hi is None:
-        row = ref.agg(
-            F.min(c).alias("lo"), F.max(c).alias("hi")
-        ).collect()[0]
-        lo = row["lo"] if lo is None else lo
-        hi = row["hi"] if hi is None else hi
-        if lo is None or hi is None:
-            raise ValueError(f"psi_drift: reference column {col!r} is all null")
-    if not hi > lo:
-        raise ValueError(f"psi_drift: need hi > lo, got [{lo}, {hi}]")
-    w = (float(hi) - float(lo)) / bins
-
-    def binned(df, alias):
-        b = F.when(
-            c.isNull(), F.lit(bins)
-        ).otherwise(
-            F.least(
-                F.greatest(
-                    F.floor((c - F.lit(float(lo))) / F.lit(w)), F.lit(0)
-                ),
-                F.lit(bins - 1),
-            )
-        ).cast("int")
-        return df.select(b.alias("bin")).groupBy("bin").agg(
-            F.count(F.lit(1)).alias(alias)
-        )
-
-    r = binned(ref, "n_ref")
-    u = binned(cur, "n_cur")
-    # all-bin spine (0..bins incl. the null bin — ≤ bins+1 rows from a
-    # driver-side range): bins occupied in NEITHER snapshot still carry
-    # nonzero add-one-smoothed terms whenever the two totals differ, so
-    # joining only occupied bins made the total depend on which bins
-    # happened to be hit — standard smoothed PSI sums over ALL bins
-    spine = ref.sparkSession.range(0, bins + 1).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    joined = spine.join(r, "bin", "left").join(u, "bin", "left").select(
-        "bin",
-        F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-    )
-    tiny = Window.partitionBy()  # ≤ bins+1 rows — single-task by design
-    tr = F.sum("n_ref").over(tiny)
-    tu = F.sum("n_cur").over(tiny)
-    B = bins + 1
-    pr = (F.col("n_ref") + 1) / (tr + F.lit(float(B)))
-    pu = (F.col("n_cur") + 1) / (tu + F.lit(float(B)))
-    term_q = F.floor((pu - pr) * F.log(pu / pr) * F.lit(1e6) + F.lit(0.5))
-    out = joined.select(
-        "bin", "n_ref", "n_cur", term_q.cast("long").alias("_tq")
-    )
-    return out.select(
-        "bin", "n_ref", "n_cur",
-        F.round(F.col("_tq") / F.lit(1e6), 6).alias("term"),
-        F.round(
-            F.sum("_tq").over(Window.partitionBy()) / F.lit(1e6), 6
-        ).alias("psi"),
-    )
-
-
-def profile_table(df: DataFrame, columns: list[str] | None = None,
-                  exact_distinct: bool = True) -> DataFrame:
-    """Column profile — the OBSERVE side of the checks family (what
-    you look at before writing a table_checks contract or a psi_drift
-    bound): per column, row/null/distinct counts, stringified min and
-    max (portable across types), and the numeric mean where the type
-    is numeric.
-
-    One aggregation pass for the whole profile: every statistic is an
-    aggregate expression over the same scan. With ``exact_distinct``
-    each column adds a count_distinct, which Spark plans via ONE
-    expand over the scan (rows × profiled columns on the map side,
-    still combined before the exchange) — the honest cost of exact
-    cardinalities; ``exact_distinct=False`` swaps in
-    approx_count_distinct (HLL: no expand, constant state) for the
-    10^12-row profile, the same explicit trade the `unique` /
-    `approx_unique` rules expose.
-
-    Output: one row per profiled column —
-    (column, n_rows, n_nulls, n_distinct, min_value, max_value, mean)
-    with min/max cast to string (NULL for all-null columns), mean NULL
-    for non-numeric columns, and 6-dp rounding on mean.
-    """
-    import pyspark.sql.types as T
-
-    cols = columns if columns is not None else df.columns
-    if not cols:
-        raise ValueError("profile_table: no columns to profile")
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"profile_table: unknown columns {missing}")
-    numeric = {
-        f.name for f in df.schema.fields
-        if isinstance(f.dataType, T.NumericType)
-    }
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, c in enumerate(cols):
-        col = F.col(c)
-        aggs.append(F.count(F.when(col.isNull(), F.lit(1))).alias(f"_nul{i}"))
-        if exact_distinct:
-            aggs.append(F.count_distinct(col).alias(f"_d{i}"))
-        else:
-            aggs.append(F.approx_count_distinct(col).alias(f"_d{i}"))
-        aggs.append(F.min(col).cast("string").alias(f"_min{i}"))
-        aggs.append(F.max(col).cast("string").alias(f"_max{i}"))
-        if c in numeric:
-            aggs.append(
-                F.round(F.avg(col.cast("double")), 6).alias(f"_avg{i}")
-            )
-    agg = df.agg(*aggs)
-    rows = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("_n").alias("n_rows"),
-            F.col(f"_nul{i}").alias("n_nulls"),
-            F.col(f"_d{i}").alias("n_distinct"),
-            F.col(f"_min{i}").alias("min_value"),
-            F.col(f"_max{i}").alias("max_value"),
-            (F.col(f"_avg{i}") if c in numeric
-             else F.lit(None).cast("double")).alias("mean"),
-        )
-        for i, c in enumerate(cols)
-    ]
-    return agg.select(F.explode(F.array(*rows)).alias("r")).select("r.*")

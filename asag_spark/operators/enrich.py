@@ -305,12 +305,14 @@ def build_features(docs: DataFrame, as_of: str = AS_OF) -> DataFrame:
     # bandwidth-capped host. MEMORY_AND_DISK: the entity frame is ~20%
     # the size of the raw span text; at 1.75 GB heap/core the storage
     # pool holds it at bench scale, and the disk tier is the executor's
-    # local NVMe.
+    # local NVMe. The caller that writes the result owns the cache
+    # (session.release_caches: run_stage, publish_netex_zip).
     from pyspark.storagelevel import StorageLevel
 
-    e0 = extract_entities(docs, spans_through=False).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    from ..session import persist_released
+
+    e0 = persist_released(extract_entities(docs, spans_through=False),
+                          StorageLevel.MEMORY_AND_DISK)
 
     p = F.col("props")
     et = F.col("entity_type")

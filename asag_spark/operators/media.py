@@ -5,10 +5,10 @@ Image/audio/video ride as opaque references/binary in ``media`` spans
 paths and an HONEST ``is_stub`` flag per row:
 
 * real — when a binary column of image bytes is supplied, the
-  PNG/GIF/JPEG header is parsed (pure-Python, no imaging library
+  PNG/GIF/JPEG/PPM/BMP header is parsed (pure-Python, no imaging library
   needed for dimensions/format) and ``is_stub=False``;
 * stub — when no bytes exist (the docs table carries media_ref
-  pointers only; no object store in this sandbox) or the bytes don't
+  pointers only; there is no object store) or the bytes don't
   parse, a clearly-marked deterministic fake (md5-derived dims) stands
   in with ``is_stub=True``. Pixel-level decode/resample would need an
   imaging library and stays stubbed; the Spark-side plumbing —
@@ -21,7 +21,6 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,8 +54,8 @@ _DECODE_SCHEMA = T.StructType(
 
 
 def parse_image_header(b: bytes | None):
-    """(width, height, format) from PNG/GIF/JPEG header bytes, or None
-    if the bytes are absent/unrecognized. Pure Python — dimension
+    """(width, height, format) from PNG/GIF/JPEG/PPM/BMP header bytes,
+    or None if the bytes are absent/unrecognized. Pure Python — dimension
     decode needs no imaging library, only the container headers."""
     if not b:
         return None
@@ -91,10 +90,9 @@ def parse_image_header(b: bytes | None):
                 )
             i += 2 + seg_len
     if b[:2] == b"P6":  # binary PPM
-        toks = _ppm_header(b)
-        if toks is not None:
-            w, h, _maxval, _off = toks
-            return (w, h, "ppm")
+        dims = _ppm_dims(b)
+        if dims is not None:
+            return (*dims, "ppm")
     if b[:2] == b"BM" and len(b) >= 30:  # BMP (any DIB with w/h at 18/22)
         return (
             int.from_bytes(b[18:22], "little", signed=True),
@@ -104,10 +102,10 @@ def parse_image_header(b: bytes | None):
     return None
 
 
-def _ppm_header(b: bytes):
-    """Parse a binary-PPM (P6) header: returns (width, height, maxval,
-    pixel_data_offset) or None. Handles the format's whitespace rules
-    and '#' comments."""
+def _ppm_dims(b: bytes):
+    """(width, height) from a binary-PPM (P6) header — width, height
+    and maxval, then one whitespace byte — or None. Handles the
+    format's whitespace rules and '#' comments."""
     toks: list[int] = []
     i = 2
     n = len(b)
@@ -128,52 +126,7 @@ def _ppm_header(b: bytes):
             return None
     if len(toks) < 3 or i >= n or b[i] not in b" \t\r\n":
         return None
-    return toks[0], toks[1], toks[2], i + 1  # single whitespace ends header
-
-
-def decode_rgb(b: bytes | None) -> "np.ndarray | None":
-    """PURE-NUMPY pixel decode for the two uncompressed containers —
-    binary PPM (P6, maxval 255) and uncompressed 24/32-bit BMP — so
-    the real-decode path runs even where no imaging library exists
-    (VERDICT r04 #5: the sandbox has no Pillow, so every decode leg
-    was taking the honest stub branch; these two formats need nothing
-    but header math and a reshape). Returns a top-down (h, w, 3) uint8
-    RGB array, or None if the bytes are not a decodable PPM/BMP."""
-    if not b:
-        return None
-    b = bytes(b)
-    if b[:2] == b"P6":
-        hdr = _ppm_header(b)
-        if hdr is None:
-            return None
-        w, h, maxval, off = hdr
-        if maxval != 255 or w <= 0 or h <= 0 or len(b) < off + w * h * 3:
-            return None
-        return (
-            np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=off)
-            .reshape(h, w, 3)
-            .copy()
-        )
-    if b[:2] == b"BM" and len(b) >= 54:
-        off = int.from_bytes(b[10:14], "little")
-        w = int.from_bytes(b[18:22], "little", signed=True)
-        h_raw = int.from_bytes(b[22:26], "little", signed=True)
-        bpp = int.from_bytes(b[28:30], "little")
-        comp = int.from_bytes(b[30:34], "little")
-        h = abs(h_raw)
-        if comp != 0 or bpp not in (24, 32) or w <= 0 or h == 0:
-            return None
-        nch = bpp // 8
-        stride = (w * nch + 3) & ~3  # rows pad to 4 bytes
-        if len(b) < off + stride * h:
-            return None
-        rows = np.frombuffer(
-            b, dtype=np.uint8, count=stride * h, offset=off
-        ).reshape(h, stride)[:, : w * nch].reshape(h, w, nch)
-        if h_raw > 0:  # bottom-up storage → top-down output
-            rows = rows[::-1]
-        return rows[:, :, 2::-1].copy()  # BGR(A) → RGB
-    return None
+    return toks[0], toks[1]
 
 
 def decode_media(media: DataFrame, bytes_col: str | None = None,
@@ -230,149 +183,6 @@ def decode_media(media: DataFrame, bytes_col: str | None = None,
 
     cols = ["doc_id", "media_ref"] + ([bytes_col] if bytes_col else [])
     return media.select(*cols).mapInPandas(kernel, schema=_DECODE_SCHEMA)
-
-
-try:  # imaging library is optional in this environment (import-gated)
-    from PIL import Image as _PIL_Image  # type: ignore
-except ImportError:  # pragma: no cover - exercised where PIL exists
-    _PIL_Image = None
-
-_PIXELS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("px_width", T.IntegerType()),
-        T.StructField("px_height", T.IntegerType()),
-        T.StructField("pixels", T.ArrayType(T.IntegerType())),
-        T.StructField("is_stub", T.BooleanType()),
-    ]
-)
-
-
-def decode_pixels(media: DataFrame, bytes_col: str | None = None,
-                  target: int = 16) -> DataFrame:
-    """Pixel-level decode + resample to a ``target``×``target``
-    grayscale thumbnail (row-major int 0-255 array) — the stage that
-    genuinely needs an imaging library.
-
-    Three branches, priority order; ``is_stub`` always tells the truth
-    about whether REAL pixels were read:
-
-    * numpy — PPM/BMP bytes decode with ``decode_rgb`` (no imaging
-      library needed): ITU-R 601-2 integer luma (the PIL convert('L')
-      formula, (299R + 587G + 114B) // 1000) + center-sampled
-      nearest-neighbor resize. Tried FIRST so these formats decode
-      identically in every environment, Pillow or not (VERDICT r04
-      #5 — this is the in-sandbox real-decode path).
-    * PIL — any other parseable image bytes when Pillow is importable
-      (round 3, VERDICT r02 missing #1): convert('L') → resize
-      bilinear, unchanged.
-    * stub — a deterministic fake (md5-keystream pixels, stable
-      across runs/parallelism) with ``is_stub=True``, so downstream
-      feature/dedup plumbing runs with the identical schema and Arrow
-      batch shape either way.
-    """
-
-    def _fake(ref: str) -> list[int]:
-        n = target * target
-        out: list[int] = []
-        counter = 0
-        while len(out) < n:
-            out.extend(hashlib.md5(f"{ref}:{counter}".encode()).digest())
-            counter += 1
-        return out[:n]
-
-    def _numpy_thumb(b) -> list[int] | None:
-        rgb = decode_rgb(b)
-        if rgb is None:
-            return None
-        # integer luma, then nearest-neighbor at scaled pixel centers
-        # (exact + environment-independent; an identity when the
-        # source is already target x target)
-        lum = (
-            299 * rgb[:, :, 0].astype(np.int64)
-            + 587 * rgb[:, :, 1].astype(np.int64)
-            + 114 * rgb[:, :, 2].astype(np.int64)
-        ) // 1000
-        h, w = lum.shape
-        if (h, w) != (target, target):
-            yi = np.minimum(((np.arange(target) + 0.5) * h / target).astype(int), h - 1)
-            xi = np.minimum(((np.arange(target) + 0.5) * w / target).astype(int), w - 1)
-            lum = lum[np.ix_(yi, xi)]
-        return [int(v) for v in lum.ravel()]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            raw = pdf[bytes_col] if bytes_col is not None else [None] * len(pdf)
-            px, stubs = [], []
-            for ref, b in zip(pdf["media_ref"], raw):
-                decoded = _numpy_thumb(b) if b else None
-                if decoded is None and _PIL_Image is not None and b:
-                    try:
-                        img = _PIL_Image.open(io.BytesIO(bytes(b)))
-                        thumb = img.convert("L").resize((target, target))
-                        decoded = [int(v) for v in thumb.getdata()]
-                    except Exception:  # noqa: BLE001 — unparseable bytes → stub
-                        decoded = None
-                if decoded is not None:
-                    px.append(decoded)
-                    stubs.append(False)
-                else:
-                    px.append(_fake(ref))
-                    stubs.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "px_width": np.full(len(pdf), target, dtype=np.int32),
-                    "px_height": np.full(len(pdf), target, dtype=np.int32),
-                    "pixels": px,
-                    "is_stub": stubs,
-                }
-            )
-
-    cols = ["doc_id", "media_ref"] + ([bytes_col] if bytes_col else [])
-    return media.select(*cols).mapInPandas(kernel, schema=_PIXELS_SCHEMA)
-
-
-def resize_dims(decoded: DataFrame, target: int = 256) -> DataFrame:
-    """Aspect-preserving thumbnail plan: + (new_width, new_height) so
-    the longer edge equals ``target`` (images already within target
-    keep their dims). Pure JVM arithmetic over the decoded metadata —
-    the actual pixel resample would ride the same Arrow kernel as
-    decode; the plan (the part Spark owns: dims, schema, partitioning)
-    is real and exact."""
-    w, h = F.col("width"), F.col("height")
-    t = float(target)
-    fits = (w <= target) & (h <= target)
-    nw = F.when(fits, w).otherwise(
-        F.when(w >= h, F.lit(target))
-        .otherwise(F.greatest(F.floor(w * t / h).cast("int"), F.lit(1)))
-    )
-    nh = F.when(fits, h).otherwise(
-        F.when(w >= h, F.greatest(F.floor(h * t / w).cast("int"), F.lit(1)))
-        .otherwise(F.lit(target))
-    )
-    return decoded.withColumn("new_width", nw).withColumn("new_height", nh)
-
-
-def sample_frames(decoded: DataFrame, every_s: int = 10) -> DataFrame:
-    """Frame-sampling plan: one row per sampled timestamp, every
-    ``every_s`` seconds through the (stub) duration — `sequence` +
-    `explode`, all JVM; the frame decode itself would be the Arrow
-    kernel consuming (media_ref, frame_ts_s) batches. Output size is
-    data-dependent (duration/every_s rows per medium) — the explode is
-    the scale knob, not a per-row Python loop."""
-    return decoded.select(
-        "doc_id", "media_ref", "duration_s",
-        F.posexplode(
-            F.sequence(
-                F.lit(0), F.col("duration_s") - 1, F.lit(int(every_s))
-            )
-        ).alias("frame_idx", "frame_ts_s"),
-    )
 
 
 def media_features(media: DataFrame, dim: int = 8) -> DataFrame:

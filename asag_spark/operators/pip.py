@@ -565,7 +565,11 @@ def snap_to_boundary(points: DataFrame, zones: DataFrame,
       _snap_distributed. No driver-side edge loop, no dense broadcast.
 
     Output: (feature_id, zone_id, edge_idx, snap_lon, snap_lat,
-    dist_m) — snap coords rounded to 7 dp, dist_m to 3 dp.
+    dist_m) — snap coords rounded to 7 dp, dist_m to 3 dp. A point is
+    valid iff lon and lat are both finite (PIP's rule); every strategy
+    gives an invalid point (NULL, NaN or ±inf) one row with the first
+    edge in (zone_id, edge_idx) order and NULL snap_lon, snap_lat and
+    dist_m.
     """
     if mode not in ("auto", "dense", "pruned", "distributed"):
         raise ValueError(f"snap: unknown mode {mode!r}")
@@ -609,7 +613,8 @@ def snap_to_lines(points: DataFrame, lines: DataFrame,
     break (line_id ASC, edge_idx ASC).
 
     Output: (feature_id, line_id, edge_idx, snap_lon, snap_lat,
-    dist_m) — snap coords 7 dp, dist_m 3 dp.
+    dist_m) — snap coords 7 dp, dist_m 3 dp; invalid points as in
+    snap_to_boundary.
     """
     from ..geo.wkt import parse_linestring
 
@@ -731,43 +736,14 @@ def _snap_to_paths(points: DataFrame, paths: dict, *, id_col: str,
                 }
             )
 
-        if index is None:
-            # dense: chunk so the (n_chunk x E) intermediates stay
-            # ~tens of MB regardless of the edge-set size
-            chunk = max(1, 2_000_000 // max(1, len(A_v)))
-            for pdf0 in batches:
-                for lo in range(0, len(pdf0), chunk):
-                    pdf = pdf0.iloc[lo:lo + chunk]
-                    if len(pdf):
-                        yield assemble(
-                            pdf[id_col].to_numpy(dtype=object),
-                            *best_of(None, pdf[lon_col].to_numpy(),
-                                     pdf[lat_col].to_numpy()),
-                        )
-            return
-
-        # pruned path
-        s = hexgrid.EDGE_M[res]
-        ckeys, coff, cedge = index
-        kq, kr = ckeys >> 32, (ckeys << 32) >> 32   # _cell_key inverse
-
-        def cell_parts(pos):
-            return [cedge[coff[p]:coff[p + 1]] for p in pos]
-
-        def ring_parts(cq, cr, g):
-            # edge ids of ring g's occupied cells: one searchsorted
-            qr = np.asarray(hexgrid.grid_ring(cq, cr, g), dtype=np.int64)
-            rk = _cell_key(qr[:, 0], qr[:, 1])
-            pos = np.minimum(np.searchsorted(ckeys, rk), len(ckeys) - 1)
-            return cell_parts(pos[ckeys[pos] == rk])
-
         def best_chunked(sel, plon, plat, out, pts):
-            """best_of in point chunks sized to the candidate count;
-            writes results into ``out`` at ``pts`` AND returns the max
-            dist — one kernel pass serves both the termination bound
-            and the answer (the tentative pass IS the final pass
-            whenever the expansion loop adds no candidates, the
-            dominant in-cloud case)."""
+            """best_of in point chunks sized to the candidate count, so
+            the (n_chunk x E) intermediates stay ~tens of MB; writes
+            results into ``out`` at ``pts`` AND returns the max dist —
+            in the pruned search one kernel pass serves both the
+            termination bound and the answer (the tentative pass IS
+            the final pass whenever the expansion loop adds no
+            candidates, the dominant in-cloud case)."""
             n_cand = len(A_v) if sel is None else len(sel)
             step = max(1, 2_000_000 // max(1, n_cand))
             d_max = 0.0
@@ -782,6 +758,21 @@ def _snap_to_paths(points: DataFrame, paths: dict, *, id_col: str,
                 d_max = max(d_max, float(d.max()))
             return d_max
 
+        if index is not None:   # the pruned search's cell index
+            s = hexgrid.EDGE_M[res]
+            ckeys, coff, cedge = index
+            kq, kr = ckeys >> 32, (ckeys << 32) >> 32   # _cell_key inverse
+
+        def cell_parts(pos):
+            return [cedge[coff[p]:coff[p + 1]] for p in pos]
+
+        def ring_parts(cq, cr, g):
+            # edge ids of ring g's occupied cells: one searchsorted
+            qr = np.asarray(hexgrid.grid_ring(cq, cr, g), dtype=np.int64)
+            rk = _cell_key(qr[:, 0], qr[:, 1])
+            pos = np.minimum(np.searchsorted(ckeys, rk), len(ckeys) - 1)
+            return cell_parts(pos[ckeys[pos] == rk])
+
         for pdf in batches:
             n = len(pdf)
             lon = pdf[lon_col].to_numpy(dtype="float64", na_value=np.nan)
@@ -790,11 +781,14 @@ def _snap_to_paths(points: DataFrame, paths: dict, *, id_col: str,
             sx_o = np.full(n, np.nan)
             sy_o = np.full(n, np.nan)
             d_o = np.full(n, np.nan)
+            # the validity rule: lon and lat both finite. An invalid
+            # point keeps the initial row — edge 0 with NaN (NULL)
+            # snap and dist — in every strategy
             ok = np.isfinite(lon) & np.isfinite(lat)
-            # non-finite coords mirror the dense kernel bit-for-bit:
-            # all-NaN distances make argmin return edge 0 with NaN
-            # snap/dist — initialized above, nothing else to do
-            if ok.any():
+            out = (gi_o, sx_o, sy_o, d_o)
+            if index is None and ok.any():
+                best_chunked(None, lon[ok], lat[ok], out, np.nonzero(ok)[0])
+            elif ok.any():
                 lon_f, lat_f = lon[ok], lat[ok]
                 fidx = np.nonzero(ok)[0]
                 q, r = hexgrid.cell_qr(lon_f, lat_f, res)
@@ -806,7 +800,6 @@ def _snap_to_paths(points: DataFrame, paths: dict, *, id_col: str,
                 bounds = np.searchsorted(
                     inv[order], np.arange(len(uniq) + 1)
                 )
-                out = (gi_o, sx_o, sy_o, d_o)
                 for ci in range(len(uniq)):
                     pts_l = order[bounds[ci]:bounds[ci + 1]]
                     pts = fidx[pts_l]
@@ -1103,8 +1096,13 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
 
     lon = F.col(lon_col)
     lat = F.col(lat_col)
-    valid = (
-        lon.isNotNull() & lat.isNotNull() & ~F.isnan(lon) & ~F.isnan(lat)
+    # the validity rule (lon and lat both finite) before the JVM cell
+    # id, whose BIGINT cast aborts on NaN/±inf under ANSI: Spark orders
+    # NaN above +inf, so abs(x) < inf holds exactly for finite x; NULL
+    # coordinates make it NULL, coalesced to invalid
+    inf = F.lit(float("inf"))
+    valid = F.coalesce(
+        (F.abs(lon) < inf) & (F.abs(lat) < inf), F.lit(False)
     )
     # the ladder keys every window and join on a synthetic row id, not
     # the caller's id: duplicate ids stay separate rows, as in dense
@@ -1289,12 +1287,12 @@ def _snap_distributed(points: DataFrame, edges: DataFrame, *, id_col: str,
     # the edges and its broadcast, so the point cache is done
     pts.unpersist()
 
-    # invalid-coordinate rows mirror the dense kernel's contract: the
-    # globally-first edge (dense argmin over all-NaN distances returns
-    # index 0 of the (gid, eidx)-sorted edge arrays) with NULL
-    # snap/dist — the dense kernel's NaNs arrive as SQL NULLs through
-    # the Arrow boundary (pandas' NaN-as-null convention), so the
-    # literal here must be NULL, not NaN, for row equality
+    # invalid points get the Arrow kernels' invalid row: the
+    # globally-first edge (index 0 of their (gid, eidx)-sorted edge
+    # arrays) with NULL snap/dist — the kernels' NaNs arrive as SQL
+    # NULLs through the Arrow boundary (pandas' NaN-as-null
+    # convention), so the literal here must be NULL, not NaN, for row
+    # equality
     first = edges.orderBy("_gid", "_eidx").limit(1).first()
     nanlit = F.lit(None).cast("double")
     bad = (

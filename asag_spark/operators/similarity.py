@@ -1,6 +1,6 @@
 """Similarity search over the embeddings table (task brief): exact
-brute-force cosine top-k, the LSH-bucketed and IVF approximate
-variants, and the SQ8 / PQ / IVF-PQ compressed-read ANN family.
+brute-force cosine top-k, the IVF approximate variants, and the SQ8 /
+PQ / IVF-PQ compressed-read ANN family.
 
 Every corpus-scanning top-k runs on ONE kernel, ``_scan_topk``: one
 Arrow mapInPandas pass over the corpus against a broadcast query
@@ -10,9 +10,8 @@ score matrix; one boolean mask drops self-matches, rows in cells the
 query does not probe, and undefined (NaN) scores; one partial sort
 keeps each query's k best rows; per partition one lexsort on (query,
 score, neighbor_id) merges the batches; then one per-query
-row_number window (``_rank_topk``, shared with the LSH,
-hard-negative and exact-L2 refine paths) ranks the tiny candidate
-set. The three codecs:
+row_number window (``_rank_topk``, shared with the exact-L2
+refine of ivfpq_topk) ranks the tiny candidate set. The three codecs:
 
 * float cosine — 6-dp rounded, descending: cosine_topk, ivf_topk,
   ivf_topk_indexed;
@@ -20,20 +19,13 @@ set. The three codecs:
   dot ``score`` and, when the float corpus is scanned, the exact
   ``cosine`` of the winners: sq8_topk, sq8_topk_encoded;
 * PQ integer ADC distance ``adist`` — ascending: pq_topk,
-  pq_topk_encoded, ivfpq_topk (and the pq_topk_refined / ivfpq refine
-  shortlists).
+  pq_topk_encoded, ivfpq_topk (and its refine shortlist).
 
 Each codec either encodes the float ``embedding`` batch inline (the
 zero-setup path) or reads a stored ``codes`` column (the deployment
 path); both give bit-identical scores. The IVF ``probe`` restricts
 rows to each query's nprobe cells, assigned inline (rounded-cosine
 argmax) or read from the stored ``ivf_cell``.
-
-The approximate LSH path restricts candidates to corpus vectors
-sharing at least one random-hyperplane LSH band with the query (the
-same seeded banded signature as dedup.embedding_near_dups) —
-multi-band probing over bands × 2^bits_per_band buckets, exact cosine
-refine on candidates only.
 """
 
 from __future__ import annotations
@@ -44,32 +36,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from .dedup import EMB_LSH_BANDS, EMB_LSH_BITS, band_keys, embedding_near_dups
-
-
-def _with_norm(emb: DataFrame, prefix: str) -> DataFrame:
-    return emb.select(
-        F.col("vec_id").alias(f"{prefix}_id"),
-        F.col("embedding").cast("array<double>").alias(f"{prefix}_v"),
-        F.sqrt(
-            F.aggregate(
-                F.col("embedding").cast("array<double>"),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        ).alias(f"{prefix}_norm"),
-    )
-
-
-def _cosine(av, bv, an, bn):
-    # try_divide: cosine is undefined for a zero-norm vector (an empty-
-    # document embedding) — NULL it instead of letting ANSI mode abort
-    # the whole stage with DIVIDE_BY_ZERO; desc ranking puts NULLs last
-    dot = F.aggregate(
-        F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return F.round(F.try_divide(dot, an * bn), 6)
 
 
 def _norms(A):
@@ -249,38 +215,6 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     return _scan_topk(_float_corpus(emb), codec, k)
 
 
-def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5,
-                    nbits: int = EMB_LSH_BITS,
-                    bands: int = EMB_LSH_BANDS) -> DataFrame:
-    """Approximate top-k: candidates = corpus vectors sharing ≥1 LSH
-    band key with the query (banded multi-probe; recall < 1 by design
-    — the 10^12-vector scale path where the brute-force scan is off
-    the table). The query side's band keys are broadcast, so the
-    corpus pass is map-side band-key generation + a broadcast
-    semi-probe; only candidate ids reach the distinct/refine shuffle.
-    """
-    qbk = band_keys(queries, nbits, bands).withColumnRenamed("vec_id", "q_id")
-    cbk = band_keys(emb, nbits, bands)
-    cand = (
-        cbk.join(F.broadcast(qbk), "bkey")
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", F.col("vec_id").alias("n_id"))
-        .distinct()
-    )
-    q = _with_norm(queries, "q")
-    c = _with_norm(emb, "n")
-    scored = (
-        cand.join(c, "n_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            _cosine(F.col("q_v"), F.col("n_v"), F.col("q_norm"), F.col("n_norm")).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, k, "cosine", ascending=False)
-
-
 # IVF coarse-quantizer defaults: cells ~ sqrt(|corpus|) is the classic
 # IVF-flat operating point; nprobe trades recall for scan fraction.
 IVF_CELLS = 32
@@ -452,23 +386,6 @@ def ivf_index_write(emb: DataFrame, path: str,
     _write_centroids(emb.sparkSession, c_ids, C, path)
 
 
-def ivf_index_append(new_emb: DataFrame, path: str) -> None:
-    """Append a batch of new vectors to an existing ``ivf_index_write``
-    layout — the growing-corpus maintenance path. The quantizer stays
-    FROZEN: new vectors are assigned against the stored centroid
-    sidecar (one map-only Arrow matmul), clustered on the cell key, and
-    appended into the cell-partitioned directory — no shuffle or
-    rewrite of existing data, which is what makes daily 10^9-vector
-    appends to a 10^12-vector index affordable. Probes over the
-    appended index are row-identical to a probe over a single-shot
-    index of the union built with the same centroids (parity-tested);
-    re-train + ``ivf_index_write`` periodically when quantizer drift
-    (new data far from every centroid) degrades the probed-cell recall.
-    """
-    centroids = _load_centroids(new_emb.sparkSession, path)
-    _write_cells(ivf_assign(new_emb, centroids=centroids), path, mode="append")
-
-
 def _load_centroids(spark, path: str):
     """Centroid sidecar → (c_ids asc, matrix). Read driver-side with
     pyarrow when possible — it is a few KB and a Spark job just to
@@ -540,37 +457,6 @@ def ivf_topk_indexed(spark, path: str, queries: DataFrame, k: int = 5,
         spark, path, probed, F.col("embedding").cast("array<double>").alias("embedding")
     )
     return _scan_topk(idx, _cosine_codec(qs), k, probe)
-
-
-def ivf_train_step(emb: DataFrame, n_cells: int = IVF_CELLS,
-                   centroids=None) -> DataFrame:
-    """One distributed Lloyd (k-means) refinement of the IVF coarse
-    quantizer — the "periodic re-train" SCALE.md §8 prescribes for
-    quantizer drift, as an engine operator instead of an offline
-    assumption: assign every vector to its nearest current centroid,
-    then emit the per-cell mean vector. Iterating this op IS k-means;
-    one step is the common nightly refresh.
-
-    Plan shape (100 TB): assignment is ivf_assign's map-only broadcast
-    matmul (zero shuffles). The mean never ships vectors to a reducer:
-    posexplode to (cell, dim, x) feeds a groupBy(cell, dim) whose
-    map-side partial aggregation reduces each partition to at most
-    cells × dims rows BEFORE the exchange — shuffle volume is bounded
-    by (partitions × cells × dims), independent of corpus row count.
-    Long output format (no arrays) keeps the value oracle exact.
-
-    Output: (cell, dim, m, n_members) — m = round(avg, 6) of dimension
-    ``dim`` over the cell's members, dim 0-based.
-    """
-    assigned = ivf_assign(emb, n_cells=n_cells, centroids=centroids).select(
-        F.col("ivf_cell").alias("cell"),
-        F.posexplode(F.col("embedding").cast("array<double>"))
-        .alias("dim", "x"),
-    )
-    return assigned.groupBy("cell", "dim").agg(
-        F.round(F.avg("x"), 6).alias("m"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
 
 
 def sq8_scale(emb: DataFrame) -> float:
@@ -751,8 +637,7 @@ def sq8_topk_encoded(spark, path: str, queries: DataFrame,
 #
 # The codebook is the ivf_centroids seeded sample (the ksub corpus
 # vectors with smallest md5(vec_id), sliced per subspace) -- closed
-# form for the value oracle; pq_train_step below is the Lloyd
-# refinement a production build would iterate, same plan either way.
+# form for the value oracle.
 
 PQ_M = 8     # subspaces; d must be divisible by m
 PQ_K = 16    # centroids per sub-codebook (4-bit codes)
@@ -953,117 +838,6 @@ def _refine_l2(shortlist: DataFrame, queries: DataFrame, corpus: DataFrame,
     return _rank_topk(scored, k, "l2", ascending=True)
 
 
-def pq_topk_refined(emb: DataFrame, queries: DataFrame, k: int = 5,
-                    r: int = 50, codebook=None) -> DataFrame:
-    """PQ + refine (the FAISS ``IndexRefineFlat`` shape): the ADC scan
-    shortlists ``r`` candidates per query from codes alone, then the
-    EXACT float64 squared-L2 of the original vectors reranks the
-    shortlist to top-k. This is the honest production contract for PQ
-    on hard (clusterless) data: the isotropic-Gaussian test corpus is
-    PQ's worst case — raw ADC@5 recall is ~0.2 there (measured,
-    trained or not) — while the r/k refine multiplier buys recall
-    back (measured on sf0.01/2k vectors: 0.55 @ r=50, 0.75 @ r=100,
-    0.91 @ r=200) at a cost of n_q·r exact distance evaluations (a
-    candidate-pruned hash join, NOT a corpus scan of float vectors —
-    the float table is touched only for shortlisted rows).
-
-    Output: (query_id, neighbor_id, rank, l2) ranked by
-    (l2 ASC, neighbor_id ASC), l2 rounded to 6 dp."""
-    shortlist = pq_topk(emb, queries, k=r, codebook=codebook)
-    return _refine_l2(shortlist, queries, emb, k)
-
-
-def pq_train_step(emb: DataFrame, codebook=None) -> DataFrame:
-    """One distributed Lloyd refinement of the PQ sub-codebooks (the
-    per-subspace analogue of ivf_train_step — iterate for k-means,
-    one step is the nightly quantizer refresh): assign every vector's
-    m subvectors to their current nearest sub-centroids with the
-    integer-exact rule pq_topk encodes with, then emit each
-    (subspace, centroid, dim)'s member mean.
-
-    Plan shape (100 TB): assignment is the broadcast-codebook Arrow
-    kernel — zero shuffles; the kernel emits (s, cidx, dim, x) long
-    rows (m·dsub = d rows per vector, same fan-out as ivf_train_step's
-    posexplode) into ONE map-combined groupBy whose key space is
-    m × ksub × dsub (= 1024 at the defaults) — shuffle volume bounded
-    by partitions × keys, independent of corpus rows.
-
-    Output: (s, cidx, dim, m, n_members) — dim 0-based WITHIN the
-    subspace, m = round(avg, 6)."""
-    import pandas as pd
-
-    CB = _require_codebook(emb, codebook)
-    bcb = emb.sparkSession.sparkContext.broadcast(CB)
-    out_schema = T.StructType(
-        [
-            T.StructField("s", T.IntegerType()),
-            T.StructField("cidx", T.IntegerType()),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("x", T.DoubleType()),
-        ]
-    )
-
-    def assign(batches):
-        CB_v = bcb.value
-        m, _, dsub = CB_v.shape
-        for batch in batches:
-            if not len(batch):
-                continue
-            X = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
-            codes = _pq_codes(X, CB_v)
-            n = len(X)
-            yield pd.DataFrame(
-                {
-                    "s": np.repeat(np.tile(np.arange(m, dtype=np.int32), n),
-                                   dsub),
-                    "cidx": np.repeat(codes.reshape(-1).astype(np.int32),
-                                      dsub),
-                    "dim": np.tile(np.arange(dsub, dtype=np.int32), n * m),
-                    "x": X.reshape(n, m, dsub).reshape(-1),
-                }
-            )
-
-    rows = emb.select("embedding").mapInPandas(assign, out_schema)
-    return rows.groupBy("s", "cidx", "dim").agg(
-        F.round(F.avg("x"), 6).alias("m"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
-
-
-def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 5,
-                   shortlist: int = 20,
-                   dup_threshold: float = 0.3) -> DataFrame:
-    """Hard-negative mining for contrastive training: per query, the
-    top-k most-similar corpus vectors that are NOT near-duplicates —
-    the highest-value negatives (hard because similar, safe because
-    verified non-dup). Composes the engine's own primitives: an exact
-    cosine shortlist (at 10^12 vectors: swap in ivf_topk/pq_refined —
-    same output contract) anti-joined against the banded-hyperplane
-    near-dup pairs, then re-ranked.
-
-    Plan shape: the shortlist op does the corpus work (broadcast
-    query matmul, candidates-only shuffle); the dup filter is an
-    anti-join of the ≤ n_q·shortlist candidate rows against the dup
-    pair set keyed (query, neighbor) — both orientations of the
-    undirected pairs are probed; the final window re-ranks candidate
-    rows only. Self-matches are already excluded by the shortlist.
-
-    Output: (query_id, neighbor_id, rank, cosine)."""
-    dups = embedding_near_dups(emb, threshold=dup_threshold)
-    both = dups.select(
-        F.col("vec_a").alias("x"), F.col("vec_b").alias("y")
-    ).unionByName(
-        dups.select(F.col("vec_b").alias("x"), F.col("vec_a").alias("y"))
-    )
-    cand = cosine_topk(emb, queries, k=shortlist)
-    kept = cand.join(
-        both,
-        (cand["query_id"] == both["x"]) & (cand["neighbor_id"] == both["y"]),
-        "left_anti",
-    )
-    return _rank_topk(kept, k, "cosine", ascending=False)
-
-
 def ivfpq_index_write(emb: DataFrame, path: str,
                       n_cells: int = IVF_CELLS, codebook=None) -> None:
     """Materialize the IVF-PQ layout — THE 10^12-vector serving shape
@@ -1073,8 +847,8 @@ def ivfpq_index_write(emb: DataFrame, path: str,
     probe reads nprobe/n_cells of the data AND each touched row is
     ~64× narrower. Sidecars: the coarse centroids and the
     sub-codebooks. Both quantizers are the deterministic seeded
-    samples (swap in trained ones — pq_train_step / ivf_train_step —
-    without changing any layout or probe code)."""
+    samples (trained ones could replace them without changing any
+    layout or probe code)."""
     c_ids, C = ivf_centroids(emb, n_cells)
     if C is None:
         raise ValueError("ivfpq_index_write: empty corpus")
@@ -1108,166 +882,3 @@ def ivfpq_topk(spark, path: str, queries: DataFrame, k: int = 5,
     return _refine_l2(shortlist, queries, refine_from, k)
 
 
-def semdedup(emb: DataFrame, threshold: float = 0.95,
-             n_cells: int = IVF_CELLS, centroids=None) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication"): cluster-scoped
-    semantic dedup — embeddings are coarse-clustered (the shared IVF
-    quantizer), pairwise cosine runs ONLY within a cluster, and a
-    vector is dropped when a ≥ threshold neighbor with a SMALLER id
-    shares its cluster. The smaller-id keep rule is the paper's
-    one-representative-per-duplicate-group pruning made deterministic
-    by a total order (id ASC) — engine-portable, parallelism-
-    invariant, append-unstable only in the ids themselves.
-
-    Plan shape (why this is the web-scale semantic-dedup design):
-      1. cluster assignment is ivf_assign's zero-shuffle broadcast
-         matmul (map-only Arrow pass, bit-identical to the oracle's
-         rounded-cosine argmax with ties to the smaller centroid id);
-      2. ONE shuffle keys the within-cell self-join by ivf_cell; the
-         quadratic lives INSIDE a cell — the whole point of SemDeDup's
-         clustering is bounding pairwise work to E[|cell|] = N/k per
-         cell (N²/k total pair evaluations instead of N²); at 10^12
-         vectors raise n_cells so cells stay ~10^5 rows, exactly the
-         paper's k scaling, and AQE splits any skewed cell key across
-         tasks (a join key is splittable; a window partition is not —
-         same reasoning as boilerplate_removal);
-      3. the ≥ threshold hits aggregate map-combined to one row per
-         dropped vector; the keep flag is a left join against that
-         tiny frame.
-    Cosines round to 6 dp (the engine-wide float-parity idiom).
-
-    Output: (vec_id, ivf_cell, keep, max_sim_smaller) — one row per
-    input vector; keep = 1 iff no same-cell ≥ threshold neighbor with
-    a smaller id exists; max_sim_smaller = the strongest such
-    neighbor's cosine (NULL when keep = 1). Zero-norm vectors have no
-    defined cosine and so join no pairs: they always come back keep=1.
-    """
-    e, pairs = _semdedup_pairs(emb, threshold, n_cells, centroids)
-    hits = (
-        pairs.select(F.col("doc_b").alias("vec_id"), "cos")
-        .groupBy("vec_id")
-        .agg(F.max("cos").alias("max_sim_smaller"))
-    )
-    return (
-        e.select("vec_id", "ivf_cell")
-        .join(hits, "vec_id", "left")
-        .select(
-            "vec_id", "ivf_cell",
-            F.when(F.col("max_sim_smaller").isNull(), F.lit(1))
-            .otherwise(F.lit(0)).cast("int").alias("keep"),
-            "max_sim_smaller",
-        )
-    )
-
-
-def _semdedup_pairs(emb: DataFrame, threshold: float, n_cells: int,
-                    centroids) -> tuple[DataFrame, DataFrame]:
-    """SemDeDup's shared pair stage: (e, pairs). ``e`` is the
-    localCheckpointed (vec_id, ivf_cell, v, norm) spine over ALL
-    vectors; ``pairs`` the within-cell (doc_a < doc_b, cos) rows at
-    cosine ≥ threshold. One implementation feeds both the chain-rule
-    ``semdedup`` and the component-scoped ``semdedup_keep_best`` so
-    the candidate semantics can never drift between them."""
-    assigned = ivf_assign(
-        emb.select("vec_id", "embedding"), n_cells, centroids
-    )
-    e = assigned.select(
-        "vec_id", "ivf_cell",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.sqrt(
-            F.aggregate(
-                F.col("embedding").cast("array<double>"),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        ).alias("norm"),
-    )
-    # the assignment matmul is map-only (no exchange for Catalyst to
-    # reuse) and e feeds THREE consumers (both self-join sides + the
-    # final keep-flag spine) — without materialization the Arrow
-    # assignment pass runs 3x per action (review r3). localCheckpoint
-    # computes it once; at index scale the same role is played by the
-    # persisted ivf_index_write layout.
-    e = e.localCheckpoint()
-    # zero-norm vectors (empty-document embeddings) have no defined
-    # cosine: exclude them from BOTH pairwise sides — under the ANSI
-    # runtime a single zero vector otherwise aborts the stage with
-    # DIVIDE_BY_ZERO — and let the left-join spine keep them (keep=1,
-    # max_sim_smaller NULL), the only semantics that can't drop data
-    pos = e.filter(F.col("norm") > 0)
-    a = pos.alias("a")
-    b = pos.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, p: acc + p,
-    )
-    cos = F.round(dot / (F.col("a.norm") * F.col("b.norm")), 6)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.ivf_cell") == F.col("b.ivf_cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("doc_a"),
-            F.col("b.vec_id").alias("doc_b"),
-            cos.alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
-    return e, pairs
-
-
-def semdedup_keep_best(emb: DataFrame, scores: DataFrame,
-                       threshold: float = 0.95, n_cells: int = IVF_CELLS,
-                       centroids=None,
-                       score_col: str = "quality") -> DataFrame:
-    """SemDeDup with the paper's keep-BEST representative (Abbas et
-    al. 2023 keep one representative per duplicate group; when a
-    quality signal exists the kept member should be the best one, not
-    the smallest id). Composes three live primitives:
-
-      1. the shared SemDeDup pair stage (`_semdedup_pairs`: within-
-         IVF-cell cosine ≥ threshold — the N²/k-bounded quadratic);
-      2. `dedup_clusters`' connected components over those pairs —
-         the chain rule of plain ``semdedup`` keeps min-id per chain
-         only implicitly; the closure makes the duplicate GROUP
-         explicit (transitive: A~B~C is one group even when A~C is
-         below threshold) so a representative exists per group;
-      3. `keep_best_per_cluster`: keeper = argmax(``score_col``),
-         ties to the smaller vec_id — overriding the smallest-id rule
-         with the score, exactly the flip this operator exists for.
-
-    ``scores``: (vec_id, <score_col>) — any quality signal (model
-    score, heuristic quality, recency), PARTIAL coverage allowed:
-    unscored vectors survive with a NULL score and rank below every
-    scored cluster member (keep_best_per_cluster's left-join
-    contract), so a cluster scored nowhere still keeps its smallest
-    id. Singletons (no ≥-threshold neighbor, including zero-norm
-    vectors) are their own cluster and always keep=1.
-
-    Plan shape: the pair stage and closure are the audited semdedup /
-    dedup_clusters plans; the keeper adds one equi-join + one window
-    over high-cardinality cluster ids (no hot key).
-
-    Output: (vec_id, cluster_id, <score_col>, keep) — one keep=1 row
-    per cluster.
-    """
-    from .dedup import dedup_clusters, keep_best_per_cluster
-
-    e, pairs = _semdedup_pairs(emb, threshold, n_cells, centroids)
-    labels = dedup_clusters(pairs.select("doc_a", "doc_b"))
-    spine = (
-        e.select("vec_id")
-        .join(labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("cluster_id", F.col("vec_id")).alias("cluster_id"),
-        )
-    )
-    return keep_best_per_cluster(
-        spine, scores, id_col="vec_id", cluster_col="cluster_id",
-        score_col=score_col,
-    )

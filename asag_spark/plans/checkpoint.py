@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from asag_spark.schema import METRICS
+from asag_spark.session import release_caches
 
 
 def _fingerprint(parent_fp: str, stage: str, params: str = "") -> str:
@@ -48,7 +49,9 @@ class CheckpointedPipeline:
 
     def run_stage(self, stage: str, build, params: str = "") -> DataFrame:
         """build: () -> DataFrame. Returns the (possibly restored)
-        stage output; records metrics."""
+        stage output, read back from its parquet; records metrics.
+        Whatever the build persisted is released once the write
+        finishes."""
         fp = _fingerprint(self.fp, stage, params)
         self.fp = fp  # chain lineage
         data_dir = os.path.join(self.workdir, stage, "data")
@@ -68,8 +71,8 @@ class CheckpointedPipeline:
                 return self.spark.read.parquet(data_dir)
 
         t0 = time.perf_counter()
-        df = build()
-        df.write.mode("overwrite").parquet(data_dir)
+        with release_caches():
+            build().write.mode("overwrite").parquet(data_dir)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
         # one row per part file, its count read from the parquet footer

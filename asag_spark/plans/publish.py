@@ -280,6 +280,7 @@ def publish_netex_zip(spark, zip_path: str, workdir: str,
     from ..netex import parse_netex_zip
     from ..operators.enrich import build_features
     from ..schema import DOCS
+    from ..session import release_caches
 
     if not os.path.exists(zip_path):
         raise FileNotFoundError(
@@ -291,10 +292,11 @@ def publish_netex_zip(spark, zip_path: str, workdir: str,
             f"no XML deliveries inside {zip_path!r} (reference: "
             "findFirstXmlFileRecursive raises NoSuchElementException)")
     docs = spark.createDataFrame(rows, schema=DOCS)
-    features = feature_json(build_features(docs))
     os.makedirs(workdir, exist_ok=True)
     out_path = os.path.join(workdir, f"{tileset}.geojson")
-    n = write_feature_collection(features, out_path)
+    with release_caches():
+        n = write_feature_collection(feature_json(build_features(docs)),
+                                     out_path)
     if n == 0:
         raise ValueError(f"feature build produced 0 features from {zip_path!r}")
     return publish_tileset(out_path, transport, tileset=tileset,

@@ -10,10 +10,46 @@ and AQE-coalesced).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Frames an operator persists for its own lazy plan (build_features'
+# entity frame) are owned by the caller that materializes the result:
+# the innermost open release_caches() block unpersists them on exit.
+# Outside any block they stay cached for the session, as plain
+# persist() would.
+_OWNED: ContextVar[list[DataFrame] | None] = ContextVar(
+    "asag_owned_caches", default=None
+)
+
+
+def persist_released(df: DataFrame, level) -> DataFrame:
+    """``df.persist(level)``, released when the innermost open
+    ``release_caches()`` block exits."""
+    df = df.persist(level)
+    owned = _OWNED.get()
+    if owned is not None:
+        owned.append(df)
+    return df
+
+
+@contextmanager
+def release_caches():
+    """Own the caches a build persists: run the build AND the write
+    that materializes it inside this block; every frame persisted
+    through ``persist_released`` in between is unpersisted on exit."""
+    owned: list[DataFrame] = []
+    scope = _OWNED.set(owned)
+    try:
+        yield
+    finally:
+        _OWNED.reset(scope)
+        for df in owned:
+            df.unpersist()
 
 
 def get_spark(

@@ -10,7 +10,6 @@ explicit running-sum offsets) — JVM-side, no lambdas.
 
 from __future__ import annotations
 
-import functools
 import os
 import shutil
 
@@ -194,98 +193,3 @@ def docs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(sid.alias("doc_id"), spans_full.alias("spans"))
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
-                  compare_cols: list[str] | None = None) -> DataFrame:
-    """Key-level diff between two table snapshots — the CDC derivation
-    an Iceberg-style maintenance plane runs to answer "what changed
-    between snapshot A and snapshot B" without engine-native changelog
-    support: rows are matched on ``key_cols`` and classified added /
-    removed / changed / unchanged, with value comparison over
-    ``compare_cols`` (default: every shared non-key column).
-
-    Change detection hashes the compared values per side with
-    xxhash64 over (column-name, stringified-value) pairs — null-safe
-    (a literal sentinel distinguishes NULL from 'null' the string via
-    a prefix char no cast emits) and column-order-canonical (names
-    sorted), so reordered schemas diff identically. A hash equality
-    standing in for value equality accepts the 2^-64 collision
-    false-"unchanged"; callers needing certainty can pass compare_cols
-    and join the flagged keys back.
-
-    Plan shape at 100 TB: ONE full outer join keyed by the primary
-    key; each side is first reduced map-side to (key, row_hash) — the
-    wire carries two longs per row, never the payload. With both
-    snapshots stored via write_bucketed on the key, the join
-    co-locates with zero exchanges; AQE handles the residual skew of
-    a hot key (a join key splits; nothing here uses a window).
-
-    Output: key columns + (change: 'added'|'removed'|'changed'|
-    'unchanged'). Keys duplicated WITHIN a snapshot are rejected
-    loudly (a diff over non-unique keys is ill-defined) — via a lazy
-    raise_error branch inside the change expression, so the check
-    rides the one diff job instead of forcing a separate validation
-    pass.
-    """
-    if not key_cols:
-        raise ValueError("snapshot_diff: key_cols must be non-empty")
-    for c in key_cols:
-        if c not in old.columns or c not in new.columns:
-            raise ValueError(f"snapshot_diff: key column {c!r} missing")
-    if compare_cols is None:
-        shared = set(old.columns) & set(new.columns)
-        compare_cols = sorted(shared - set(key_cols))
-    else:
-        for c in compare_cols:
-            if c not in old.columns or c not in new.columns:
-                raise ValueError(
-                    f"snapshot_diff: compare column {c!r} missing"
-                )
-        compare_cols = sorted(compare_cols)
-
-    def hashed(df, side):
-        parts = []
-        for c in compare_cols:
-            s = F.col(c).cast("string")
-            parts.append(F.lit(c))
-            # 'n' marks NULL, 'v' prefixes a value: no stringified
-            # value can collide with the null sentinel
-            parts.append(
-                F.when(s.isNull(), F.lit("n")).otherwise(F.concat(F.lit("v"), s))
-            )
-        h = (F.xxhash64(*parts) if parts else F.lit(0).cast("long"))
-        g = df.select(*key_cols, h.alias("_h")).groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("_k"), F.min("_h").alias(f"_h_{side}")
-        )
-        return g
-
-    o = hashed(old, "old").withColumnRenamed("_k", "_k_old")
-    n = hashed(new, "new").withColumnRenamed("_k", "_k_new")
-    joined = o.join(n, key_cols, "full")
-    dup = (F.coalesce(F.col("_k_old"), F.lit(0)) > 1) | (
-        F.coalesce(F.col("_k_new"), F.lit(0)) > 1
-    )
-    dup_msg = F.concat(
-        F.lit("snapshot_diff: duplicate key within a snapshot: "),
-        F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols]),
-    )
-    # NULL keys never match across snapshots in an equi-join, so the
-    # same null-keyed row would surface as removed AND added — an
-    # ill-defined diff; reject loudly through the same lazy branch
-    null_key = functools.reduce(
-        lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]
-    )
-    change = (
-        F.when(
-            null_key,
-            F.raise_error(F.lit(
-                "snapshot_diff: NULL in a key column (keys must be "
-                "non-null for a well-defined diff)"
-            )).cast("string"),
-        )
-        .when(dup, F.raise_error(dup_msg).cast("string"))
-        .when(F.col("_h_old").isNull(), F.lit("added"))
-        .when(F.col("_h_new").isNull(), F.lit("removed"))
-        .when(F.col("_h_old") == F.col("_h_new"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return joined.select(*key_cols, change.alias("change"))

@@ -81,104 +81,12 @@ def test_checks_stream_rejects_exact_unique(spark, tmp_path):
         checks_stream(ev, [{"rule": "unique", "col": "event_id"}])
 
 
-def test_psi_drift_identical_and_shifted(spark):
-    """PSI of a distribution against itself is ~0 (smoothing only);
-    a hard shift concentrates current mass in the top edge bin and
-    pushes PSI far past the 0.25 'shifted' band; nulls occupy their
-    own bin so null-rate drift is visible."""
-    from asag_spark.operators.checks import psi_drift
-
-    ref = spark.range(1000).selectExpr("CAST(id % 100 AS DOUBLE) AS v")
-    same = psi_drift(ref, ref, "v", bins=10).collect()
-    assert all(abs(r.psi) < 0.01 for r in same)
-    # all-bin spine: every bin 0..bins appears whether occupied or not
-    # (never-occupied bins still carry their smoothed terms)
-    assert sorted(r.bin for r in same) == list(range(11))
-    shifted = spark.range(1000).selectExpr(
-        "CAST(id % 100 + 500 AS DOUBLE) AS v"
-    )
-    out = psi_drift(ref, shifted, "v", bins=10).collect()
-    psi = out[0].psi
-    assert psi > 0.25
-    by_bin = {r.bin: r for r in out}
-    assert by_bin[9].n_cur == 1000  # everything clamps into the edge bin
-    # null drift: current snapshot goes half-null
-    nul = spark.range(1000).selectExpr(
-        "CASE WHEN id % 2 = 0 THEN CAST(id % 100 AS DOUBLE) END AS v"
-    )
-    outn = {r.bin: r for r in psi_drift(ref, nul, "v", bins=10).collect()}
-    assert outn[10].n_cur == 500 and outn[10].n_ref == 0
-    assert outn[10].psi > 0.1
-    with pytest.raises(ValueError, match="hi > lo"):
-        psi_drift(ref, ref, "v", bins=10, lo=5.0, hi=5.0)
-    with pytest.raises(ValueError, match="all null"):
-        psi_drift(
-            spark.range(3).selectExpr("CAST(NULL AS DOUBLE) AS v"),
-            ref, "v",
-        )
-
-
-def test_profile_table_stats(spark):
-    """Profile values: exact counts, stringified min/max, numeric-only
-    mean, all-null column profile, unknown-column raise."""
-    from asag_spark.operators.checks import profile_table
-
-    df = spark.createDataFrame(
-        [(1, "a", None), (2, "b", None), (2, None, None)],
-        "id long, s string, z string",
-    )
-    out = {r.column: r for r in profile_table(df).collect()}
-    assert out["id"].n_rows == 3 and out["id"].n_distinct == 2
-    assert out["id"].min_value == "1" and out["id"].max_value == "2"
-    assert abs(out["id"].mean - round(5 / 3, 6)) < 1e-9
-    assert out["s"].n_nulls == 1 and out["s"].mean is None
-    assert out["z"].n_distinct == 0 and out["z"].min_value is None
-    approx = {r.column: r for r in
-              profile_table(df, ["id"], exact_distinct=False).collect()}
-    assert approx["id"].n_distinct >= 1  # HLL estimate, small-n exact-ish
-    with pytest.raises(ValueError, match="unknown columns"):
-        profile_table(df, ["nope"])
-
-
-def test_snapshot_diff_classes_and_dup_raise(spark):
-    """All four change classes from a constructed pair; NULL vs value
-    counts as changed; duplicate keys raise at action time."""
-    from asag_spark.sources import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, None, 30), (4, "d", 40)],
-        "k long, s string, v long",
-    )
-    new = spark.createDataFrame(
-        [(1, "a", 10), (2, "B", 20), (3, "now", 30), (5, "e", 50)],
-        "k long, s string, v long",
-    )
-    out = {r.k: r.change for r in snapshot_diff(old, new, ["k"]).collect()}
-    assert out == {1: "unchanged", 2: "changed", 3: "changed",
-                   4: "removed", 5: "added"}
-    # restricted compare set: s excluded -> row 2 becomes unchanged
-    out2 = {r.k: r.change
-            for r in snapshot_diff(old, new, ["k"],
-                                   compare_cols=["v"]).collect()}
-    assert out2[2] == "unchanged" and out2[3] == "unchanged"
-    dup = spark.createDataFrame([(1, "x", 1), (1, "y", 2)],
-                                "k long, s string, v long")
-    with pytest.raises(Exception, match="duplicate key"):
-        snapshot_diff(dup, new, ["k"]).collect()
-    with pytest.raises(ValueError, match="key_cols"):
-        snapshot_diff(old, new, [])
-
-
 def test_review_r3_fixes(spark):
     """Regression battery for the round-3 review findings: approx
     uniqueness passes within its HLL tolerance on clean data, a
-    boundless range rule is rejected, psi_drift raises the intended
-    error when lo is caller-supplied but the reference is all null,
-    snapshot_diff rejects NULL keys loudly, and dsir handles null
+    boundless range rule is rejected, and dsir handles null
     text/source without dropping rows."""
-    from asag_spark.operators.checks import psi_drift, table_checks
     from asag_spark.operators.text import dsir_weights
-    from asag_spark.sources import snapshot_diff
 
     # approx_unique on a perfectly unique 50k-row column must PASS
     big = spark.range(50_000).selectExpr("id AS k")
@@ -187,16 +95,6 @@ def test_review_r3_fixes(spark):
 
     with pytest.raises(ValueError, match="boundless"):
         table_checks(big, [{"rule": "range", "col": "k"}])
-
-    allnull = spark.range(3).selectExpr("CAST(NULL AS DOUBLE) AS v")
-    with pytest.raises(ValueError, match="all null"):
-        psi_drift(allnull, big.selectExpr("CAST(k AS DOUBLE) AS v"),
-                  "v", lo=0.0)
-
-    o = spark.createDataFrame([(None, "a")], "k string, s string")
-    n = spark.createDataFrame([(None, "a")], "k string, s string")
-    with pytest.raises(Exception, match="NULL in a key column"):
-        snapshot_diff(o, n, ["k"]).collect()
 
     docs = spark.createDataFrame(
         [(0, "alpha beta", "en", "t"), (1, None, "en", "r"),
@@ -213,19 +111,3 @@ def test_review_r3_fixes(spark):
                      n_buckets=64).collect()
 
 
-def test_snapshot_diff_involution(spark):
-    """Swapping the snapshots swaps added<->removed and preserves
-    changed/unchanged — the diff is an involution on roles."""
-    from asag_spark.sources import snapshot_diff
-
-    o = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, s string"
-    )
-    n = spark.createDataFrame(
-        [(2, "B"), (3, "c"), (4, "d")], "k long, s string"
-    )
-    fwd = {r.k: r.change for r in snapshot_diff(o, n, ["k"]).collect()}
-    rev = {r.k: r.change for r in snapshot_diff(n, o, ["k"]).collect()}
-    swap = {"added": "removed", "removed": "added",
-            "changed": "changed", "unchanged": "unchanged"}
-    assert rev == {k: swap[v] for k, v in fwd.items()}

@@ -127,7 +127,6 @@ def test_emb_lsh_joins_key_on_band_keys(spark):
     import numpy as np
 
     from asag_spark.operators.dedup import embedding_near_dups
-    from asag_spark.operators.similarity import cosine_topk_lsh
 
     rng = np.random.default_rng(11)
     emb = spark.createDataFrame(
@@ -135,19 +134,15 @@ def test_emb_lsh_joins_key_on_band_keys(spark):
          for i in range(200)],
         "vec_id long, embedding array<float>, label int",
     )
-    for df in (
-        embedding_near_dups(emb, threshold=0.9),
-        cosine_topk_lsh(emb, emb.filter(F.col("vec_id") < 3), k=3),
-    ):
-        plan = _plan(df)
-        # candidate-generation join keys on bkey
-        assert re.search(r"Join \[bkey#\d+L?\], \[bkey#\d+L?\]", plan), plan[:500]
-        # signature generation is an Arrow projection, never a Python
-        # row-at-a-time eval
-        assert "ArrowEvalPython" in plan
-        assert "BatchEvalPython" not in plan
-        # the legacy low-cardinality bucket column is gone
-        assert "bucket" not in plan
+    plan = _plan(embedding_near_dups(emb, threshold=0.9))
+    # candidate-generation join keys on bkey
+    assert re.search(r"Join \[bkey#\d+L?\], \[bkey#\d+L?\]", plan), plan[:500]
+    # signature generation is an Arrow projection, never a Python
+    # row-at-a-time eval
+    assert "ArrowEvalPython" in plan
+    assert "BatchEvalPython" not in plan
+    # the legacy low-cardinality bucket column is gone
+    assert "bucket" not in plan
 
 
 def test_ivf_probe_corpus_never_shuffles(spark):

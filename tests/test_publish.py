@@ -178,9 +178,14 @@ def test_end_to_end_inline_zip(spark, tmp_path):
 
     t = LocalTransport(str(tmp_path / "s3"),
                        status_script=[NOT_COMPLETE, COMPLETE])
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet().toArray())
     r = publish_netex_zip(spark, str(z), str(tmp_path / "wd"), t,
                           max_retries=5)
     assert r.state == STATE_FINISHED
+    # the feature build's entity cache is released after the write
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - cached_before \
+        == set()
     staged = tmp_path / "s3" / "staging" / "tiles" / "upload.geojson"
     got = [(f["id"], f["properties"])
            for f in json.loads(staged.read_text())["features"]]

@@ -578,9 +578,9 @@ def test_snap_to_boundary_pruned_parity(spark):
     (bounded expansion), a mid-range point (>_SNAP_JUMP_G empty rings
     → the vectorized nearest-bucket jump), far points beyond the
     SNAP_D_CAP_M shear-validity disk (dense per-cell fallback), and a
-    null-coordinate row (edge-0/NaN mirror of the dense all-NaN
-    argmin), plus duplicate ids, an empty point set and an all-invalid
-    (NULL and NaN) one."""
+    null-coordinate row (the invalid row: edge 0, NULL snap and dist),
+    plus duplicate ids, an empty point set and an all-invalid (NULL,
+    NaN and ±inf) one."""
     import math
 
     import numpy as np
@@ -648,9 +648,11 @@ def test_snap_to_boundary_pruned_parity(spark):
     # NULL snap and dist per invalid point; the distributed ladder then
     # runs no round and must still build its (empty) best-edge frame
     invalid = spark.createDataFrame(
-        [("P:null", None, None), ("P:nan", float("nan"), 59.5)], schema
+        [("P:null", None, None), ("P:nan", float("nan"), 59.5),
+         ("P:inf", float("inf"), 59.5), ("P:ninf", 10.2, float("-inf"))],
+        schema,
     )
-    for edge_pts, n in ((spark.createDataFrame([], schema), 0), (invalid, 2)):
+    for edge_pts, n in ((spark.createDataFrame([], schema), 0), (invalid, 4)):
         want = canon(snap_to_boundary(edge_pts, zones, mode="dense"))
         assert len(want) == n
         assert all(r[2] == 0 and r[3:] == (None, None, None) for r in want)

@@ -125,6 +125,32 @@ def test_sessionize(spark):
     assert len([r for r in sess if r["user_id"] == 8]) == 1
 
 
+def test_run_stage_releases_build_caches(spark, tmp_path):
+    """build_features persists its entity frame for its own plan. The
+    stage that writes the features owns that cache and releases it
+    once the write finishes: features for two inputs leave no new
+    persistent RDD behind."""
+    from asag_spark.datagen import AS_OF, fixture_docs, generate_docs
+    from asag_spark.operators.enrich import build_features
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "wd"), input_fp="fp0")
+    a = pipe.run_stage("features_a",
+                       lambda: build_features(fixture_docs(spark), as_of=AS_OF))
+    b = pipe.run_stage("features_b",
+                       lambda: build_features(generate_docs(spark, 200),
+                                              as_of=AS_OF))
+    assert a.count() == 12 and b.count() > 0
+    # (ids may also leave the set: the context cleaner drops RDDs that
+    # other tests persisted once they are garbage)
+    assert persistent() - before == set()
+
+
 def test_checkpoint_resume(spark, sf_dir, tmp_path):
     workdir = str(tmp_path / "wd")
 

@@ -11,7 +11,7 @@ from asag_spark.operators.dedup import (
     minhash_dedup, simhash_near_dups,
 )
 from asag_spark.operators.media import decode_media, extract_media, media_features
-from asag_spark.operators.similarity import cosine_topk, cosine_topk_lsh
+from asag_spark.operators.similarity import cosine_topk
 from asag_spark.operators.text import fingerprint, lang_id, quality_score, token_count
 
 
@@ -106,13 +106,6 @@ def test_cosine_topk_exact(vectors):
     assert ranked[0]["cosine"] > 0.99
 
 
-def test_cosine_topk_lsh_same_bucket(vectors):
-    out = cosine_topk_lsh(vectors, vectors.filter(F.col("vec_id") == 0), k=2).collect()
-    # bucket of vec 0 = signs(1,0,0,0); vec 3 (-1,...) is excluded by LSH
-    assert all(r["neighbor_id"] != 3 for r in out)
-    assert any(r["neighbor_id"] == 1 for r in out)
-
-
 def test_embedding_near_dups(vectors):
     nd = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in
           embedding_near_dups(vectors, threshold=0.95).collect()}
@@ -123,10 +116,8 @@ def test_embedding_near_dups(vectors):
 def test_embedding_near_dups_zero_norm(spark):
     """Two zero vectors share every LSH band but have no cosine: they
     must drop out of the refine instead of aborting the stage with
-    DIVIDE_BY_ZERO, in embedding_near_dups and so in hard_negatives."""
+    DIVIDE_BY_ZERO."""
     import pandas as pd
-
-    from asag_spark.operators.similarity import hard_negatives
 
     vecs = [[0.0] * 8, [0.0] * 8, [1.0] + [0.0] * 7,
             [0.99, 0.01] + [0.0] * 6, [0.0, 1.0] + [0.0] * 6]
@@ -136,8 +127,6 @@ def test_embedding_near_dups_zero_norm(spark):
     )
     nd = embedding_near_dups(e.filter(F.col("vec_id") < 5), threshold=0.9)
     assert [(r["vec_a"], r["vec_b"]) for r in nd.collect()] == [(3, 4)]
-    hn = hard_negatives(e, e.filter(F.col("vec_id") == 3), k=5).collect()
-    assert [(r["query_id"], r["neighbor_id"]) for r in hn] == [(3, 5)]
 
 
 def test_media_pipeline(spark):
@@ -287,114 +276,6 @@ def test_simhash_null_and_empty_docs_both_bases(spark):
         assert out[3] not in (0, out[1]), base
 
 
-def test_decode_pixels_plumbing(spark):
-    """decode_pixels: identical schema/batch shape whichever branch
-    runs. Without PIL (this sandbox) every row is the deterministic
-    md5-keystream fake with is_stub=True; with PIL, real PNG bytes
-    decode with is_stub=False — the assertion adapts to whichever
-    environment executes it, so the test is honest in both."""
-    from asag_spark.operators.media import _PIL_Image, decode_pixels
-
-    rows = [("d1", "img://a.jpg", None), ("d2", "img://b.jpg", None)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, media_ref string, content binary"
-    )
-    out = {r["media_ref"]: r for r in
-           decode_pixels(df, bytes_col="content", target=8).collect()}
-    assert set(out) == {"img://a.jpg", "img://b.jpg"}
-    for r in out.values():
-        assert r["px_width"] == 8 and r["px_height"] == 8
-        assert len(r["pixels"]) == 64
-        assert all(0 <= v <= 255 for v in r["pixels"])
-        assert r["is_stub"] is True  # bytes are null → fake either way
-    # the fake is deterministic (stable across runs/parallelism)
-    again = {r["media_ref"]: r["pixels"] for r in
-             decode_pixels(df.repartition(3), bytes_col="content",
-                           target=8).collect()}
-    assert again == {k: v["pixels"] for k, v in out.items()}
-
-    if _PIL_Image is not None:  # real branch where Pillow exists
-        import io as _io
-
-        buf = _io.BytesIO()
-        _PIL_Image.new("RGB", (32, 32), (200, 10, 10)).save(buf, "PNG")
-        df2 = spark.createDataFrame(
-            [("d3", "img://c.png", bytearray(buf.getvalue()))],
-            "doc_id string, media_ref string, content binary",
-        )
-        r = decode_pixels(df2, bytes_col="content", target=8).collect()[0]
-        assert r["is_stub"] is False and len(r["pixels"]) == 64
-
-
-def test_decode_pixels_real_ppm_bmp(spark):
-    """REAL pixel decode with no imaging library (VERDICT r04 #5):
-    the pure-numpy decoder parses binary PPM and bottom-up 24-bit BMP
-    byte-exactly — verified against a hand-built 2x2 image whose luma
-    is computed here from first principles — and decode_pixels marks
-    those rows is_stub=False in ANY environment (the numpy branch runs
-    before PIL so PPM/BMP decode identically everywhere). A 4x4→2x2
-    case pins the nearest-neighbor center-sample resize."""
-    import numpy as np
-
-    from asag_spark.operators.media import (
-        decode_pixels, decode_rgb, parse_image_header,
-    )
-
-    # 2x2 RGB: distinct corners so row order / channel order errors show
-    px = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [10, 20, 30]]],
-        dtype=np.uint8,
-    )
-    ppm = b"P6\n# c\n2 2\n255\n" + px.tobytes()
-    # BMP: bottom-up BGR rows padded to 4 bytes (2*3=6 → pad 2)
-    rows_bu = px[::-1, :, ::-1]
-    body = b"".join(rows_bu[i].tobytes() + b"\x00\x00" for i in range(2))
-    bmp = (
-        b"BM" + (54 + len(body)).to_bytes(4, "little") + b"\x00" * 4
-        + (54).to_bytes(4, "little") + (40).to_bytes(4, "little")
-        + (2).to_bytes(4, "little", signed=True)
-        + (2).to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(body).to_bytes(4, "little")
-        + b"\x00" * 16
-    ) + body
-    assert parse_image_header(ppm) == (2, 2, "ppm")
-    assert parse_image_header(bmp) == (2, 2, "bmp")
-    assert (decode_rgb(ppm) == px).all()
-    assert (decode_rgb(bmp) == px).all()
-
-    expected = [
-        (299 * int(r) + 587 * int(g) + 114 * int(b)) // 1000
-        for r, g, b in px.reshape(-1, 3)
-    ]
-    df = spark.createDataFrame(
-        [("d1", "img://p.ppm", bytearray(ppm)),
-         ("d2", "img://b.bmp", bytearray(bmp))],
-        "doc_id string, media_ref string, content binary",
-    )
-    out = {r["media_ref"]: r for r in
-           decode_pixels(df, bytes_col="content", target=2).collect()}
-    for ref in ("img://p.ppm", "img://b.bmp"):
-        assert out[ref]["is_stub"] is False, ref
-        assert list(out[ref]["pixels"]) == expected, ref
-
-    # resize: 4x4 with quadrant-constant luma → 2x2 picks one sample
-    # per quadrant (centers 0.5*4/2=1 → index 1, and 3)
-    q = np.zeros((4, 4, 3), dtype=np.uint8)
-    q[:2, :2] = 10
-    q[:2, 2:] = 60
-    q[2:, :2] = 120
-    q[2:, 2:] = 200
-    ppm4 = b"P6\n4 4\n255\n" + q.tobytes()
-    df4 = spark.createDataFrame(
-        [("d3", "img://q.ppm", bytearray(ppm4))],
-        "doc_id string, media_ref string, content binary",
-    )
-    r4 = decode_pixels(df4, bytes_col="content", target=2).collect()[0]
-    assert r4["is_stub"] is False
-    assert list(r4["pixels"]) == [10, 60, 120, 200]
-
-
 @pytest.fixture(scope="module")
 def planted_vectors(spark):
     """50 random unit vectors + 20 noisy clones (cosine >= ~0.99)."""
@@ -535,8 +416,9 @@ def test_jaccard_df_cap(corpus):
 
 
 def test_parse_image_header_property():
-    """Property: for any dims, a synthesized PNG/GIF/JPEG header parses
-    back to exactly those dims (pure function, no Spark needed)."""
+    """Property: for any dims, a synthesized PNG/GIF/JPEG/PPM/BMP header
+    parses back to exactly those dims (pure function, no Spark
+    needed)."""
     import struct
 
     from hypothesis import given, settings
@@ -546,7 +428,7 @@ def test_parse_image_header_property():
 
     @settings(max_examples=200, deadline=None)
     @given(w=st.integers(1, 2**31 - 1), h=st.integers(1, 2**31 - 1),
-           fmt=st.sampled_from(["png", "gif", "jpeg"]))
+           fmt=st.sampled_from(["png", "gif", "jpeg", "ppm", "bmp"]))
     def check(w, h, fmt):
         if fmt == "png":
             b = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
@@ -555,6 +437,12 @@ def test_parse_image_header_property():
             if w > 0xFFFF or h > 0xFFFF:
                 return  # GIF dims are 16-bit by format definition
             b = b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 4
+        elif fmt == "ppm":
+            b = b"P6\n# c\n%d %d\n255\n" % (w, h) + b"\x00" * 3
+        elif fmt == "bmp":
+            # a top-down DIB stores a negative height
+            b = (b"BM" + b"\x00" * 16 + struct.pack("<ii", w, -h)
+                 + b"\x00" * 4)
         else:
             if w > 0xFFFF or h > 0xFFFF:
                 return  # JPEG SOF dims are 16-bit
@@ -655,36 +543,6 @@ def test_ivf_index_roundtrip_and_pruning(spark, tmp_path):
     assert 0 < n_pruned < n_full, (n_pruned, n_full)
 
 
-def test_ivf_index_append_parity(spark, tmp_path):
-    """Index maintenance (round 3): appending a batch against the
-    FROZEN stored quantizer must yield probes row-identical to a
-    single-shot index of the union built with the same centroids —
-    the append is cheap (map-only assignment + partitioned append,
-    no rewrite) precisely because the quantizer does not move."""
-    from asag_spark.operators.similarity import (
-        ivf_centroids, ivf_index_append, ivf_index_write, ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    old = e.filter(F.col("vec_id") % 5 != 0)
-    new = e.filter(F.col("vec_id") % 5 == 0)
-    q = e.filter(F.col("vec_id") < 10)
-
-    ivf_index_write(old, str(tmp_path))
-    ivf_index_append(new, str(tmp_path))
-
-    appended = sorted(map(tuple, ivf_topk_indexed(spark, str(tmp_path), q, k=5).collect()))
-    # reference: inline probe over the union with the OLD corpus's
-    # centroids (the frozen quantizer the append contract promises)
-    cents = ivf_centroids(old)
-    union_inline = sorted(map(tuple, ivf_topk(e, q, k=5, centroids=cents).collect()))
-    assert appended == union_inline
-    # the appended rows really landed in cell partitions
-    idx = spark.read.parquet(f"{tmp_path}/index")
-    assert idx.count() == e.count()
-
-
 def test_lsh_incremental_parity(spark):
     """Incremental LSH (round 3): candidates(old ∪ new) must equal
     candidates(old) ∪ incremental(buckets(old), new) — the persisted
@@ -780,8 +638,6 @@ def ann_layouts(spark, sf_dir, tmp_path_factory):
 # its value columns after query_id, neighbor_id, rank)
 _EMPTY_QUERY_CASES = {
     "cosine_topk": (lambda s, e, z, p, q: s.cosine_topk(e, q), "cosine"),
-    "cosine_topk_lsh": (
-        lambda s, e, z, p, q: s.cosine_topk_lsh(e, q), "cosine"),
     "ivf_topk": (
         lambda s, e, z, p, q: s.ivf_topk(e, q, centroids=z["centroids"]),
         "cosine"),
@@ -800,10 +656,6 @@ _EMPTY_QUERY_CASES = {
     "pq_topk_encoded": (
         lambda s, e, z, p, q: s.pq_topk_encoded(e.sparkSession, p["pq"], q),
         "adist"),
-    "pq_topk_refined": (
-        lambda s, e, z, p, q: s.pq_topk_refined(e, q,
-                                                codebook=z["codebook"]),
-        "l2"),
     "ivfpq_topk": (
         lambda s, e, z, p, q: s.ivfpq_topk(e.sparkSession, p["ivfpq"], q),
         "adist"),
@@ -1515,43 +1367,6 @@ def test_chunk_windows_boundaries_and_plan(spark):
         chunk_windows(docs, window=16, stride=24)
 
 
-def test_ivf_train_step_blob_means(spark):
-    """One Lloyd step on two well-separated blobs whose seed centroids
-    land one-per-blob: every vector assigns to its blob's centroid and
-    the emitted means are exactly the blob means (engine avg == numpy
-    mean after the shared round-6)."""
-    import numpy as np
-
-    from asag_spark.operators.similarity import ivf_centroids, ivf_train_step
-
-    rng = np.random.default_rng(7)
-    a = rng.normal((10.0, 0.0, 0.0), 0.1, (40, 3))
-    b = rng.normal((0.0, 10.0, 0.0), 0.1, (40, 3))
-    vecs = np.r_[a, b]
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(80)],
-        "vec_id long, embedding array<float>",
-    )
-    cents = ivf_centroids(emb, n_cells=2)
-    c_ids, C = cents
-    # with 2 centroids from md5-order sampling, assert they straddle
-    # the blobs (cosine separates them regardless of which ids chosen)
-    blob_of = lambda cid: 0 if cid < 40 else 1
-    assert {blob_of(int(c)) for c in c_ids} == {0, 1}, c_ids
-    out = ivf_train_step(emb, n_cells=2, centroids=cents).collect()
-    got = {}
-    for r in out:
-        got.setdefault(int(r["cell"]), {})[r["dim"]] = (r["m"], r["n_members"])
-    # float32 storage: mirror the engine's cast path before averaging
-    vecs32 = vecs.astype(np.float32).astype(np.float64)
-    for cid, dims in got.items():
-        members = vecs32[:40] if blob_of(cid) == 0 else vecs32[40:]
-        for d in range(3):
-            m, n = dims[d]
-            assert n == 40
-            assert abs(m - round(float(members[:, d].mean()), 6)) < 1e-9, (cid, d)
-
-
 def test_keep_best_per_cluster_semantics(spark):
     """Exactly one keeper per cluster; keeper = max score, id
     tie-break; singletons keep themselves."""
@@ -1740,34 +1555,6 @@ def test_pq_encoded_matches_inline(spark, sf_dir, tmp_path):
     assert codes.select(F.max(F.size("codes"))).collect()[0][0] == 8
 
 
-def test_pq_refined_recall_floor(spark, sf_dir):
-    import numpy as np
-
-    from asag_spark.operators.similarity import pq_topk, pq_topk_refined
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = e.select("vec_id", "embedding").collect()
-    ids = np.array([r[0] for r in rows])
-    X = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    brute = set()
-    for qi in np.where(ids < 20)[0]:
-        d = ((X - X[qi]) ** 2).sum(1)
-        d[qi] = np.inf
-        for n in np.lexsort((ids, d))[:5]:
-            brute.add((ids[qi], ids[n]))
-    q = e.filter(F.col("vec_id") < 20)
-    ref = {(x.query_id, x.neighbor_id)
-           for x in pq_topk_refined(e, q, k=5, r=200).collect()}
-    # isotropic Gaussian is PQ's worst case; the r=200 refine measured
-    # 0.91 here — gate well below to stay robust to fixture changes
-    assert len(brute & ref) / len(brute) >= 0.8
-    # refine must never DROP below raw ADC ordering quality: the
-    # refined top-5 is exactly the exact-L2 rerank of the ADC top-200
-    raw = {(x.query_id, x.neighbor_id)
-           for x in pq_topk(e, q, k=5).collect()}
-    assert len(brute & ref) >= len(brute & raw)
-
-
 def test_pq_codes_partition_invariant(spark, sf_dir):
     from asag_spark.operators.similarity import pq_topk
 
@@ -1824,47 +1611,6 @@ def test_ngram_scrub_overlap_cover_merges(spark):
     assert r[1]["text_clean"] == "z y" and r[1]["n_dropped"] == 5
 
 
-def test_pq_train_step_improves_quantization(spark, sf_dir):
-    """Lloyd monotonicity: one refinement step strictly reduces total
-    quantization error vs the seeded sample codebook (k-means'
-    objective never increases; on this corpus it strictly drops)."""
-    import numpy as np
-
-    from asag_spark.operators.similarity import (
-        PQ_K, PQ_M, pq_codebook, pq_train_step,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, CB0 = pq_codebook(e)
-    rows = pq_train_step(e).collect()
-    CB1 = CB0.copy()
-    for r in rows:
-        CB1[r["s"], r["cidx"], r["dim"]] = r["m"]
-    X = np.stack([
-        np.asarray(r["embedding"], dtype=np.float64)
-        for r in e.select("embedding").collect()
-    ])
-    dsub = X.shape[1] // PQ_M
-
-    def err(CB):
-        tot = 0.0
-        for s in range(PQ_M):
-            sub = X[:, s * dsub:(s + 1) * dsub]
-            d = ((sub[:, None, :] - CB[s][None, :, :]) ** 2).sum(2)
-            tot += d.min(1).sum()
-        return tot
-
-    e0, e1 = err(CB0), err(CB1)
-    assert e1 < e0 * 0.95
-    # every (s, cidx) pair accounted once per dim; counts consistent
-    n = X.shape[0]
-    per_s = {}
-    for r in rows:
-        if r["dim"] == 0:
-            per_s[r["s"]] = per_s.get(r["s"], 0) + r["n_members"]
-    assert all(v == n for v in per_s.values())
-
-
 def test_rendezvous_minimal_movement(spark, sf_dir):
     """HRW property: going N -> N+1 shards moves ~1/(N+1) of docs and
     every mover lands IN the new shard; mod-N (train_shuffle) remaps
@@ -1888,32 +1634,6 @@ def test_rendezvous_minimal_movement(spark, sf_dir):
     ta = {r["doc_id"]: r["shard"] for r in train_shuffle(docs, 8).collect()}
     tb = {r["doc_id"]: r["shard"] for r in train_shuffle(docs, 9).collect()}
     assert sum(1 for d in ta if ta[d] != tb[d]) > n * 0.6
-
-
-def test_hard_negatives_excludes_dups(spark, sf_dir):
-    from asag_spark.operators.dedup import embedding_near_dups
-    from asag_spark.operators.similarity import cosine_topk, hard_negatives
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 5)
-    hn = hard_negatives(e, q, k=5).collect()
-    dups = {
-        frozenset((r["vec_a"], r["vec_b"]))
-        for r in embedding_near_dups(e, threshold=0.3).collect()
-    }
-    # no mined negative is a near-dup of its query, ranks are 1..5
-    by_q = {}
-    for r in hn:
-        assert frozenset((r["query_id"], r["neighbor_id"])) not in dups
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in by_q.values())
-    # negatives are drawn from the top of the similarity range: every
-    # mined negative's cosine >= the brute top-20 floor for its query
-    floor = {
-        r["query_id"]: r["cosine"]
-        for r in cosine_topk(e, q, k=20).collect() if r["rank"] == 20
-    }
-    assert all(r["cosine"] >= floor[r["query_id"]] for r in hn)
 
 
 def test_ivfpq_parity_and_pruning(spark, sf_dir, tmp_path):
@@ -2042,104 +1762,6 @@ def test_dsir_target_like_scores_higher(spark):
     assert out[100]["n_grams"] == 7
     for i in range(101, 106):
         assert out[i]["logw"] < out[100]["logw"]
-
-
-def test_semdedup_identical_vectors_keep_smallest(spark):
-    """Two identical vectors always share an IVF cell (identical
-    rounded cosines to every centroid, same argmax tie-break), so
-    semdedup keeps the smaller id and drops the larger with
-    max_sim_smaller = 1.0; distinct-direction vectors all survive."""
-    import math
-
-    from asag_spark.operators.similarity import semdedup
-
-    def unit(theta):
-        return [math.cos(theta), math.sin(theta), 0.0, 0.0]
-
-    rows = [(i, unit(0.4 * i)) for i in range(6)]
-    rows.append((10, unit(0.0)))  # exact duplicate direction of vec 0
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    out = {r["vec_id"]: r for r in semdedup(emb, threshold=0.999,
-                                            n_cells=2).collect()}
-    assert len(out) == 7
-    assert out[10]["keep"] == 0 and out[10]["max_sim_smaller"] == 1.0
-    assert out[0]["keep"] == 1
-    assert out[0]["ivf_cell"] == out[10]["ivf_cell"]
-    for i in range(1, 6):
-        assert out[i]["keep"] == 1 and out[i]["max_sim_smaller"] is None
-
-
-def test_semdedup_keep_best_representative_flips_with_score(spark):
-    """semdedup_keep_best: the kept member of a duplicate group is
-    argmax(quality) — flipping the scores flips the representative —
-    with ties to the smaller id; singletons always keep=1; the
-    cluster label stays the component MIN id either way. A transitive
-    chain (A~B, B~C, A~C below threshold) is ONE group — the closure
-    semantics plain semdedup's chain rule leaves implicit."""
-    import math
-
-    from asag_spark.operators.similarity import semdedup_keep_best
-
-    def unit(theta):
-        return [math.cos(theta), math.sin(theta), 0.0, 0.0]
-
-    # 0 and 10 identical; 1, 2, 3 a near-chain (1~2 and 2~3 above
-    # threshold, 1~3 below); 5 isolated
-    th = 0.12
-    rows = [
-        (0, unit(0.0)), (10, unit(0.0)),
-        (1, unit(1.0)), (2, unit(1.0 + th)), (3, unit(1.0 + 2 * th)),
-        (5, unit(2.6)),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cos_1step = math.cos(th)      # ~0.9928
-    cos_2step = math.cos(2 * th)  # ~0.9713
-    threshold = (cos_1step + cos_2step) / 2
-    # explicit centroids so the cell split is by construction: 0..3
-    # and 10 land on centroid 0, the isolated 5 on centroid 1 — the
-    # test pins group semantics, not the centroid-sampling order
-    import numpy as np
-
-    cents = (np.array([0, 1], dtype=np.int64),
-             np.array([unit(0.5), unit(2.6)], dtype=np.float64))
-    scores = spark.createDataFrame(
-        [(0, 1.0), (10, 9.0), (1, 5.0), (2, 1.0), (3, 2.0), (5, 0.5)],
-        "vec_id long, quality double",
-    )
-    out = {r["vec_id"]: r for r in semdedup_keep_best(
-        emb, scores, threshold=threshold, n_cells=2,
-        centroids=cents).collect()}
-    assert len(out) == 6
-    # identical pair: higher-score 10 kept, label = min id 0
-    assert out[10]["keep"] == 1 and out[0]["keep"] == 0
-    assert out[0]["cluster_id"] == 0 and out[10]["cluster_id"] == 0
-    # transitive chain is one component labeled 1; argmax quality = 1
-    assert {out[i]["cluster_id"] for i in (1, 2, 3)} == {1}
-    assert [out[i]["keep"] for i in (1, 2, 3)] == [1, 0, 0]
-    # singleton keeps itself
-    assert out[5]["keep"] == 1 and out[5]["cluster_id"] == 5
-    # flip the scores: the representative follows the score
-    scores2 = spark.createDataFrame(
-        [(0, 9.0), (10, 1.0), (1, 1.0), (2, 5.0), (3, 2.0), (5, 0.5)],
-        "vec_id long, quality double",
-    )
-    out2 = {r["vec_id"]: r for r in semdedup_keep_best(
-        emb, scores2, threshold=threshold, n_cells=2,
-        centroids=cents).collect()}
-    assert out2[0]["keep"] == 1 and out2[10]["keep"] == 0
-    assert [out2[i]["keep"] for i in (1, 2, 3)] == [0, 1, 0]
-    # equal scores tie to the smaller id
-    scores3 = spark.createDataFrame(
-        [(0, 4.0), (10, 4.0), (1, 1.0), (2, 1.0), (3, 1.0), (5, 0.5)],
-        "vec_id long, quality double",
-    )
-    out3 = {r["vec_id"]: r for r in semdedup_keep_best(
-        emb, scores3, threshold=threshold, n_cells=2,
-        centroids=cents).collect()}
-    assert out3[0]["keep"] == 1 and out3[10]["keep"] == 0
-    assert [out3[i]["keep"] for i in (1, 2, 3)] == [1, 0, 0]
 
 
 def test_keep_best_partial_scores_left_join(spark):
